@@ -1214,56 +1214,30 @@ def corpus_end_to_end_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVIVING SUBSET -> connected components -> keep-best
     representative -> leakage-safe split keyed on the cluster id.
     Output: one row per retained document
-    (component_id, kept_doc_id, n_chars, n_members, split). The oracle
-    is composed from the SAME SQL fragments the per-stage oracles use,
-    so a drift in any stage's semantics — or in how stages hand off —
-    reds this row even if every stage passes alone."""
-    from nspc_etl_basic_spark.operators.dedup import (
-        keep_best_representative,
-        neardup_components,
-    )
-    from nspc_etl_basic_spark.operators.sampling import assign_split
-    from nspc_etl_basic_spark.operators.text import quality_filter
+    (component_id, kept_doc_id, n_chars, n_members, split).
 
-    # ONE corpus scan (round 12, guide §2.4): the gate features, the
-    # survivor text, and the keep-best quality column all come off the
-    # same quality_filter pass via carry= — the previous shape computed
-    # the gates, then re-read the whole corpus to semi-join the
-    # surviving ids back, and (being lazy) re-ran that double scan for
-    # each of the three downstream consumers. The survivor slice is
-    # materialized once (localCheckpoint — survivors are the pipeline's
-    # working set; in production this is the curated-subset table every
-    # multi-consumer curation stage persists, guide §5) so the
-    # signature build, the component node set, and keep-best read it
-    # without recomputing the gates. Row set, columns, and every
-    # downstream value are unchanged — n_chars is the documents
-    # column, threaded through, not the gate feature.
-    docs_all = _t(spark, sf_dir, "documents").select(
-        "doc_id", "text", F.col("n_chars").alias("__nc")
-    )
-    good = (
-        quality_filter(
-            docs_all,
-            min_chars=100, max_chars=20000, min_tokens=20,
-            max_punct_ratio=0.1, min_stopword_ratio=0.02, lang="en",
-            carry=("text", "__nc"),
-        )
-        .select("doc_id", "text", F.col("__nc").alias("n_chars"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
-    sigs = minhash_signatures(good).cache()
-    cand = lsh_candidate_pairs(sigs).cache()
-    cand.count()
-    sigs.unpersist()
-    comp = neardup_components(good.select("doc_id"), cand)
-    cand.unpersist()
-    keep = keep_best_representative(
-        comp, good.select("doc_id", "n_chars"), quality_col="n_chars"
-    )
-    return assign_split(
-        keep, "component_id", {"train": 0.8, "val": 0.1, "test": 0.1}
-    )
+    The query IS the production runner (plans/curation.run_curation)
+    at a fixed recipe, so the oracle checks the runner directly: the
+    quality stage is one corpus scan and its survivors are materialized
+    once. The oracle is composed from the SAME SQL fragments the
+    per-stage oracles use, so a drift in any stage's semantics — or in
+    how stages hand off — reds this row even if every stage passes
+    alone."""
+    from nspc_etl_basic_spark.plans.curation import run_curation
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
+    cfg = {
+        "curation": {
+            "quality": {
+                "min_chars": 100, "max_chars": 20000, "min_tokens": 20,
+                "max_punct_ratio": 0.1, "min_stopword_ratio": 0.02,
+                "lang": "en",
+            },
+            "dedup": {"quality_col": "n_chars"},
+            "split": {"weights": {"train": 0.8, "val": 0.1, "test": 0.1}},
+        }
+    }
+    return run_curation(spark, docs, cfg)["split"]
 
 
 def corpus_leakage_safe_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1540,13 +1514,12 @@ def graph_triangles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays with plain id-orientation — same count)."""
     from nspc_etl_basic_spark.operators.graph import triangle_stats
 
-    sigs = minhash_signatures(_docs_wide(spark, sf_dir)).cache()
-    cand = lsh_candidate_pairs(sigs).cache()
-    cand.count()
-    sigs.unpersist()
-    out = triangle_stats(cand)
-    cand.unpersist()
-    return out
+    # materialized once: the census reads the candidate graph several
+    # times, and the checkpoint lives as long as the returned plan
+    cand = lsh_candidate_pairs(
+        minhash_signatures(_docs_wide(spark, sf_dir))
+    ).localCheckpoint(eager=True)
+    return triangle_stats(cand)
 
 
 def events_join_cardinality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4014,10 +3987,9 @@ def text_containment_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs_wide(spark, sf_dir)
-    sigs = minhash_signatures(docs).cache()
-    cand = lsh_candidate_pairs(sigs).cache()
-    cand.count()
-    sigs.unpersist()
+    cand = lsh_candidate_pairs(minhash_signatures(docs)).localCheckpoint(
+        eager=True
+    )
     return containment_on_candidates(docs, cand)
 
 

@@ -3,9 +3,6 @@ from nspc_etl_basic_spark.functions.casting import (
     DATETIME_PATTERNS_SPARK,
     null_normalized,
     parse_datetime_col,
-    is_datetime_col,
-    is_integer_col,
-    is_decimal_col,
     parse_datetime_py,
 )
 
@@ -14,8 +11,5 @@ __all__ = [
     "DATETIME_PATTERNS_SPARK",
     "null_normalized",
     "parse_datetime_col",
-    "is_datetime_col",
-    "is_integer_col",
-    "is_decimal_col",
     "parse_datetime_py",
 ]

@@ -69,24 +69,6 @@ def parse_datetime_col(col: Column) -> Column:
     )
 
 
-def is_datetime_col(col: Column) -> Column:
-    """B4: boolean form of B3."""
-    return parse_datetime_col(col).isNotNull()
-
-
-def is_integer_col(col: Column) -> Column:
-    """B5: Python ``int()`` strictness — optional sign, digits only — plus a
-    long-range check (the reference would overflow INT silently; we require
-    the value to fit int64)."""
-    t = F.trim(col)
-    return t.rlike(r"^[+-]?[0-9]+$") & t.try_cast("long").isNotNull()
-
-
-def is_decimal_col(col: Column) -> Column:
-    """B6: ``Decimal()`` acceptance, bounded to DECIMAL(18,4) range."""
-    return F.trim(col).try_cast("decimal(18,4)").isNotNull()
-
-
 def parse_datetime_py(value: str | None) -> datetime | None:
     """Exact reference ``_parse_datetime`` semantics (loader.py:1142-1167)
     for driver-side sample analysis."""

@@ -62,24 +62,6 @@ def shingle_array(text, k: int = DEFAULT_SHINGLE_K):
     )
 
 
-def char_shingles(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_SHINGLE_K,
-    distinct: bool = True,
-) -> DataFrame:
-    """k-char shingles per document as rows: (id, shingle) — the exploded
-    view, for callers that need shingles as a join key. The dedup pipeline
-    itself stays array-valued (see ``minhash_signatures`` /
-    ``jaccard_on_candidates``) and never pays this explode."""
-    sh = df.select(
-        F.col(id_col),
-        F.explode(shingle_array(F.col(text_col), k)).alias("shingle"),
-    )
-    return sh.distinct() if distinct else sh
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",

@@ -247,22 +247,3 @@ def infer_schema(
         sql_types=sql_types,
         struct=T.StructType(fields),
     )
-
-
-def generate_ddl(table_name: str, sql_types: dict[str, str], config: dict | None = None) -> str:
-    """H1: CREATE TABLE text for JDBC parity (loader.py:868-893).
-
-    Bracket-quoted (SQL Server dialect) unless ``database.type`` is
-    ``sqlite``/``parquet``, matching the reference's branch."""
-    config = config or {}
-    not_null = set(config.get("ddl", {}).get("not_null_columns", []))
-    db_type = config.get("database", {}).get("type", "sqlserver")
-    brackets = db_type == "sqlserver"
-    lines = []
-    for col, sql in sql_types.items():
-        clause = "NOT NULL" if col in not_null else "NULL"
-        ident = f"[{col}]" if brackets else col
-        lines.append(f"    {ident} {sql} {clause}")
-    tbl = f"[{table_name}]" if brackets else table_name
-    body = ",\n".join(lines)
-    return f"CREATE TABLE {tbl} (\n{body}\n);"

@@ -32,15 +32,17 @@ decontamination sweep is a contaminated corpus.
 
 ``run_curation`` returns every stage's DataFrame in a dict, so callers
 materialize only what they need; nothing is written (pair with the
-warehouse / dataloader sinks downstream). The composed semantics are
-pinned end-to-end by the ``corpus_end_to_end`` driver query — the
-equality test in tests/test_curation_runner.py holds this runner to
-that oracled output.
+warehouse / dataloader sinks downstream). This runner is the only
+implementation of the chain: the ``corpus_end_to_end`` query
+calls it at a fixed quality -> dedup -> split recipe, so that query's
+DuckDB oracle checks the runner directly.
 
-Scale: inherits each operator's documented shape; the runner adds one
-repartition after the quality gate (the filter may leave skewed
-partitions ahead of the signature projection) and the same bounded
-cache/unpersist handoff the end-to-end query uses.
+Scale: inherits each operator's documented shape. The quality stage is
+ONE corpus scan (every docs column rides through the gate via
+``carry=``; the survivors are never re-joined against the corpus), and
+its survivors are repartitioned (the filter may leave skewed partitions
+ahead of the signature projection) and materialized once, so the later
+stages read them without re-running the gates.
 """
 
 from __future__ import annotations
@@ -76,11 +78,25 @@ def run_curation(
     if q_cfg is not None:
         from nspc_etl_basic_spark.operators.text import quality_filter
 
-        good_ids = quality_filter(
-            docs, text_col=text_col, id_col=id_col, **q_cfg
-        ).select(id_col)
-        kept = docs.join(good_ids, id_col, "left_semi").repartition(
-            spark.sparkContext.defaultParallelism
+        # one scan: every docs column rides through the gate under a
+        # temporary name (a docs column such as n_chars must not collide
+        # with a gate-feature name) and is renamed back, id first
+        tmp = {
+            c: f"__carry{i}"
+            for i, c in enumerate(docs.columns)
+            if c != id_col
+        }
+        carried = docs.select(
+            id_col, *[F.col(c).alias(t) for c, t in tmp.items()]
+        )
+        good = quality_filter(
+            carried, text_col=tmp[text_col], id_col=id_col,
+            carry=tuple(tmp.values()), **q_cfg,
+        )
+        kept = (
+            good.select(id_col, *[F.col(t).alias(c) for c, t in tmp.items()])
+            .repartition(spark.sparkContext.defaultParallelism)
+            .localCheckpoint(eager=True)
         )
         out["quality"] = kept
 

@@ -331,22 +331,3 @@ def zorder_write(
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def hilbert_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    n_files: int = 8,
-) -> None:
-    """``zorder_write`` on the Hilbert curve: one range shuffle on the
-    index, in-partition sort, index dropped before write."""
-    hdf, hc = hilbert_value(df, cols, bits)
-    (
-        hdf.repartitionByRange(n_files, F.col(hc))
-        .sortWithinPartitions(hc)
-        .drop(hc)
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -88,8 +88,9 @@ SLOW_TESTS = {
     "test_stream_span_dedup_cleans_later_batches",
     "test_stream_anomaly_accumulates_and_matches_batch",
     "test_stream_quality_records_metrics",
-    # package-pipeline composition (parity[corpus_end_to_end] and the
-    # runner-vs-oracle test keep the composed path default)
+    # package-pipeline composition (parity[corpus_end_to_end], which
+    # runs the curation runner, and the runner's quality-stage test keep
+    # the composed path default)
     "test_corpus_pipeline_composes",
     "test_runner_full_recipe_dedup_then_pack",
     "test_runner_forwards_column_names",
@@ -110,9 +111,27 @@ SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    names = set()
     for item in items:
-        if item.name.split("[")[0] in SLOW_TESTS:
+        name = item.name.split("[")[0]
+        names.add(name)
+        if name in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # a renamed or deleted test leaves its entry marking nothing; judged
+    # only when every test module was collected (a file or node-id run
+    # legitimately misses most names)
+    test_dir = os.path.dirname(os.path.abspath(__file__))
+    modules = {
+        os.path.join(test_dir, f)
+        for f in os.listdir(test_dir)
+        if f.startswith("test_") and f.endswith(".py")
+    }
+    if modules <= {str(item.path) for item in items}:
+        stale = sorted(SLOW_TESTS - names)
+        if stale:
+            raise pytest.UsageError(
+                f"SLOW_TESTS entries match no collected test: {stale}"
+            )
 
 
 @pytest.fixture(scope="session")

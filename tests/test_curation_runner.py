@@ -1,5 +1,8 @@
-"""Config-driven curation runner (plans/curation.py): the declared
-recipe must reproduce the independently-oracled composed pipeline."""
+"""Config-driven curation runner (plans/curation.py). The composed
+quality -> dedup -> split recipe is oracled as the corpus_end_to_end
+query, which calls this runner; these tests pin what that query does
+not reach: stage gating, custom column names, packing, and the
+side-input stages."""
 
 from __future__ import annotations
 
@@ -14,29 +17,42 @@ def _docs(spark):
     return spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
 
 
-def test_runner_matches_oracled_end_to_end_query(spark):
-    """quality -> dedup -> leakage-safe split configured to the same
-    parameters as corpus_end_to_end must produce the SAME rows — the
-    runner inherits that query's driver-verified semantics."""
-    import __spark_entry__ as entrymod
+def test_runner_quality_stage_matches_semi_join_reference(spark):
+    """The single-scan quality stage returns exactly the rows and the
+    column order of re-joining the gate survivors against ``docs`` —
+    with custom id/text names and a docs column (``n_chars``) that
+    shares its name with a gate feature but not its values."""
+    from nspc_etl_basic_spark.operators.text import quality_filter
 
-    cfg = {
-        "curation": {
-            "quality": {
-                "min_chars": 100, "max_chars": 20000, "min_tokens": 20,
-                "max_punct_ratio": 0.1, "min_stopword_ratio": 0.02,
-                "lang": "en",
-            },
-            "dedup": {"quality_col": "n_chars"},
-            "split": {"weights": {"train": 0.8, "val": 0.1, "test": 0.1}},
-        }
-    }
-    got = run_curation(spark, _docs(spark), cfg)["split"]
-    want = entrymod.queries()["corpus_end_to_end"](spark, SF_DIR)
-    assert sorted(got.columns) == sorted(want.columns)
-    g = {tuple(r) for r in got.select(*sorted(got.columns)).collect()}
-    w = {tuple(r) for r in want.select(*sorted(want.columns)).collect()}
-    assert g == w
+    good = "the cat and the dog sat in the house of the king to rest"
+    texts = [
+        good,
+        good + " again",
+        "the end",  # too short
+        good.replace(" ", ";; "),  # punctuation-heavy
+        "el perro que los gatos de la casa el perro que los",  # not en
+        good + " and more of the same",
+    ]
+    # id in the middle; n_chars is NOT the text length
+    docs = spark.createDataFrame(
+        [(t, 100 + i, i * 7) for i, t in enumerate(texts)],
+        ["body", "id", "n_chars"],
+    )
+    q_cfg = {"min_chars": 20, "min_tokens": 5, "max_punct_ratio": 0.1,
+             "min_stopword_ratio": 0.1}
+    got = run_curation(
+        spark, docs, {"curation": {"quality": q_cfg}},
+        id_col="id", text_col="body",
+    )["quality"]
+    want = docs.join(
+        quality_filter(docs, text_col="body", id_col="id", **q_cfg)
+        .select("id"),
+        "id", "left_semi",
+    )
+    assert got.columns == want.columns == ["id", "body", "n_chars"]
+    g = sorted(tuple(r) for r in got.collect())
+    assert g == sorted(tuple(r) for r in want.collect())
+    assert {r[0] for r in g} == {100, 101, 105}
 
 
 def test_runner_stage_gating_and_pack(spark):
