@@ -17,16 +17,19 @@ Scale notes:
     map-only plan over the target);
   - insert/update split (D2 semantics — the reference's batch path
     miscounts, acknowledged at loader.py:1294-1297; we compute the true
-    split) reuses the same broadcast via semi/anti counts;
+    split) comes from the snapshot write itself: row counts observed on
+    the target scan, the kept target rows and the merged output are
+    collected as metrics of the write job, so no extra job recounts
+    what the write already scans;
   - last-wins dedup (E1) windows on the per-file ``__seq`` order BEFORE any
     shuffle, because input order is semantic (SURVEY.md §7.2 item 1).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -37,6 +40,30 @@ from nspc_etl_basic_spark.sources.reader import SEQ_COL
 class MergeCounts:
     inserted: int
     updated: int
+
+
+@dataclass
+class MergeObservation:
+    """Row counts a merge's write collects while it runs (Spark's
+    ``Observation``): ``target`` rows scanned, target rows ``kept``
+    after the anti-join, and ``merged`` rows written. A leg the plan
+    never carried reads as 0. Read them only after the write returned:
+    ``Observation.get`` blocks until the observed query has run.
+
+    Every leg sits on the written frame's side of the plan, never on
+    the source alone: an observation completes only through the session
+    that registered it, and a source from another session (a streaming
+    micro-batch) would leave its leg waiting forever."""
+
+    legs: dict[str, Observation] = field(default_factory=dict)
+
+    def on(self, leg: str, df: DataFrame) -> DataFrame:
+        obs = self.legs[leg] = Observation()
+        return df.observe(obs, F.count(F.lit(1)).alias("rows"))
+
+    def rows(self, leg: str) -> int:
+        obs = self.legs.get(leg)
+        return obs.get["rows"] if obs is not None else 0
 
 
 def dedup_last_wins(df: DataFrame, pk_cols: list[str], order_col: str = SEQ_COL) -> DataFrame:
@@ -64,6 +91,7 @@ def merge_upsert(
     source: DataFrame,
     pk_cols: list[str],
     broadcast_source: bool | None = None,
+    observe: MergeObservation | None = None,
 ) -> DataFrame:
     """D1: join-based MERGE — returns the post-merge snapshot.
 
@@ -71,36 +99,37 @@ def merge_upsert(
     ``broadcast_source=None`` auto-broadcasts (file-sized sources vs large
     targets is the reference's only workload shape); pass False for
     symmetric-size merges so Catalyst/AQE picks a shuffled join.
+    ``observe`` puts row counts on the target scan, the kept target rows
+    and the merged output; ``merge_counts`` turns them into the
+    insert/update split once the snapshot has been written.
     """
     src = source.select(*target.columns)
     join_side = F.broadcast(src) if broadcast_source is not False else src
-    kept = target.join(join_side, on=pk_cols, how="left_anti")
-    return kept.unionByName(src)
+    leg = observe.on if observe is not None else (lambda _, df: df)
+    kept = leg("target", target).join(join_side, on=pk_cols, how="left_anti")
+    return leg("merged", leg("kept", kept).unionByName(src))
 
 
-def merge_counts(target: DataFrame, source: DataFrame, pk_cols: list[str]) -> MergeCounts:
-    """D2 semantics: true inserted/updated split via semi/anti joins (the
-    reference's per-row path returns this; its batch MERGE path admits to
-    counting everything as updates — we implement the correct split,
-    SURVEY.md §4.1 'deviation-to-correctness').
+def merge_counts(observe: MergeObservation) -> MergeCounts:
+    """D2 semantics: the true inserted/updated split (the reference's
+    per-row path returns this; its batch MERGE path admits to counting
+    everything as updates — we implement the correct split, SURVEY.md
+    §4.1 'deviation-to-correctness').
 
-    Broadcasts the SOURCE keys (file-sized) and scans only the target's
-    pk columns (column-pruned), so the large target is never shuffled or
-    broadcast: the target snapshot maintains PK uniqueness (merge_upsert
-    anti-join + E1 dedup), so the matched count is a broadcast-semi scan
-    with NO exchange on the target side. The source-key set is built once
-    and cached for its two tiny jobs (total + matched)."""
-    src_keys = source.select(*pk_cols).distinct().cache()
-    try:
-        total = src_keys.count()
-        updated = (
-            target.select(*pk_cols)
-            .join(F.broadcast(src_keys), on=pk_cols, how="left_semi")
-            .count()
-        )
-    finally:
-        src_keys.unpersist()
-    return MergeCounts(inserted=total - updated, updated=updated)
+    The counts come from the write, not from extra jobs: call this after
+    the snapshot built by ``merge_upsert(..., observe=observe)`` has been
+    written (or, for a load with no target, after a frame observed as
+    ``merged`` has). With T target rows, K of them kept by the
+    anti-join and M rows written, the source has S = M - K rows,
+    updated = T - K (target rows whose key the source matched) and
+    inserted = S - updated = M - T. That is the semi-join count and the
+    distinct-source-key count minus it, because the source is key-unique
+    (``dedup_last_wins`` leaves one row per key, the null key included,
+    and a null key never matches so it counts as inserted)."""
+    target, merged = observe.rows("target"), observe.rows("merged")
+    return MergeCounts(
+        inserted=merged - target, updated=target - observe.rows("kept")
+    )
 
 
 def merge_changes(

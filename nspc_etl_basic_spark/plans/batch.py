@@ -22,8 +22,9 @@ metadata tables, never a local checkpoint file:
     loader.py:1604-1619).
   - H11: one batch summary email after the final update.
 
-At scale the driver loop is I/O-light (each iteration launches 2-3 Spark
-jobs that are themselves distributed); for many small files, the
+At scale the driver loop is I/O-light (each iteration is one
+``process_file``: 12 Spark jobs for a clean upsert file at ``local[4]``,
+each itself distributed, see plans/pipeline.py); for many small files, the
 streaming ingest path (streaming/ingest.py, Trigger.AvailableNow) is the
 idiomatic alternative — this module is the semantic-parity batch path.
 """
@@ -70,12 +71,15 @@ class BatchJobManager:
         self.directory_path = os.path.abspath(directory_path)
         self.config = config
 
-    def get_or_create_batch_job(self) -> tuple[str, bool]:
+    def get_or_create_batch_job(self) -> tuple[str, bool, int, int]:
+        """(BatchJobID, is_resumed, FilesProcessed, FilesFailed): a
+        resumed batch carries the counts of the row that resumed it, a
+        new one starts at 0/0."""
         bcfg = self.config.get("batch_processing", {})
         if not bcfg.get("enable_checkpointing", True):
-            return str(uuid.uuid4()), False
+            return str(uuid.uuid4()), False, 0, 0
         if not bcfg.get("resume_incomplete_batches", True):
-            return str(uuid.uuid4()), False
+            return str(uuid.uuid4()), False, 0, 0
 
         max_age_h = float(bcfg.get("max_resume_age_hours", 24))
         cutoff = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None) - _dt.timedelta(hours=max_age_h)
@@ -95,13 +99,12 @@ class BatchJobManager:
         )
         if candidates:
             row = candidates[0]
-            remaining = (row.TotalFiles or 0) - (row.FilesProcessed or 0) - (
-                row.FilesFailed or 0
-            )
+            processed, failed = row.FilesProcessed or 0, row.FilesFailed or 0
+            remaining = (row.TotalFiles or 0) - processed - failed
             if remaining > 0:
                 logger.info("resuming batch %s (%d files remaining)", row.BatchJobID, remaining)
-                return row.BatchJobID, True
-        return str(uuid.uuid4()), False
+                return row.BatchJobID, True, processed, failed
+        return str(uuid.uuid4()), False, 0, 0
 
     def get_pending_files(self, all_files: list[str], batch_job_id: str) -> list[str]:
         # stats rows store SourceFile as basename (unique within the one
@@ -139,24 +142,13 @@ def process_directory(
     meta = MetadataStore(warehouse, config)
     manager = BatchJobManager(meta, directory, config)
 
-    batch_job_id, is_resumed = manager.get_or_create_batch_job()
+    batch_job_id, is_resumed, prior_processed, prior_failed = (
+        manager.get_or_create_batch_job()
+    )
     all_files = _list_files(directory)
     pending = manager.get_pending_files(all_files, batch_job_id)
     total_files = len(all_files)
     start = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-
-    prior_processed = prior_failed = 0
-    if is_resumed:
-        from pyspark.sql import functions as F
-
-        cur = (
-            meta.current_batches()
-            .filter(F.col("BatchJobID") == batch_job_id)
-            .collect()
-        )
-        if cur:
-            prior_processed = cur[0].FilesProcessed or 0
-            prior_failed = cur[0].FilesFailed or 0
 
     meta.append_batch_event(
         {

@@ -53,7 +53,12 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.types import StructType
 
-from nspc_etl_basic_spark.operators.merge import MergeCounts, merge_upsert
+from nspc_etl_basic_spark.operators.merge import (
+    MergeCounts,
+    MergeObservation,
+    merge_counts,
+    merge_upsert,
+)
 
 MANIFEST = "_current_buckets"
 HISTORY_DIR = "_manifest_history"
@@ -331,7 +336,8 @@ class BucketedTable:
         self, source: DataFrame, allow_schema_evolution: bool = False
     ) -> MergeCounts:
         """Differential upsert: rewrite only the buckets containing the
-        source's keys. Counts are the true insert/update split.
+        source's keys. Counts are the true insert/update split, observed
+        on the version write (``operators.merge.merge_counts``).
 
         ``source`` must be key-unique (run operators.merge.dedup_last_wins
         first — the same contract as the snapshot upsert path): duplicate
@@ -343,10 +349,10 @@ class BucketedTable:
         to add a column. Source-missing columns are always NULL-filled
         (SQL INSERT column-list semantics)."""
         m = self._read_manifest()
+        observe = MergeObservation()
         if m is None:
-            n = source.count()
-            self.init(source)
-            return MergeCounts(inserted=n, updated=0)
+            self.init(observe.on("merged", source))
+            return merge_counts(observe)
         if m.get("n_buckets") != self.n_buckets:
             raise ValueError(
                 f"table has n_buckets={m.get('n_buckets')}, "
@@ -367,12 +373,6 @@ class BucketedTable:
 
             if touched_live:
                 old = self.read(bucket_ids=touched_live)
-                src_keys = src.select(*self.pk_cols).distinct()
-                updated = (
-                    old.select(*self.pk_cols)
-                    .join(F.broadcast(src_keys), on=self.pk_cols, how="left_semi")
-                    .count()
-                )
                 aligned = src
                 extra = [c for c in src.columns if c not in old.columns]
                 if extra and not allow_schema_evolution:
@@ -390,11 +390,11 @@ class BucketedTable:
                         "*", *[F.lit(None).cast(src.schema[c].dataType).alias(c)
                                for c in extra]
                     )
-                merged = merge_upsert(old, aligned.select(*old.columns), self.pk_cols)
+                merged = merge_upsert(
+                    old, aligned.select(*old.columns), self.pk_cols, observe=observe
+                )
             else:
-                updated = 0
-                merged = src
-            total = src.select(*self.pk_cols).distinct().count()
+                merged = observe.on("merged", src)
 
             version = self._write_version(merged)
             written = self._version_buckets(version)
@@ -403,7 +403,7 @@ class BucketedTable:
                 buckets[b] = version
             self._write_manifest(buckets, merged.schema.json())
             self._gc()
-            return MergeCounts(inserted=total - updated, updated=updated)
+            return merge_counts(observe)
         finally:
             src.unpersist()
 

@@ -13,11 +13,12 @@ UPDATE — the Spark-native equivalent of the reference's in-place updates.
 from __future__ import annotations
 
 import datetime as _dt
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window
 
 from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
@@ -97,12 +98,27 @@ class MetadataStore:
             "table_name", "EtlQualityCheck"
         )
 
+    def _append(self, rows: list[dict], schema: T.StructType, name: str) -> None:
+        """Append driver-side rows as one Arrow batch: a local relation
+        the JVM reads directly, so the write is one task and one parquet
+        file with no Python worker. The Arrow column is UTC, so datetimes
+        are converted to UTC first, naive ones read as local wall time,
+        as ``createDataFrame`` on plain rows reads them."""
+        data = [
+            {
+                k: v.astimezone(_dt.timezone.utc) if isinstance(v, _dt.datetime) else v
+                for k, v in r.items()
+            }
+            for r in rows
+        ]
+        batch = pa.Table.from_pylist(data, schema=to_arrow_schema(schema))
+        df = self.wh.spark.createDataFrame(batch, schema=schema)
+        df.write.mode("append").parquet(self.wh.table_path(name))
+
     # ---- H8: job statistics
     def write_statistics(self, stats: dict) -> None:
-        spark = self.wh.spark
         row = {f.name: stats.get(f.name) for f in JOB_STATS_SCHEMA.fields}
-        df = spark.createDataFrame([row], schema=JOB_STATS_SCHEMA)
-        df.write.mode("append").parquet(self.wh.table_path(self.stats_table))
+        self._append([row], JOB_STATS_SCHEMA, self.stats_table)
 
     def read_statistics(self) -> DataFrame:
         if not self.wh.exists(self.stats_table):
@@ -110,35 +126,17 @@ class MetadataStore:
         return self.wh.read(self.stats_table)
 
     # ---- H9: error log
-    def write_error_log(
-        self,
-        job_run_id: str,
-        table_name: str,
-        column_name: str,
-        error_type: str,
-        error_message: str,
+    def write_invalid_rows(
+        self, invalid: DataFrame, job_run_id: str, table_name: str, n_invalid: int
     ) -> None:
-        row = {
-            "ErrorID": str(uuid.uuid4()),
-            "JobRunID": job_run_id,
-            "TableName": table_name,
-            "ColumnName": column_name,
-            "ErrorType": error_type,
-            "ErrorMessage": error_message,
-            "ErrorTimestamp": _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
-        }
-        df = self.wh.spark.createDataFrame([row], schema=ERROR_LOG_SCHEMA)
-        df.write.mode("append").parquet(self.wh.table_path(self.error_table))
-
-    def write_invalid_rows(self, invalid: DataFrame, job_run_id: str, table_name: str) -> int:
         """Distributed error sink: one EtlJobError row per invalid source
-        row (G2's failed-row log), written as a single Spark job — no
-        driver-side iteration."""
+        row (G2's failed-row log), no driver-side iteration. ``n_invalid``
+        is the row count of ``invalid`` the caller already holds: the
+        sink runs one Spark job (the append), none when it is 0."""
         from nspc_etl_basic_spark.operators.cast import ERROR_COL
 
-        n = invalid.count()
-        if n == 0:
-            return 0
+        if n_invalid == 0:
+            return
         rows = invalid.select(
             F.expr("uuid()").alias("ErrorID"),
             F.lit(job_run_id).alias("JobRunID"),
@@ -151,7 +149,6 @@ class MetadataStore:
             F.current_timestamp().alias("ErrorTimestamp"),
         )
         rows.write.mode("append").parquet(self.wh.table_path(self.error_table))
-        return n
 
     def read_error_log(self) -> DataFrame:
         if not self.wh.exists(self.error_table):
@@ -176,8 +173,7 @@ class MetadataStore:
             }
             for r in results
         ]
-        df = self.wh.spark.createDataFrame(rows, schema=QUALITY_SCHEMA)
-        df.write.mode("append").parquet(self.wh.table_path(self.quality_table))
+        self._append(rows, QUALITY_SCHEMA, self.quality_table)
 
     def read_quality_results(self) -> DataFrame:
         if not self.wh.exists(self.quality_table):
@@ -187,8 +183,7 @@ class MetadataStore:
     # ---- H10: batch statistics (append-only, last EventSeq wins)
     def append_batch_event(self, event: dict) -> None:
         row = {f.name: event.get(f.name) for f in BATCH_STATS_SCHEMA.fields}
-        df = self.wh.spark.createDataFrame([row], schema=BATCH_STATS_SCHEMA)
-        df.write.mode("append").parquet(self.wh.table_path(self.batch_table))
+        self._append([row], BATCH_STATS_SCHEMA, self.batch_table)
 
     def current_batches(self) -> DataFrame:
         """Latest event per BatchJobID (reference's UPDATE-in-place read

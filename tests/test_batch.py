@@ -112,8 +112,9 @@ def test_batch_manager_no_resume_when_checkpointing_disabled(spark, tmp_path):
     cfg = _cfg(tmp_path, batch_processing={"enable_checkpointing": False})
     meta = MetadataStore(ParquetWarehouse(spark, str(tmp_path / "wh")), cfg)
     mgr = BatchJobManager(meta, str(tmp_path), cfg)
-    bid, resumed = mgr.get_or_create_batch_job()
+    bid, resumed, processed, failed = mgr.get_or_create_batch_job()
     assert not resumed and bid
+    assert processed == failed == 0
 
 
 # ---------------------------------------------------------------------------
