@@ -14,6 +14,7 @@ determinism rules:
 
 from __future__ import annotations
 
+import functools
 import math
 from collections.abc import Callable
 
@@ -6131,34 +6132,39 @@ def entry(spark: SparkSession) -> DataFrame:
     return q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
-def _ledger_ordered(base: dict) -> dict:
-    """Reorder the query registry by scripts/window_order.json — the
-    ranking scripts/window_order.py computes from the correctness
-    ledgers (never-checked > red > code-changed-since-row > oldest
-    row). The driver oracles the FIRST 50 entries each round, so dict
-    order IS the verification schedule; round 5's hand-ordering left
-    events_zorder_layout at index 50, one past the window, unchecked —
-    hence the machine. Keys absent from the file (brand-new queries)
-    lead; registry order is the fallback when the file is missing.
-    tests/test_window_order.py pins queries() to the live ranking."""
-    import json as _json
-    import os as _os
+@functools.cache
+def _ledger_ordered() -> tuple[str, ...]:
+    """The registry keys in driver-window order, ranked live by
+    scripts/window_order.py's compute_ranking from the correctness
+    ledgers and the round-end code-hash dumps (never-checked > red >
+    code-changed-since-row > oldest row). The driver oracles the FIRST
+    50 entries each round, so dict order IS the verification schedule;
+    round 5's hand-ordering left events_zorder_layout at index 50, one
+    past the window, unchecked — hence the machine. Computed once per
+    process (~1-2 s cold: it hashes every query's source closure),
+    before any query runs. Registry order is the fallback when the
+    script or the ledgers are missing."""
+    import importlib.util
+    import os
+    import sys
 
-    path = _os.path.join(
-        _os.path.dirname(_os.path.abspath(__file__)),
-        "scripts",
-        "window_order.json",
-    )
-    try:
-        with open(path) as fh:
-            order = _json.load(fh)["order"]
-    except (OSError, ValueError, KeyError):
-        return base
-    listed = set(order)
-    ranked = [k for k in base if k not in listed] + [
-        k for k in order if k in base
-    ]
-    return {k: base[k] for k in ranked}
+    wo = sys.modules.get("window_order")
+    if wo is None:
+        path = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)),
+            "scripts",
+            "window_order.py",
+        )
+        spec = importlib.util.spec_from_file_location("window_order", path)
+        wo = importlib.util.module_from_spec(spec)
+        try:
+            spec.loader.exec_module(wo)
+        except OSError:
+            return tuple(_QUERY_REGISTRY)
+        sys.modules["window_order"] = wo
+    if not wo.ledger_state():
+        return tuple(_QUERY_REGISTRY)
+    return tuple(wo.compute_ranking(sys.modules[__name__])[0])
 
 
 # Registry only — ORDER is assigned by _ledger_ordered (see its
@@ -6169,7 +6175,9 @@ def _ledger_ordered(base: dict) -> dict:
 # the registry lived inside queries(), merely REGISTERING a new query
 # changed queries()' source and spuriously flagged those six as
 # code-changed, burning driver-window slots (round 8). A dict literal
-# is not a function, so additions here invalidate nothing.
+# is not a function, so additions here invalidate nothing; the hash
+# walk also skips this dict and the contract functions around it
+# (queries, _ledger_ordered, oracle_sql, entry) by name.
 _QUERY_REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         # -- (0) the round-4 verdict's headline ask: the five formerly
         # rows-only operators, now deterministic and value-oracled —
@@ -6394,7 +6402,7 @@ _QUERY_REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _ledger_ordered(dict(_QUERY_REGISTRY))
+    return {key: _QUERY_REGISTRY[key] for key in _ledger_ordered()}
 
 
 # ---- oracle SQL builders (shared fragments) --------------------------------

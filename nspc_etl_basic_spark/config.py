@@ -49,7 +49,6 @@ DEFAULT_CONFIG: dict[str, Any] = {
         "legacy_string_columns_never_datetime": False,
     },
     "ddl": {"not_null_columns": []},
-    "logging": {"enabled": True, "level": "INFO", "path": "logs"},
     "job_statistics": {"enabled": True, "table_name": "EtlJobStatistics"},
     "error_logging": {"enabled": True, "table_name": "EtlJobError"},
     "batch_processing": {

@@ -642,8 +642,9 @@ def ivfpq_topk(
     # (round 13, guide §2.3): the old explode(sequence(1, n_queries)) +
     # array_contains filter paid n_queries probe-set tests per corpus
     # row; the map explode emits exactly the ~n_queries*n_probe/n_cells
-    # survivors (element_at on an unprobed cell is NULL, and explode of
-    # NULL drops the row — identical to the filter's empty case). This
+    # survivors (try_element_at on an unprobed cell is NULL under ANSI
+    # too, and explode of NULL drops the row — identical to the
+    # filter's empty case). This
     # also retires the docstring's max_queries caveat about O(n_queries)
     # per-row tests.
     by_cell: dict[int, list[int]] = {}
@@ -659,7 +660,9 @@ def ivfpq_topk(
         enc.withColumn(
             "__i",
             F.explode(
-                F.element_at(queries_by_cell_lit, F.col("__cell").cast("long"))
+                F.try_element_at(
+                    queries_by_cell_lit, F.col("__cell").cast("long")
+                )
             ),
         )
         .withColumn("__tbl", F.element_at(tbls_lit, F.col("__i")))
@@ -901,8 +904,9 @@ def ivfpq_residual_topk(
     # explode(sequence(1, n_pairs)) + cell-equality filter materialized
     # n_pairs rows per corpus row inside codegen and discarded all but
     # ~n_pairs/n_cells of them; the map explode emits exactly the
-    # surviving set (element_at on a missing cell is NULL, and explode
-    # of NULL drops the row — identical to the filter's empty case).
+    # surviving set (try_element_at on a missing cell is NULL under
+    # ANSI too, and explode of NULL drops the row — identical to the
+    # filter's empty case).
     by_cell: dict[int, list[int]] = {}
     for i, (_q, c, _t) in enumerate(pairs, start=1):
         by_cell.setdefault(int(c), []).append(i)
@@ -915,7 +919,9 @@ def ivfpq_residual_topk(
         enc.withColumn(
             "__i",
             F.explode(
-                F.element_at(pairs_by_cell_lit, F.col("__cell").cast("bigint"))
+                F.try_element_at(
+                    pairs_by_cell_lit, F.col("__cell").cast("bigint")
+                )
             ),
         )
         .withColumn("__tbl", F.element_at(tbls_lit, F.col("__i")))

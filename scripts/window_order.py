@@ -5,15 +5,19 @@ dict order decides which queries get fresh correctness rows. Round 5
 proved hand-ordering a 166-key dict doesn't scale: events_zorder_layout
 sat at index 50 — one past the window — and was never checked.
 
-This script replaces hand-ordering with a ranking computed from the
-correctness ledgers (CORRECTNESS_r*.json) plus a code-identity
-snapshot (scripts/query_code_hashes.json — the hash of each query's
-defining source AT THE TIME OF ITS LAST DRIVER ROW):
+queries() therefore ranks itself, live, with compute_ranking: from the
+correctness ledgers (CORRECTNESS_r*.json) plus the per-round code
+identity dumps (scripts/hashes_rN.json — the hash of each query's
+defining source at the end of round N):
 
   cat0  never checked by the driver           (alphabetical)
   cat1  latest driver row red                 (alphabetical)
   cat2  code changed since the last row       (oldest row first, name)
   cat3  green and unchanged — freshness only  (oldest row first, name)
+
+"Code at row time" for a key is hashes_r{N}[key], N the round of its
+latest driver row (the driver rows the window after the round ends,
+against final HEAD); a key whose round has no dump ranks as changed.
 
 A query's code identity covers: the query function's source, its
 oracle SQL STRING (generated oracles hash their output, so a generator
@@ -21,20 +25,9 @@ change counts), every nspc module its source references (local or
 top-level imports — an operator fix flags every query on that
 operator), and one level of entry-module helper functions it calls.
 
-Round lifecycle (the driver rows the window AFTER the session ends,
-against final HEAD, so "code at row time" == the hashes dumped at the
-END of the round that produced the row):
-
-  1. end of round N: ``--dump-hashes > scripts/hashes_rN.json`` and
-     commit — the code identity the r{N} ledger rows were checked at.
-  2. start of round N+1 (new ledger arrived): ``--sync-snapshot``
-     rebuilds query_code_hashes.json as
-     ``snap[key] = hashes_r{last_row_round(key)}[key]``.
-  3. ``--emit`` writes window_order.json (the ranking); queries()
-     reorders itself from that file.
-  4. ``--check`` (pinned by tests/test_window_order.py) recomputes the
-     ranking and fails if queries()' first 50 disagree — e.g. a query
-     was edited after the last --emit.
+The one round-end step: ``python scripts/window_order.py --dump-hashes
+> scripts/hashes_rN.json`` at the end of round N, committed — the code
+identity the r{N} ledger rows are checked at.
 """
 
 from __future__ import annotations
@@ -50,9 +43,7 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LEDGER_GLOB = os.path.join(REPO, "CORRECTNESS_r*.json")
-SNAPSHOT = os.path.join(REPO, "scripts", "query_code_hashes.json")
-WINDOW = os.path.join(REPO, "scripts", "window_order.json")
-PINS = os.path.join(REPO, "scripts", "window_pins.json")
+HASHES_GLOB = os.path.join(REPO, "scripts", "hashes_r*.json")
 WINDOW_SIZE = 50
 
 # parenthesized import lists span lines — match to the closing paren,
@@ -109,16 +100,21 @@ def _canon(v) -> str:
     return repr(v)
 
 
-# dicts-of-callables exempt from hashing, BY NAME: only the entry
-# module's query registry. Its membership is not part of any query's
-# semantics (each query's own source and oracle are hashed directly),
-# and indexing it would re-couple every query whose closure reaches the
-# registry to every registration. Any OTHER dispatch dict a query
-# closes over IS semantic — its membership is hashed via its key set.
-_REGISTRY_EXEMPT = {"_QUERY_REGISTRY"}
+# entry-module registry plumbing exempt from hashing, BY NAME: the
+# query registry dict and the contract functions around it. None is
+# part of any query's semantics (each query's own source and oracle
+# are hashed directly), and following them would re-couple every query
+# whose source merely says "queries" or "entry" to every registration
+# and to the ranking code (round 8; without the function names, a
+# one-line edit to queries() re-flags 13 queries). Any OTHER dispatch
+# dict a query closes over IS semantic — its membership is hashed via
+# its key set.
+_REGISTRY_EXEMPT = {
+    "_QUERY_REGISTRY", "queries", "_ledger_ordered", "oracle_sql", "entry",
+}
 
 
-def _attr_source(obj, name: str | None = None) -> str | None:
+def _attr_source(obj) -> str | None:
     if inspect.isfunction(obj) or inspect.isclass(obj):
         try:
             return inspect.getsource(obj)
@@ -127,8 +123,6 @@ def _attr_source(obj, name: str | None = None) -> str | None:
     if isinstance(obj, dict) and obj and all(
         callable(x) for x in obj.values()
     ):
-        if name in _REGISTRY_EXEMPT:
-            return None
         # a genuine dispatch table: hash the sorted key set so
         # membership changes invalidate dependent queries' identity
         # (values are callables whose sources are followed by the
@@ -155,7 +149,7 @@ def _module_index(module) -> tuple[dict, dict, dict]:
         attrs: dict[str, str] = {}
         imports: dict[str, tuple] = {}
         for name, obj in vars(module).items():
-            if name.startswith("__"):
+            if name.startswith("__") or name in _REGISTRY_EXEMPT:
                 continue
             if inspect.ismodule(obj):
                 if obj.__name__.startswith(_PKG):
@@ -174,7 +168,7 @@ def _module_index(module) -> tuple[dict, dict, dict]:
                         sys.modules[origin],
                         getattr(obj, "__name__", name),
                     )
-            elif (s := _attr_source(obj, name)) is not None:
+            elif (s := _attr_source(obj)) is not None:
                 attrs[name] = s
         tokens = {
             name: frozenset(_WORD_RE.findall(src))
@@ -223,7 +217,7 @@ def _closure_sources(module, seed_names: list[str]) -> list[str]:
             # after a long test session has imported everything — the
             # hash then depends on IMPORT STATE (round 8: the full
             # pytest run flagged stream_mv/novelty_replay as changed
-            # while a bare --check did not). Import explicitly so the
+            # while a bare script run did not). Import explicitly so the
             # closure is the same in every process.
             if mod.__name__.startswith(_PKG):
                 try:
@@ -257,7 +251,8 @@ def current_hashes(entry) -> dict[str, str]:
             return None
 
     out: dict[str, str] = {}
-    for key, fn in entry.queries().items():
+    # the registry, not queries(): queries() ranks itself with this
+    for key, fn in entry._QUERY_REGISTRY.items():
         src = inspect.getsource(fn)
         src_tokens = frozenset(_WORD_RE.findall(src))
         parts = [src, oracles.get(key, "")]
@@ -317,47 +312,38 @@ def ledger_state() -> dict[str, tuple[int, bool]]:
     return state
 
 
-def _active_pins() -> dict[str, dict]:
-    """scripts/window_pins.json: {key: {reason, until_rowed_after}} —
-    a manual escalation for queries whose OUTPUT is known to have
-    changed (hash-rank can't tell an output change from an incidental
-    one, and a stale-green ledger row actively misrepresents those).
-    A pin is SPENT once the key has a driver row from a round LATER
-    than until_rowed_after, so the file self-cleans semantically and
-    can be pruned by sync-snapshot."""
-    if not os.path.exists(PINS):
-        return {}
-    with open(PINS) as fh:
-        return json.load(fh)
+def row_time_hashes(state: dict[str, tuple[int, bool]]) -> dict[str, str]:
+    """key -> its code hash at its latest driver row, read from the
+    round-end dumps: hashes_r{N}[key], N = the key's last rowed round.
+    A key whose round has no dump is absent (ranks as changed)."""
+    dumps: dict[int, dict[str, str]] = {}
+    for path in glob.glob(HASHES_GLOB):
+        m = re.search(r"hashes_r(\d+)\.json$", path)
+        if m:
+            with open(path) as fh:
+                dumps[int(m.group(1))] = json.load(fh)
+    return {
+        key: dumps[rnd][key]
+        for key, (rnd, _green) in state.items()
+        if key in dumps.get(rnd, {})
+    }
 
 
 def compute_ranking(entry) -> tuple[list[str], dict[str, str]]:
     """Full ranked key list + {key: category} for reporting.
-    Categories: 0 never-checked, 1 latest row red, 1.5 pinned
-    output-change not yet re-rowed, 2 code changed since row,
-    3 green+unchanged (oldest row first)."""
+    Categories: 0 never-checked, 1 latest row red, 2 code changed since
+    row, 3 green+unchanged (oldest row first)."""
     cur = current_hashes(entry)
     state = ledger_state()
-    pins = _active_pins()
-    snapshot: dict[str, str] = {}
-    if os.path.exists(SNAPSHOT):
-        with open(SNAPSHOT) as fh:
-            snapshot = json.load(fh)
+    at_row = row_time_hashes(state)
 
     cats: dict[str, tuple] = {}
     for key in cur:
-        pin = pins.get(key)
-        pinned = pin is not None and (
-            key not in state
-            or state[key][0] <= int(pin["until_rowed_after"])
-        )
         if key not in state:
             cats[key] = (0, key)
         elif not state[key][1]:
             cats[key] = (1, key)
-        elif pinned:
-            cats[key] = (1.5, key)
-        elif snapshot.get(key) != cur[key]:
+        elif at_row.get(key) != cur[key]:
             cats[key] = (2, state[key][0], key)
         else:
             cats[key] = (3, state[key][0], key)
@@ -365,85 +351,15 @@ def compute_ranking(entry) -> tuple[list[str], dict[str, str]]:
     return ranked, {k: f"cat{cats[k][0]}" for k in cur}
 
 
-def emit(entry) -> None:
-    ranked, cat = compute_ranking(entry)
-    with open(WINDOW, "w") as fh:
-        json.dump({"order": ranked, "window_size": WINDOW_SIZE}, fh, indent=1)
-    for i, key in enumerate(ranked[:WINDOW_SIZE]):
-        print(f"{i:3d} {cat[key]} {key}")
-    print(f"... {len(ranked) - WINDOW_SIZE} more past the window")
-
-
-def sync_snapshot() -> None:
-    """snap[key] = hash at the round of the key's latest driver row,
-    read from the committed per-round dumps (scripts/hashes_rN.json)."""
-    hist: dict[int, dict[str, str]] = {}
-    for path in glob.glob(os.path.join(REPO, "scripts", "hashes_r*.json")):
-        m = re.search(r"hashes_r(\d+)\.json$", path)
-        if m:
-            with open(path) as fh:
-                hist[int(m.group(1))] = json.load(fh)
-    snap: dict[str, str] = {}
-    dropped = []
-    state = ledger_state()
-    for key, (rnd, _green) in state.items():
-        h = hist.get(rnd, {}).get(key)
-        if h is None:
-            dropped.append((key, rnd))  # no dump for that round: cat2
-        else:
-            snap[key] = h
-    with open(SNAPSHOT, "w") as fh:
-        json.dump(dict(sorted(snap.items())), fh, indent=1)
-    print(f"snapshot: {len(snap)} keys", f"(no row-time hash: {dropped})"
-          if dropped else "")
-    # prune spent pins: the key got a driver row after the pinned round
-    pins = _active_pins()
-    live = {
-        k: v
-        for k, v in pins.items()
-        if k not in state or state[k][0] <= int(v["until_rowed_after"])
-    }
-    if live != pins:
-        with open(PINS, "w") as fh:
-            json.dump(live, fh, indent=1)
-        print(f"pins: pruned {sorted(set(pins) - set(live))}")
-
-
-def check(entry) -> int:
-    ranked, cat = compute_ranking(entry)
-    actual = list(entry.queries())
-    want = ranked[:WINDOW_SIZE]
-    got = actual[:WINDOW_SIZE]
-    if got != want:
-        missing = [k for k in want if k not in got]
-        print("window order disagrees with the ledger ranking")
-        print("ranked-but-absent:", missing)
-        for i, (a, b) in enumerate(zip(got, want)):
-            if a != b:
-                print(f"first divergence at {i}: have {a}, want {b} "
-                      f"({cat.get(b)})")
-                break
-        return 1
-    return 0
-
-
 if __name__ == "__main__":
-    if "--dump-hashes" in sys.argv:
-        # run from any checkout (e.g. a round-N worktree): hash ITS
-        # entry + package, not the repo this script lives in
-        sys.path.insert(0, os.getcwd())
-        import __spark_entry__ as entry
+    if sys.argv[1:] != ["--dump-hashes"]:
+        sys.exit(
+            "usage: python scripts/window_order.py --dump-hashes"
+            " > scripts/hashes_rN.json"
+        )
+    # run from any checkout (e.g. a round-N worktree): hash ITS entry +
+    # package, not the repo this script lives in
+    sys.path.insert(0, os.getcwd())
+    import __spark_entry__ as entry
 
-        print(json.dumps(current_hashes(entry), indent=1))
-    elif "--sync-snapshot" in sys.argv:
-        sync_snapshot()
-    elif "--emit" in sys.argv:
-        sys.path.insert(0, REPO)
-        import __spark_entry__ as entry
-
-        emit(entry)
-    else:
-        sys.path.insert(0, REPO)
-        import __spark_entry__ as entry
-
-        sys.exit(check(entry))
+    print(json.dumps(current_hashes(entry), indent=1))

@@ -469,48 +469,62 @@ def test_incremental_components_randomized_equivalence(spark):
         assert incr == rebuild
 
 
-def test_components_onepass_matches_fixpoint_randomized(spark):
+def _assert_onepass_matches_fixpoint(spark, rng):
     # the round-12 one-pass union-find must produce EXACTLY the
-    # min-label components the distributed fixpoint converges to —
-    # single-group mode and key-local (cell) mode, over seeded random
-    # graphs including chains, bridges, and isolated pairs
-    import random
-
+    # min-label components the distributed fixpoint converges to, over
+    # one seeded random graph (chains, bridges, isolated pairs)
     from nspc_etl_basic_spark.operators.dedup import (
         components_onepass,
         neardup_components,
     )
 
+    ids = list(range(1, 61))
+    pairs = [
+        (a, b)
+        for a in ids
+        for b in ids
+        if a < b and rng.random() < 0.04
+    ]
+    if not pairs:
+        pairs = [(1, 2)]
+    nodes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    pdf = spark.createDataFrame(pairs, "id_a long, id_b long")
+    fix = {
+        r.doc_id: r.component_id
+        # onepass_max_edges=0: force the DISTRIBUTED fixpoint —
+        # the round-13 size-adaptive default would otherwise route
+        # this small graph through onepass and the test would
+        # compare the kernel with itself
+        for r in neardup_components(
+            nodes, pdf, onepass_max_edges=0
+        ).collect()
+    }
+    one = {
+        r.doc_id: r.component_id
+        for r in components_onepass(pdf, id_col="doc_id").collect()
+    }
+    # onepass covers only paired ids; the fixpoint unions singletons
+    paired = {a for a, _ in pairs} | {b for _, b in pairs}
+    assert one == {k: v for k, v in fix.items() if k in paired}
+
+
+def test_components_onepass_matches_fixpoint_one_seed(spark):
+    # default-tier representative of the randomized suite below
+    import random
+
+    _assert_onepass_matches_fixpoint(spark, random.Random(141414))
+
+
+def test_components_onepass_matches_fixpoint_randomized(spark):
+    # three seeded graphs in single-group mode, then key-local (cell)
+    # mode
+    import random
+
+    from nspc_etl_basic_spark.operators.dedup import components_onepass
+
     rng = random.Random(121212)
     for _ in range(3):
-        ids = list(range(1, 61))
-        pairs = [
-            (a, b)
-            for a in ids
-            for b in ids
-            if a < b and rng.random() < 0.04
-        ]
-        if not pairs:
-            pairs = [(1, 2)]
-        nodes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-        pdf = spark.createDataFrame(pairs, "id_a long, id_b long")
-        fix = {
-            r.doc_id: r.component_id
-            # onepass_max_edges=0: force the DISTRIBUTED fixpoint —
-            # the round-13 size-adaptive default would otherwise route
-            # this small graph through onepass and the test would
-            # compare the kernel with itself
-            for r in neardup_components(
-                nodes, pdf, onepass_max_edges=0
-            ).collect()
-        }
-        one = {
-            r.doc_id: r.component_id
-            for r in components_onepass(pdf, id_col="doc_id").collect()
-        }
-        # onepass covers only paired ids; the fixpoint unions singletons
-        paired = {a for a, _ in pairs} | {b for _, b in pairs}
-        assert one == {k: v for k, v in fix.items() if k in paired}
+        _assert_onepass_matches_fixpoint(spark, rng)
 
     # key-local mode: two disjoint key groups, components never span keys
     kp = spark.createDataFrame(
