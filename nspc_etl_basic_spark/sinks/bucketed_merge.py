@@ -15,38 +15,28 @@ K >> N it degrades gracefully to the full rewrite the snapshot path
 always pays. Pick ``n_buckets`` so a bucket is roughly file-sized
 (128-512 MB) at the table's steady-state size.
 
-Commit protocol — same object-store-safe pointer flip as
-``ParquetWarehouse`` (sinks/writer.py), extended to a per-bucket map:
+Commit protocol and retention: the manifest-pointer commit and the one
+reclaim rule of ``sinks/writer.py``. What differs is the manifest — a
+per-bucket map instead of a single version pointer:
 
     <table>/
         _current_buckets      {"n_buckets": N, "buckets": {"17": "v_a", ...}}
         v_<ts>_<rand>/        immutable version dirs, each holding
             b=17/...parquet   only the buckets written by that commit
 
-A merge (1) writes the merged TOUCHED buckets into a fresh version dir
-(invisible — nothing references it); (2) atomically replaces the manifest
-with the touched bucket pointers flipped to the new version. A crash
-before the flip leaves the previous state fully intact. A version dir is
-garbage once no bucket points into it (kept for ``keep_versions`` commits
-so in-flight readers finish).
+A merge writes the merged TOUCHED buckets into a fresh version dir, then
+commits a manifest with those bucket pointers flipped to it. A version
+dir is garbage once no retained manifest points a bucket into it.
 
 Read path: one ``spark.read.parquet(path_17, path_23, ...)`` over the
 per-bucket current dirs — a plain multi-path parquet scan, fully
 parallel, no manifest logic inside Spark.
-
-Single writer per table (same model as the reference and the snapshot
-path); concurrent readers are protected by immutability + retained
-versions.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
 import json
 import os
-import shutil
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,16 +49,18 @@ from nspc_etl_basic_spark.operators.merge import (
     merge_counts,
     merge_upsert,
 )
+from nspc_etl_basic_spark.sinks.writer import (
+    BUCKETED_MANIFEST as MANIFEST,
+    check_layout,
+    commit_manifest,
+    new_version_name,
+    read_manifest,
+    reclaim,
+    retained_manifest,
+    version_catalog,
+)
 
-MANIFEST = "_current_buckets"
-HISTORY_DIR = "_manifest_history"
-VERSION_PREFIX = "v_"
 BUCKET_COL = "__bucket"
-
-#: ParquetWarehouse's snapshot-manifest name — its presence means the
-#: directory is a SNAPSHOT table; operating a bucketed sink on it would
-#: orphan the snapshot rows and cross-GC the other layout's version dirs.
-_SNAPSHOT_MANIFEST = "_current"
 
 
 class BucketedTable:
@@ -89,90 +81,21 @@ class BucketedTable:
         #: committed manifests retained for time-travel reads; every
         #: version dir a retained manifest references survives GC
         self.keep_history = max(1, int(keep_history))
-        if os.path.exists(os.path.join(path, _SNAPSHOT_MANIFEST)):
-            raise ValueError(
-                f"{path} is a ParquetWarehouse snapshot table (has "
-                f"{_SNAPSHOT_MANIFEST}); refusing to run the bucketed "
-                "layout over it — existing snapshot rows would be "
-                "silently ignored and each layout's GC would delete "
-                "version dirs the other's manifest references. Point "
-                "the bucketed table at a fresh directory (or migrate "
-                "with BucketedTable.init(warehouse.read(name)) into a "
-                "new root)."
-            )
+        check_layout(path, MANIFEST)
         os.makedirs(path, exist_ok=True)
 
     # ------------------------------------------------------------------
     # manifest
     # ------------------------------------------------------------------
 
-    def _manifest_path(self) -> str:
-        return os.path.join(self.path, MANIFEST)
-
     def _read_manifest(self) -> dict | None:
-        try:
-            with open(self._manifest_path(), encoding="utf-8") as fh:
-                m = json.load(fh)
-        except (OSError, ValueError):
-            return None
-        return m if isinstance(m.get("buckets"), dict) else None
-
-    def _write_manifest(
-        self, buckets: dict[str, str], schema_json: str | None = None
-    ) -> None:
-        prev = self._read_manifest()
-        version_id = (prev.get("version_id", -1) + 1) if prev else 0
-        if schema_json is None and prev:
-            schema_json = prev.get("schema")
-        manifest = {
-            "version_id": version_id,
-            "n_buckets": self.n_buckets,
-            "pk_cols": self.pk_cols,
-            "buckets": buckets,
-            "schema": schema_json,
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-        }
-        tmp = f"{self._manifest_path()}.tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(manifest, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._manifest_path())  # the commit point
-        # history AFTER the flip: a manifest copy per commit, so
-        # read(version=k) can time-travel. Written post-commit — a crash
-        # between flip and copy loses only that version's history entry,
-        # never current-state correctness.
-        hdir = os.path.join(self.path, HISTORY_DIR)
-        os.makedirs(hdir, exist_ok=True)
-        with open(
-            os.path.join(hdir, f"m_{version_id:08d}.json"), "w", encoding="utf-8"
-        ) as fh:
-            json.dump(manifest, fh)
-
-    def _history_manifests(self) -> dict[int, dict]:
-        """Retained committed manifests, keyed by version_id."""
-        hdir = os.path.join(self.path, HISTORY_DIR)
-        out: dict[int, dict] = {}
-        if not os.path.isdir(hdir):
-            return out
-        for f in os.listdir(hdir):
-            if f.startswith("m_") and f.endswith(".json"):
-                try:
-                    with open(os.path.join(hdir, f), encoding="utf-8") as fh:
-                        m = json.load(fh)
-                    out[int(m["version_id"])] = m
-                except (OSError, ValueError, KeyError):
-                    continue
-        return out
+        m = read_manifest(self.path, MANIFEST)
+        return m if m and isinstance(m.get("buckets"), dict) else None
 
     def versions(self) -> list[dict]:
         """Time-travel catalog: retained commits, oldest first —
         ``[{"version_id": k, "committed_at": ...}, ...]``."""
-        hist = self._history_manifests()
-        return [
-            {"version_id": k, "committed_at": hist[k].get("committed_at")}
-            for k in sorted(hist)
-        ]
+        return version_catalog(self.path)
 
     def exists(self) -> bool:
         return self._read_manifest() is not None
@@ -202,7 +125,7 @@ class BucketedTable:
         ]
 
     def _write_version(self, df: DataFrame) -> str:
-        version = f"{VERSION_PREFIX}{time.time_ns():020d}_{uuid.uuid4().hex[:8]}"
+        version = new_version_name()
         (
             df.withColumn(BUCKET_COL, self._bucket_expr())
             .repartition(BUCKET_COL)  # one task-set per bucket, co-written
@@ -219,10 +142,7 @@ class BucketedTable:
     def init(self, df: DataFrame) -> None:
         """Full (re)write of the table: every bucket lands in one fresh
         version; the manifest points all buckets at it."""
-        version = self._write_version(df)
-        written = self._version_buckets(version)
-        self._write_manifest({b: version for b in written}, df.schema.json())
-        self._gc()
+        self._commit(df, {})
 
     def _empty_df(self, m: dict) -> DataFrame:
         schema_json = m.get("schema")
@@ -244,12 +164,7 @@ class BucketedTable:
         if version is None:
             m = self._read_manifest()
         else:
-            m = self._history_manifests().get(int(version))
-            if m is None:
-                raise FileNotFoundError(
-                    f"version {version} not retained at {self.path} "
-                    f"(keep_history={self.keep_history}; see versions())"
-                )
+            m = retained_manifest(self.path, version, self.keep_history)
         if m is None:
             raise FileNotFoundError(f"bucketed table at {self.path} is empty")
         paths = self._bucket_paths(bucket_ids, manifest=m)
@@ -396,13 +311,7 @@ class BucketedTable:
             else:
                 merged = observe.on("merged", src)
 
-            version = self._write_version(merged)
-            written = self._version_buckets(version)
-            buckets = dict(m["buckets"])
-            for b in written:
-                buckets[b] = version
-            self._write_manifest(buckets, merged.schema.json())
-            self._gc()
+            self._commit(merged, m["buckets"])
             return merge_counts(observe)
         finally:
             src.unpersist()
@@ -462,17 +371,7 @@ class BucketedTable:
                 return 0
             kept = old.join(F.broadcast(k), on=self.pk_cols, how="left_anti")
 
-            buckets = dict(m["buckets"])
-            version = self._write_version(kept)
-            written = set(self._version_buckets(version))
-            for b in touched_live:
-                if str(b) in written:
-                    buckets[str(b)] = version
-                else:
-                    # every row of this bucket was deleted
-                    buckets.pop(str(b), None)
-            self._write_manifest(buckets)
-            self._gc()
+            self._commit(kept, m["buckets"], touched_live, m.get("schema"))
             return removed
         finally:
             k.unpersist()
@@ -507,53 +406,38 @@ class BucketedTable:
         materializing the unified schema, and lets GC release every older
         dir once history rotates. Returns before/after fragmentation."""
         before = self.fragmentation()
-        df = self.read()
-        version = self._write_version(df)
-        written = self._version_buckets(version)
-        self._write_manifest({b: version for b in written}, df.schema.json())
-        self._gc()
+        self._commit(self.read(), {})
         return {"before": before, "after": self.fragmentation()}
 
     # ------------------------------------------------------------------
     # internals
     # ------------------------------------------------------------------
 
-    def _version_buckets(self, version: str) -> list[str]:
-        vdir = os.path.join(self.path, version)
-        return [
-            d.split("=", 1)[1]
-            for d in os.listdir(vdir)
-            if d.startswith(f"{BUCKET_COL}=")
-        ]
-
-    def _gc(self) -> None:
-        """Drop version dirs nothing references, keeping the
-        ``keep_versions`` newest regardless (in-flight reader grace).
-        "Referenced" spans the CURRENT manifest plus every retained
-        history manifest, so time-travel reads never dangle; history
-        manifests beyond ``keep_history`` are pruned first, which is what
-        actually releases old version dirs."""
-        m = self._read_manifest()
-        if m is None:
-            return
-        # prune history beyond the retention window (current stays)
-        hdir = os.path.join(self.path, HISTORY_DIR)
-        hist = self._history_manifests()
-        for vid in sorted(hist)[: -self.keep_history]:
-            try:
-                os.remove(os.path.join(hdir, f"m_{vid:08d}.json"))
-            except OSError:
-                pass
-            hist.pop(vid, None)
-        referenced = set(m["buckets"].values())
-        for hm in hist.values():
-            referenced.update(hm.get("buckets", {}).values())
-        versions = sorted(
-            d
-            for d in os.listdir(self.path)
-            if d.startswith(VERSION_PREFIX)
-            and os.path.isdir(os.path.join(self.path, d))
+    def _commit(
+        self,
+        df: DataFrame,
+        buckets: dict[str, str],
+        rewritten=(),
+        schema_json: str | None = None,
+    ) -> None:
+        """The one bucketed commit step: write ``df`` as a fresh version,
+        point every bucket it holds at it (dropping the ``rewritten``
+        buckets it no longer holds — all their rows were deleted), commit
+        the manifest and reclaim (sinks/writer.py)."""
+        version = self._write_version(df)
+        dropped = {str(b) for b in rewritten}
+        pointers = {b: v for b, v in buckets.items() if b not in dropped}
+        for d in os.listdir(os.path.join(self.path, version)):
+            if d.startswith(f"{BUCKET_COL}="):
+                pointers[d.split("=", 1)[1]] = version
+        commit_manifest(
+            self.path,
+            MANIFEST,
+            {
+                "n_buckets": self.n_buckets,
+                "pk_cols": self.pk_cols,
+                "buckets": pointers,
+                "schema": schema_json or df.schema.json(),
+            },
         )
-        for v in versions[: -self.keep_versions] if len(versions) > self.keep_versions else []:
-            if v not in referenced:
-                shutil.rmtree(os.path.join(self.path, v), ignore_errors=True)
+        reclaim(self.path, MANIFEST, version, self.keep_versions, self.keep_history)

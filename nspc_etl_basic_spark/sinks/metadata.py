@@ -41,6 +41,8 @@ JOB_STATS_SCHEMA = T.StructType(
     ]
 )
 
+#: the reference's EtlJobError columns (loader.py:548-557), which
+#: ``write_invalid_rows`` writes in this order
 ERROR_LOG_SCHEMA = T.StructType(
     [
         T.StructField("ErrorID", T.StringType(), False),
@@ -149,11 +151,6 @@ class MetadataStore:
             F.current_timestamp().alias("ErrorTimestamp"),
         )
         rows.write.mode("append").parquet(self.wh.table_path(self.error_table))
-
-    def read_error_log(self) -> DataFrame:
-        if not self.wh.exists(self.error_table):
-            return self.wh.spark.createDataFrame([], schema=ERROR_LOG_SCHEMA)
-        return self.wh.read(self.error_table)
 
     # ---- quality-check results (round-4 extension; same append-only shape)
     def write_quality_results(

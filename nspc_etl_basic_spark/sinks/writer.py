@@ -9,26 +9,37 @@ Mode mapping (reference ``handle_existing_table``, loader.py:895-932):
   drop_recreate -> versioned snapshot commit | append -> append |
   fail -> error | upsert -> snapshot rewrite via operators.merge.
 
-Snapshot commit protocol (object-store safe)
---------------------------------------------
+Commit protocol (object-store safe)
+-----------------------------------
 The reference's transaction rollback must become "never expose a
 half-written snapshot" (SURVEY.md §7.2 item 1). Directory renames are NOT
-atomic (or even available) on S3/GCS, so snapshot tables use a
-manifest-pointer commit instead:
+atomic (or even available) on S3/GCS, so versioned tables use a
+manifest-pointer commit instead. Two layouts share it — this module's
+snapshot tables and ``BucketedTable`` (sinks/bucketed_merge.py) — and
+differ only in the manifest's name and what it points at:
 
     wh/<table>/
-        _current            tiny JSON manifest: {"version": "v_..."}
-        v_<ts>_<rand>/      immutable parquet data dirs, one per commit
+        _current            snapshot manifest: {"version": "v_...", ...}
+        _current_buckets    bucketed manifest: {"buckets": {"17": "v_..."}}
+        _manifest_history/  m_<id>.json, a copy of each retained commit
+        v_<time_ns>_<hex8>/ immutable data dirs, one per commit
 
-A commit (1) writes the full new snapshot into a FRESH version dir —
-readers cannot see it, nothing references it yet; (2) flips the
-``_current`` pointer. Locally the flip is write-temp + ``os.replace``
-(atomic POSIX); on an object store it maps to a single-object PUT, which
-is atomic read-after-write on S3/GCS. A crash anywhere before the flip
-leaves an orphan version dir and a fully intact previous snapshot; a
-reader mid-plan on the previous version keeps its files because GC
-retains ``keep_versions`` committed versions (plus any version newer than
-current, so an in-flight commit is never collected).
+A commit (1) writes the new data into a FRESH version dir — readers cannot
+see it, nothing references it yet; (2) writes the manifest to a temp file,
+``fsync``s it and ``os.replace``s it onto the manifest name
+(``commit_manifest``). That replace is the commit point: atomic on POSIX,
+a single-object PUT (atomic read-after-write) on S3/GCS. A crash anywhere
+before it leaves an orphan version dir and the previous state intact.
+The manifest is copied into the history after the flip, so a crash there
+loses one time-travel entry, never current-state correctness.
+
+One reclaim rule (``reclaim``) serves commit-time GC on both layouts and
+``ParquetWarehouse.vacuum``: prune the history beyond ``keep_history``;
+protect every version dir the current or a retained manifest references;
+never touch a dir newer than the commit just made (it can be an
+in-flight commit); keep the ``keep_versions`` newest dirs at or below it,
+so a reader mid-plan on the previous version keeps its files; delete the
+rest.
 
 Single writer per table is assumed — the same model as the reference
 (one loader process owns a target table); concurrent READERS are the
@@ -54,19 +65,178 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_NAME = "_current"
+#: BucketedTable's manifest name (sinks/bucketed_merge.py)
+BUCKETED_MANIFEST = "_current_buckets"
+HISTORY_DIR = "_manifest_history"
 VERSION_PREFIX = "v_"
 
-#: BucketedTable's manifest name (sinks/bucketed_merge.py). A directory
-#: holding one is a BUCKETED table; running the snapshot sink over it
-#: would ignore its rows and cross-GC its version dirs.
-_BUCKETED_MANIFEST = "_current_buckets"
+_LAYOUTS = {
+    MANIFEST_NAME: "ParquetWarehouse snapshot table",
+    BUCKETED_MANIFEST: "BucketedTable",
+}
 
 
 class TableExistsError(RuntimeError):
     pass
 
 
-HISTORY_DIR = "_manifest_history"
+def new_version_name() -> str:
+    """``v_<time_ns>_<hex8>``: names sort by commit wall-clock."""
+    return f"{VERSION_PREFIX}{time.time_ns():020d}_{uuid.uuid4().hex[:8]}"
+
+
+def check_layout(table_dir: str, manifest_name: str) -> None:
+    """Refuse a table dir that holds the OTHER layout's manifest: the
+    layouts share the ``v_*`` namespace, so running one over the other
+    ignores the existing rows, shadows them on the next commit, and each
+    layout's reclaim deletes version dirs the other's manifest still
+    references — silent data loss both ways."""
+    for other, kind in _LAYOUTS.items():
+        if other != manifest_name and os.path.exists(
+            os.path.join(table_dir, other)
+        ):
+            raise ValueError(
+                f"{table_dir} is a {kind} (has {other}); refusing to run "
+                f"the {_LAYOUTS[manifest_name]} layout over it. Point it at "
+                "a fresh directory, or migrate the table into one "
+                "(database.layout picks a pipeline table's layout)."
+            )
+
+
+def read_manifest(table_dir: str, manifest_name: str) -> dict | None:
+    """The current manifest, or None when absent or unreadable."""
+    try:
+        with open(os.path.join(table_dir, manifest_name), encoding="utf-8") as fh:
+            m = json.load(fh)
+    except (OSError, ValueError):
+        return None
+    return m if isinstance(m, dict) else None
+
+
+def history(table_dir: str) -> dict[int, dict]:
+    """Retained committed manifests, keyed by version_id."""
+    hdir = os.path.join(table_dir, HISTORY_DIR)
+    out: dict[int, dict] = {}
+    if not os.path.isdir(hdir):
+        return out
+    for f in os.listdir(hdir):
+        if f.startswith("m_") and f.endswith(".json"):
+            try:
+                with open(os.path.join(hdir, f), encoding="utf-8") as fh:
+                    m = json.load(fh)
+                out[int(m["version_id"])] = m
+            except (OSError, ValueError, KeyError):
+                continue
+    return out
+
+
+def version_catalog(table_dir: str) -> list[dict]:
+    """Time-travel catalog: retained commits, oldest first —
+    ``[{"version_id": k, "committed_at": ...}, ...]``."""
+    hist = history(table_dir)
+    return [
+        {"version_id": k, "committed_at": hist[k].get("committed_at")}
+        for k in sorted(hist)
+    ]
+
+
+def retained_manifest(table_dir: str, version: int, keep_history: int) -> dict:
+    """The manifest of commit ``version``, for a time-travel read."""
+    m = history(table_dir).get(int(version))
+    if m is None:
+        raise FileNotFoundError(
+            f"version {version} not retained at {table_dir} "
+            f"(keep_history={keep_history}; see versions())"
+        )
+    return m
+
+
+def commit_manifest(table_dir: str, manifest_name: str, manifest: dict) -> None:
+    """Atomically replace the layout's manifest with ``manifest`` plus a
+    ``version_id`` (one more than the larger of the current manifest's
+    and the newest retained history id; 0 when there is neither) and
+    ``committed_at``, then copy it into the history."""
+    prev = read_manifest(table_dir, manifest_name)
+    ids = list(history(table_dir))
+    if prev and isinstance(prev.get("version_id"), int):
+        ids.append(prev["version_id"])
+    version_id = max(ids) + 1 if ids else 0
+    manifest = {
+        **manifest,
+        "version_id": version_id,
+        "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
+    }
+    path = os.path.join(table_dir, manifest_name)
+    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w", encoding="utf-8") as fh:
+        json.dump(manifest, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)  # the commit point (object store: one PUT)
+    hdir = os.path.join(table_dir, HISTORY_DIR)
+    os.makedirs(hdir, exist_ok=True)
+    with open(
+        os.path.join(hdir, f"m_{version_id:08d}.json"), "w", encoding="utf-8"
+    ) as fh:
+        json.dump(manifest, fh)
+
+
+def _references(manifest_name: str, m: dict) -> set[str]:
+    """Version dirs one manifest keeps alive: a snapshot manifest points
+    at one version, a bucketed one at a version per bucket."""
+    if manifest_name == BUCKETED_MANIFEST:
+        return set(m.get("buckets", {}).values())
+    return {m.get("version")}
+
+
+def reclaim(
+    table_dir: str,
+    manifest_name: str,
+    upto: str,
+    keep_versions: int,
+    keep_history: int,
+) -> dict:
+    """The one reclaim rule (module docstring), run after a successful
+    commit and by ``vacuum`` — never part of a commit, so safe to crash
+    anywhere in here. ``upto`` is the version dir of the commit just
+    made (for ``vacuum``, the current one). Returns ``{"removed_dirs",
+    "bytes_reclaimed", "retained_versions"}``."""
+    hdir = os.path.join(table_dir, HISTORY_DIR)
+    hist = history(table_dir)
+    for vid in sorted(hist)[:-keep_history]:
+        try:
+            os.remove(os.path.join(hdir, f"m_{vid:08d}.json"))
+        except OSError:
+            pass
+        del hist[vid]
+    current = read_manifest(table_dir, manifest_name)
+    referenced = set().union(
+        *(_references(manifest_name, m) for m in [current, *hist.values()] if m)
+    )
+    candidates = sorted(
+        d
+        for d in os.listdir(table_dir)
+        if d.startswith(VERSION_PREFIX)
+        and d <= upto
+        and os.path.isdir(os.path.join(table_dir, d))
+    )
+    removed = reclaimed = 0
+    for d in candidates[:-keep_versions]:
+        if d in referenced:
+            continue
+        p = os.path.join(table_dir, d)
+        reclaimed += sum(
+            os.path.getsize(os.path.join(dp, f))
+            for dp, _dirs, fs in os.walk(p)
+            for f in fs
+        )
+        shutil.rmtree(p, ignore_errors=True)
+        removed += 1
+    return {
+        "removed_dirs": removed,
+        "bytes_reclaimed": reclaimed,
+        "retained_versions": len(referenced),
+    }
 
 
 class ParquetWarehouse:
@@ -99,16 +269,10 @@ class ParquetWarehouse:
     # manifest resolution
     # ------------------------------------------------------------------
 
-    def _manifest_path(self, name: str) -> str:
-        return os.path.join(self.table_path(name), MANIFEST_NAME)
-
     def current_version(self, name: str) -> str | None:
         """Version dir name the manifest points at, or None (plain table)."""
-        try:
-            with open(self._manifest_path(name), encoding="utf-8") as fh:
-                v = json.load(fh).get("version")
-        except (OSError, ValueError):
-            return None
+        m = read_manifest(self.table_path(name), MANIFEST_NAME)
+        v = m.get("version") if m else None
         return v if isinstance(v, str) and v.startswith(VERSION_PREFIX) else None
 
     def data_path(self, name: str) -> str:
@@ -128,29 +292,9 @@ class ParquetWarehouse:
     def exists(self, name: str) -> bool:
         return self._has_data(self.data_path(name))
 
-    def _history_manifests(self, name: str) -> dict[int, dict]:
-        """Retained committed manifests for ``name``, by version_id."""
-        hdir = os.path.join(self.table_path(name), HISTORY_DIR)
-        out: dict[int, dict] = {}
-        if not os.path.isdir(hdir):
-            return out
-        for f in os.listdir(hdir):
-            if f.startswith("m_") and f.endswith(".json"):
-                try:
-                    with open(os.path.join(hdir, f), encoding="utf-8") as fh:
-                        m = json.load(fh)
-                    out[int(m["version_id"])] = m
-                except (OSError, ValueError, KeyError):
-                    continue
-        return out
-
     def versions(self, name: str) -> list[dict]:
         """Time-travel catalog: retained commits, oldest first."""
-        hist = self._history_manifests(name)
-        return [
-            {"version_id": k, "committed_at": hist[k].get("committed_at")}
-            for k in sorted(hist)
-        ]
+        return version_catalog(self.table_path(name))
 
     def read(self, name: str, version: int | None = None) -> DataFrame:
         """Current snapshot, or the table as of commit ``version`` —
@@ -158,34 +302,13 @@ class ParquetWarehouse:
         version dir; dirs referenced by retained history survive GC)."""
         if version is None:
             return self.spark.read.parquet(self.data_path(name))
-        m = self._history_manifests(name).get(int(version))
-        if m is None:
-            raise FileNotFoundError(
-                f"version {version} of '{name}' not retained "
-                f"(keep_history={self.keep_history}; see versions())"
-            )
-        return self.spark.read.parquet(
-            os.path.join(self.table_path(name), m["version"])
-        )
+        table_dir = self.table_path(name)
+        m = retained_manifest(table_dir, version, self.keep_history)
+        return self.spark.read.parquet(os.path.join(table_dir, m["version"]))
 
     # ------------------------------------------------------------------
     # commits
     # ------------------------------------------------------------------
-
-    @staticmethod
-    def _check_not_bucketed(table_dir: str) -> None:
-        """Refuse to run the snapshot sink over a BucketedTable root:
-        ``exists()`` would report the bucketed rows missing (no top-level
-        parquet), a snapshot commit would then shadow them, and each
-        layout's GC would delete ``v_*`` dirs the other's manifest still
-        references — silent data loss both ways."""
-        if os.path.exists(os.path.join(table_dir, _BUCKETED_MANIFEST)):
-            raise ValueError(
-                f"{table_dir} is a BucketedTable (has {_BUCKETED_MANIFEST}); "
-                "refusing snapshot-layout writes over it — flip "
-                "database.layout back to 'bucketed' for this table or "
-                "migrate it into a fresh snapshot root first."
-            )
 
     @staticmethod
     def _strip_engine_cols(df: DataFrame) -> DataFrame:
@@ -193,79 +316,22 @@ class ParquetWarehouse:
         return df.drop(*drop_engine_cols) if drop_engine_cols else df
 
     def _commit_version(self, df: DataFrame, name: str) -> str:
-        """Write ``df`` as a fresh immutable version dir, then atomically
-        flip the ``_current`` pointer. Returns the committed version name.
+        """Write ``df`` as a fresh immutable version dir, flip the
+        ``_current`` pointer to it and reclaim (module docstring).
+        Returns the committed version name.
 
         ``df`` may read from the table's CURRENT files (the upsert merge
         does): the new version dir is disjoint from them, so the write
         materializes the plan before anything old is touched."""
         table_dir = self.table_path(name)
-        self._check_not_bucketed(table_dir)
+        check_layout(table_dir, MANIFEST_NAME)
         os.makedirs(table_dir, exist_ok=True)
-        version = f"{VERSION_PREFIX}{time.time_ns():020d}_{uuid.uuid4().hex[:8]}"
+        version = new_version_name()
         df.write.mode("error").parquet(os.path.join(table_dir, version))
-
-        prev_hist = self._history_manifests(name)
-        version_id = (max(prev_hist) + 1) if prev_hist else 0
-        manifest = {
-            "version": version,
-            "version_id": version_id,
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "table": name,
-        }
-        tmp = f"{self._manifest_path(name)}.tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(manifest, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        # the commit point: single small-file replace (object store: PUT)
-        os.replace(tmp, self._manifest_path(name))
-        # history AFTER the flip (a crash between flip and copy loses one
-        # time-travel entry, never current-state correctness)
-        hdir = os.path.join(table_dir, HISTORY_DIR)
-        os.makedirs(hdir, exist_ok=True)
-        with open(
-            os.path.join(hdir, f"m_{version_id:08d}.json"), "w",
-            encoding="utf-8",
-        ) as fh:
-            json.dump(manifest, fh)
-        self._gc(name, version)
-        return version
-
-    def _gc(self, name: str, current: str) -> None:
-        """Best-effort cleanup AFTER a successful commit — never part of
-        the commit itself, safe to crash anywhere in here.
-
-        Removes: committed-or-orphaned version dirs older than the
-        ``keep_versions`` newest up to ``current`` (version names sort by
-        commit wall-clock), and legacy plain-layout data files superseded
-        by the first versioned commit. Version dirs NEWER than ``current``
-        are never touched (single-writer model makes them impossible, but
-        cheap paranoia)."""
-        table_dir = self.table_path(name)
-        # rotate history beyond the retention window, then protect every
-        # version dir a retained manifest still references
-        hdir = os.path.join(table_dir, HISTORY_DIR)
-        hist = self._history_manifests(name)
-        for vid in sorted(hist)[: -self.keep_history]:
-            try:
-                os.remove(os.path.join(hdir, f"m_{vid:08d}.json"))
-            except OSError:
-                pass
-            hist.pop(vid, None)
-        referenced = {m["version"] for m in hist.values()}
-        referenced.add(current)
-        versions = sorted(
-            d
-            for d in os.listdir(table_dir)
-            if d.startswith(VERSION_PREFIX)
-            and os.path.isdir(os.path.join(table_dir, d))
+        commit_manifest(table_dir, MANIFEST_NAME, {"version": version, "table": name})
+        reclaim(
+            table_dir, MANIFEST_NAME, version, self.keep_versions, self.keep_history
         )
-        if current in versions:
-            upto = versions.index(current) + 1
-            for stale in versions[: max(0, upto - self.keep_versions)]:
-                if stale not in referenced:
-                    shutil.rmtree(os.path.join(table_dir, stale), ignore_errors=True)
         # legacy flat files from the pre-versioned layout are unreferenced
         # once a manifest exists
         for f in os.listdir(table_dir):
@@ -274,6 +340,7 @@ class ParquetWarehouse:
                     os.remove(os.path.join(table_dir, f))
                 except OSError:
                     pass
+        return version
 
     # ------------------------------------------------------------------
     # mode dispatch
@@ -288,7 +355,7 @@ class ParquetWarehouse:
             # append-only tables stay plain flat-dir (new immutable files —
             # already object-store safe); appending to a VERSIONED table
             # adds files to its current version dir
-            self._check_not_bucketed(self.table_path(name))
+            check_layout(self.table_path(name), MANIFEST_NAME)
             target = self.data_path(name)
             df.write.mode("append").parquet(target)
         elif mode == "fail":
@@ -335,7 +402,7 @@ class ParquetWarehouse:
         if [
             (f.name, f.dataType) for f in cur.schema.fields
         ] == [(f.name, f.dataType) for f in target.fields]:
-            self._check_not_bucketed(self.table_path(name))
+            check_layout(self.table_path(name), MANIFEST_NAME)
             batch.write.mode("append").parquet(self.data_path(name))
             report["rewrite"] = False
         else:
@@ -401,27 +468,30 @@ class ParquetWarehouse:
     def vacuum(self, name: str, retain_versions: int = 1) -> dict:
         """Explicit storage reclaim, independent of any commit: shrink
         the retained time-travel history to the newest
-        ``retain_versions`` committed versions (the current version is
-        always retained) and delete every version dir no retained
-        manifest references. Returns ``{"removed_dirs", "bytes_reclaimed",
-        "retained_versions"}``.
+        ``retain_versions`` commits and delete every version dir that
+        neither the current nor a retained manifest references, up to
+        the current version. Returns ``{"removed_dirs",
+        "bytes_reclaimed", "retained_versions"}``.
 
         Commit-time GC already bounds storage at ``keep_versions``; this
         is the operator a storage review runs — at 100 TB a snapshot
         table's history multiplies the table's footprint per retained
         version, and reclaim must be an explicit, auditable action
         (Delta VACUUM semantics), not a side effect of the next write.
-        Safety matches ``_gc``: the manifest flip already happened for
-        everything we delete, in-flight readers of a deleted version
-        keep their open files (POSIX) but new time-travel reads of
-        vacuumed versions fail with the retention message.
+        It is the same ``reclaim`` rule commit-time GC runs, with
+        ``keep_versions=1``: a dir newer than the current version (an
+        in-flight commit, or the orphan of a crash before its flip) is
+        never touched — the next commit's reclaim takes such an orphan.
+        In-flight readers of a deleted version keep their open files
+        (POSIX), but new time-travel reads of vacuumed versions fail with
+        the retention message.
         """
         if retain_versions < 1:
             raise ValueError(
                 f"retain_versions must be >= 1, got {retain_versions}"
             )
         table_dir = self.table_path(name)
-        self._check_not_bucketed(table_dir)
+        check_layout(table_dir, MANIFEST_NAME)
         current = self.current_version(name)
         if current is None:
             return {
@@ -429,39 +499,7 @@ class ParquetWarehouse:
                 "bytes_reclaimed": 0,
                 "retained_versions": 0,
             }
-        hdir = os.path.join(table_dir, HISTORY_DIR)
-        hist = self._history_manifests(name)
-        for vid in sorted(hist)[:-retain_versions]:
-            if hist[vid].get("version") == current:
-                continue  # never drop the manifest of the live version
-            try:
-                os.remove(os.path.join(hdir, f"m_{vid:08d}.json"))
-            except OSError:
-                pass
-            hist.pop(vid, None)
-        referenced = {m["version"] for m in hist.values()}
-        referenced.add(current)
-        removed = 0
-        reclaimed = 0
-        for d in sorted(os.listdir(table_dir)):
-            p = os.path.join(table_dir, d)
-            if (
-                d.startswith(VERSION_PREFIX)
-                and os.path.isdir(p)
-                and d not in referenced
-            ):
-                reclaimed += sum(
-                    os.path.getsize(os.path.join(dp, f))
-                    for dp, _dirs, fs in os.walk(p)
-                    for f in fs
-                )
-                shutil.rmtree(p, ignore_errors=True)
-                removed += 1
-        return {
-            "removed_dirs": removed,
-            "bytes_reclaimed": reclaimed,
-            "retained_versions": len(referenced),
-        }
+        return reclaim(table_dir, MANIFEST_NAME, current, 1, retain_versions)
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self.table_path(name), ignore_errors=True)

@@ -17,7 +17,11 @@ defining source at the end of round N):
 
 "Code at row time" for a key is hashes_r{N}[key], N the round of its
 latest driver row (the driver rows the window after the round ends,
-against final HEAD); a key whose round has no dump ranks as changed.
+against final HEAD). When round N has no dump, the newest earlier dump
+stands in (with one warning per process naming the missing file): a
+missing dump must not pin every key that round rowed to cat2, or the
+window stops rotating. A key absent from the dump it reads ranks as
+changed.
 
 A query's code identity covers: the query function's source, its
 oracle SQL STRING (generated oracles hash their output, so a generator
@@ -40,6 +44,7 @@ import json
 import os
 import re
 import sys
+import warnings
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LEDGER_GLOB = os.path.join(REPO, "CORRECTNESS_r*.json")
@@ -314,18 +319,35 @@ def ledger_state() -> dict[str, tuple[int, bool]]:
 
 def row_time_hashes(state: dict[str, tuple[int, bool]]) -> dict[str, str]:
     """key -> its code hash at its latest driver row, read from the
-    round-end dumps: hashes_r{N}[key], N = the key's last rowed round.
-    A key whose round has no dump is absent (ranks as changed)."""
+    round-end dumps: hashes_r{N}[key], N = the key's last rowed round,
+    or the newest dump before N when round N has none. A key absent
+    from that dump is absent here (ranks as changed)."""
     dumps: dict[int, dict[str, str]] = {}
     for path in glob.glob(HASHES_GLOB):
         m = re.search(r"hashes_r(\d+)\.json$", path)
         if m:
             with open(path) as fh:
                 dumps[int(m.group(1))] = json.load(fh)
+    source: dict[int, dict[str, str]] = {}
+    for rnd in sorted({rnd for rnd, _green in state.values()}):
+        earlier = [r for r in dumps if r <= rnd]
+        if not earlier:
+            continue
+        source[rnd] = dumps[max(earlier)]
+        if rnd not in dumps:
+            # the default warnings filter shows each distinct message
+            # once per process
+            missing = os.path.join(
+                os.path.dirname(HASHES_GLOB), f"hashes_r{rnd}.json"
+            )
+            warnings.warn(
+                f"{missing} is missing; rows of round {rnd} are compared "
+                f"with hashes_r{max(earlier)}.json"
+            )
     return {
-        key: dumps[rnd][key]
+        key: source[rnd][key]
         for key, (rnd, _green) in state.items()
-        if key in dumps.get(rnd, {})
+        if key in source.get(rnd, {})
     }
 
 

@@ -15,6 +15,7 @@ import pytest
 from nspc_etl_basic_spark import load_config
 from nspc_etl_basic_spark.naming import generate_table_name
 from nspc_etl_basic_spark.plans.pipeline import process_file
+from nspc_etl_basic_spark.sinks.metadata import ERROR_LOG_SCHEMA
 from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
 
 
@@ -255,6 +256,10 @@ def test_upsert_tolerant_partial(spark, tmp_path):
     ]
     err = spark.read.parquet(str(tmp_path / "wh" / "EtlJobError"))
     assert err.count() >= 1
+    # the reference's EtlJobError column contract
+    assert [(f.name, f.dataType) for f in err.schema] == [
+        (f.name, f.dataType) for f in ERROR_LOG_SCHEMA
+    ]
 
 
 def test_upsert_tolerant_threshold_rejects_file(spark, tmp_path):

@@ -1,7 +1,8 @@
 """Object-store-safe snapshot commit protocol (sinks/writer.py): versioned
 data dirs + atomic ``_current`` manifest flip. The contract under test is
 "a reader never sees a half-written snapshot" — including across a crash
-between the staging write and the pointer flip."""
+between the staging write and the pointer flip, on both the snapshot and
+the bucketed layout, which share the protocol."""
 
 from __future__ import annotations
 
@@ -10,7 +11,9 @@ import os
 
 import pytest
 
+from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
 from nspc_etl_basic_spark.sinks.writer import (
+    BUCKETED_MANIFEST,
     MANIFEST_NAME,
     ParquetWarehouse,
     TableExistsError,
@@ -25,11 +28,11 @@ def _read_ids(wh, table):
     return sorted(r.id for r in wh.read(table).collect())
 
 
-def _versions(wh, table):
+def _version_dirs(table_dir):
     return sorted(
         d
-        for d in os.listdir(wh.table_path(table))
-        if d.startswith("v_") and os.path.isdir(os.path.join(wh.table_path(table), d))
+        for d in os.listdir(table_dir)
+        if d.startswith("v_") and os.path.isdir(os.path.join(table_dir, d))
     )
 
 
@@ -38,7 +41,7 @@ def test_commit_creates_version_and_manifest(spark, tmp_path):
     wh.write(_df(spark, [(1, "a"), (2, "b")]), "t", mode="drop_recreate")
     assert wh.exists("t")
     assert _read_ids(wh, "t") == [1, 2]
-    vs = _versions(wh, "t")
+    vs = _version_dirs(wh.table_path("t"))
     assert len(vs) == 1
     with open(os.path.join(wh.table_path("t"), MANIFEST_NAME)) as fh:
         assert json.load(fh)["version"] == vs[0]
@@ -49,39 +52,78 @@ def test_snapshot_overwrite_flips_pointer_and_gc_keeps_n(spark, tmp_path):
     for i in range(4):
         wh.overwrite_snapshot(_df(spark, [(i, "x")]), "t")
     assert _read_ids(wh, "t") == [3]
-    vs = _versions(wh, "t")
+    vs = _version_dirs(wh.table_path("t"))
     assert len(vs) == 2  # current + one predecessor
     assert wh.current_version("t") == vs[-1]
 
 
-def test_crash_before_flip_leaves_old_snapshot_intact(spark, tmp_path, monkeypatch):
+def _snapshot_layout(spark, root):
+    wh = ParquetWarehouse(spark, str(root / "wh"))
+    return (
+        wh,
+        wh.table_path("t"),
+        MANIFEST_NAME,
+        lambda df: wh.overwrite_snapshot(df, "t"),
+        lambda: _read_ids(wh, "t"),
+    )
+
+
+def _bucketed_layout(spark, root):
+    t = BucketedTable(spark, str(root / "bt"), ["id"], n_buckets=2)
+    return (
+        t,
+        t.path,
+        BUCKETED_MANIFEST,
+        t.merge,
+        lambda: sorted(r.id for r in t.read().collect()),
+    )
+
+
+@pytest.mark.parametrize(
+    "layout, ids_after_next",
+    [(_snapshot_layout, [3]), (_bucketed_layout, [1, 3])],
+    ids=["snapshot", "bucketed"],
+)
+def test_crash_before_flip_leaves_old_snapshot_intact(
+    spark, tmp_path, monkeypatch, layout, ids_after_next
+):
     """Kill the writer after the staging write but before the manifest
-    flip: the reader must still resolve the previous snapshot."""
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    wh.overwrite_snapshot(_df(spark, [(1, "old")]), "t")
-    old_version = wh.current_version("t")
+    flip: the reader must still resolve the previous state, and no
+    reclaim may delete the orphan before a later commit supersedes it."""
+    table, table_dir, manifest, commit, read_ids = layout(spark, tmp_path)
+    commit(_df(spark, [(1, "old")]))
+    (old_version,) = _version_dirs(table_dir)
 
     real_replace = os.replace
 
     def crash(src, dst):
-        if os.path.basename(dst) == MANIFEST_NAME:
+        if os.path.basename(dst) == manifest:
             raise OSError("simulated crash at the commit point")
         return real_replace(src, dst)
 
     monkeypatch.setattr(os, "replace", crash)
     with pytest.raises(OSError, match="simulated crash"):
-        wh.overwrite_snapshot(_df(spark, [(2, "new")]), "t")
+        commit(_df(spark, [(2, "new")]))
     monkeypatch.undo()
 
     # the orphan staging version exists on disk, but the reader resolves
-    # the untouched previous snapshot
-    assert len(_versions(wh, "t")) == 2
-    assert wh.current_version("t") == old_version
-    assert _read_ids(wh, "t") == [1]
+    # the untouched previous state
+    orphan = [v for v in _version_dirs(table_dir) if v != old_version]
+    assert len(orphan) == 1
+    assert read_ids() == [1]
+    if manifest == MANIFEST_NAME:
+        assert table.current_version("t") == old_version
+        # the orphan is newer than the current version: it could be an
+        # in-flight commit, so vacuum leaves it
+        table.vacuum("t", retain_versions=1)
+        assert orphan[0] in _version_dirs(table_dir)
 
-    # the next successful commit supersedes the orphan and GC reclaims it
-    wh.overwrite_snapshot(_df(spark, [(3, "next")]), "t")
-    assert _read_ids(wh, "t") == [3]
+    commit(_df(spark, [(3, "next")]))
+    assert read_ids() == ids_after_next
+    if manifest == MANIFEST_NAME:
+        # once a commit supersedes it, the orphan is reclaimable
+        table.vacuum("t", retain_versions=1)
+        assert orphan[0] not in _version_dirs(table_dir)
 
 
 def test_reader_resolved_before_flip_keeps_its_files(spark, tmp_path):

@@ -14,6 +14,8 @@ import shutil
 import subprocess
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "scripts"))
 
@@ -38,10 +40,10 @@ def test_registry_covers_ranking():
     assert sorted(_RANKED) == sorted(entry.queries())
 
 
-def test_new_ledger_reorders_the_window(tmp_path, monkeypatch):
-    # a round-99 ledger rows the current window green at the current
-    # code: those 50 keys become the freshest cat3 rows and leave the
-    # window, with nothing re-emitted
+def _green_round_99(tmp_path, monkeypatch, dump_round):
+    """Real ledgers and dumps plus a round-99 ledger that rows the
+    current window green at the current code, whose hashes are dumped as
+    hashes_r{dump_round}.json. Returns the window before round 99."""
     for pattern in (window_order.LEDGER_GLOB, window_order.HASHES_GLOB):
         for path in glob.glob(pattern):
             shutil.copy(path, tmp_path)
@@ -52,7 +54,7 @@ def test_new_ledger_reorders_the_window(tmp_path, monkeypatch):
     (tmp_path / "CORRECTNESS_r99.json").write_text(
         json.dumps({k: green for k in window})
     )
-    (tmp_path / "hashes_r99.json").write_text(
+    (tmp_path / f"hashes_r{dump_round}.json").write_text(
         json.dumps({k: cur[k] for k in window})
     )
     monkeypatch.setattr(
@@ -61,10 +63,28 @@ def test_new_ledger_reorders_the_window(tmp_path, monkeypatch):
     monkeypatch.setattr(
         window_order, "HASHES_GLOB", str(tmp_path / "hashes_r*.json")
     )
+    return window
+
+
+def test_new_ledger_reorders_the_window(tmp_path, monkeypatch):
+    # a round-99 ledger rows the current window green at the current
+    # code: those 50 keys become the freshest cat3 rows and leave the
+    # window, with nothing re-emitted
+    window = _green_round_99(tmp_path, monkeypatch, dump_round=99)
     order = list(entry._ledger_ordered.__wrapped__())
     ranked, cat = window_order.compute_ranking(entry)
     assert order == ranked
     assert not set(order[: window_order.WINDOW_SIZE]) & set(window)
+    assert {cat[k] for k in window} == {"cat3"}
+
+
+def test_window_rotates_without_the_rounds_hash_dump(tmp_path, monkeypatch):
+    # round 99 has no dump: its rows are compared with the newest earlier
+    # dump (round 98 holds the same code), so the window still moves on
+    window = _green_round_99(tmp_path, monkeypatch, dump_round=98)
+    with pytest.warns(UserWarning, match="hashes_r99.json is missing"):
+        ranked, cat = window_order.compute_ranking(entry)
+    assert not set(ranked[: window_order.WINDOW_SIZE]) & set(window)
     assert {cat[k] for k in window} == {"cat3"}
 
 
