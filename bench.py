@@ -2,10 +2,16 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line {"metric", "value", "unit", "queries", "sf"}.
 
-Timing methodology: one warmup action amortizes JVM/codegen startup, then
-each query executes to completion through the `noop` datasource (full
-computation, zero serialization-to-driver cost — measures the engine, not
-collect()).
+The session comes from `build_spark`, a thin call of the engine's own
+`get_spark`, so the bench runs the SQL conf the tests verify; only master,
+shuffle partitions and the driver heap (`SPARK_DRIVER_MEM`, default 24g)
+are sized for the bench.
+
+Timing methodology: one warmup pass (`warm_up`, shared with
+scripts/microbench.py and scripts/profile_queries.py) amortizes
+JVM/codegen startup, then each query executes to completion through the
+`noop` datasource (full computation, zero serialization-to-driver cost —
+measures the engine, not collect()).
 
 Telemetry (round 13, purely additive — no timing change): /proc/stat
 CPU-tick deltas are sampled around every timed query and the whole run,
@@ -27,9 +33,8 @@ import os
 import re
 import time
 
-from pyspark.sql import SparkSession
-
 import __spark_entry__ as entrymod
+from nspc_etl_basic_spark.session import get_spark
 
 
 def _cpu_ticks() -> tuple[int, int, int]:
@@ -53,19 +58,32 @@ def _ppm(delta_part: int, delta_total: int) -> int:
     return round(1_000_000 * delta_part / delta_total) if delta_total else 0
 
 
-def build_spark(cpus: int) -> SparkSession:
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("nspc-etl-basic-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+def build_spark(cpus: int):
+    return get_spark(
+        app_name="nspc-etl-basic-spark-bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
+        extra_conf={"spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "24g")},
     )
+
+
+def warm_up(spark, sf_dir: str, names) -> None:
+    """JVM + whole-stage-codegen JIT + parquet footer caches. Run each named
+    query once at sf0.001 (the sibling of `sf_dir`, else `sf_dir` itself)
+    so each plan's generated code is compiled before timing — the timed
+    pass then measures steady-state engine throughput (the 100 TB-relevant
+    number), not one-time JIT."""
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    if not os.path.isdir(warm_dir):
+        warm_dir = sf_dir
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    qs = entrymod.queries()
+    for name in names:
+        try:
+            qs[name](spark, warm_dir).write.mode("overwrite").format("noop").save()
+        except Exception:  # noqa: BLE001 — warmup must never fail the bench
+            pass
+    spark.catalog.clearCache()
 
 
 def main() -> None:
@@ -77,38 +95,21 @@ def main() -> None:
     spark = build_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warmup: JVM + whole-stage-codegen JIT + parquet footer caches. Run
-    # every query once at the smallest SF so each plan's generated code is
-    # compiled before timing — the timed pass then measures steady-state
-    # engine throughput (the 100 TB-relevant number), not one-time JIT.
-    warm_dir = "/root/testdata/sf0.001"
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    warm_subset_raw = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "").strip()
-    warm_subset = {q.strip() for q in warm_subset_raw.split(",") if q.strip()}
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    for _name, fn in entrymod.queries().items():
-        if warm_subset and _name not in warm_subset:
-            continue
-        try:
-            fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
-        except Exception:  # noqa: BLE001 — warmup must never fail the bench
-            pass
-    spark.catalog.clearCache()
+    qs = entrymod.queries()
+    subset_raw = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "").strip()
+    subset = {q.strip() for q in subset_raw.split(",") if q.strip()}
+    names = [n for n in qs if not subset or n in subset]
+    warm_up(spark, sf_dir, names)
 
     # best-of-N timing: single-shot runs at this scale are dominated by
     # GC/page-cache noise (observed ±2x swings on individual queries); the
     # minimum over repeats is the stable engine-throughput estimate
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2"))
-    subset_raw = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "").strip()
-    subset = {q.strip() for q in subset_raw.split(",") if q.strip()}
     timings: dict[str, object] = {}
     errors: dict[str, str] = {}
     steal_by_query: dict[str, int] = {}
     run_t0 = _cpu_ticks()
-    for name, fn in entrymod.queries().items():
-        if subset and name not in subset:
-            continue
+    for name in names:
         best = float("inf")
         q_t0 = _cpu_ticks()
         # per-query isolation: one broken plan must never zero the whole
@@ -116,7 +117,7 @@ def main() -> None:
         try:
             for _ in range(max(1, repeats)):
                 t0 = time.monotonic()
-                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+                qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
                 best = min(best, time.monotonic() - t0)
             timings[name] = round(best, 3)
         except Exception as exc:  # noqa: BLE001

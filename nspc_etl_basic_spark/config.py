@@ -3,8 +3,9 @@
 The reference consumes a YAML file (reference ``src/loader_config.yaml:1-75``)
 with sections ``database / loader / ddl / logging / job_statistics /
 error_logging / batch_processing / tables / email_notifications``. We accept
-the same shape so reference configs work unchanged, add a ``spark`` section
-for engine tuning, and default everything so an empty config is valid.
+the same shape so reference configs work unchanged and default everything so
+an empty config is valid. Session tuning is done through ``get_spark``'s
+arguments, not here; unknown sections (an old ``spark`` one) load unchanged.
 """
 
 from __future__ import annotations
@@ -74,10 +75,6 @@ DEFAULT_CONFIG: dict[str, Any] = {
     # failed-row logs/<stem>_<jobid>.txt, reference loader.py:69-101, 1049)
     "logging": {"enabled": True},
     "email_notifications": {"enabled": False},
-    "spark": {
-        "shuffle_partitions": None,  # None -> leave session default / AQE
-        "broadcast_threshold_rows": 1_000_000,
-    },
 }
 
 

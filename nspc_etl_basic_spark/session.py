@@ -1,8 +1,12 @@
-"""SparkSession factory tuned for this engine.
+"""The one SparkSession factory: the CLI, the tests, ``bench.py``,
+perfbench and the scripts all build their session here, so every caller
+runs the SQL conf the tests verify.
 
-Scale stance: AQE on (runtime re-plan, skew-join splitting, partition
-coalescing), Arrow on (fast Pandas-UDF interchange), and a shuffle-partition
-count that callers size to their cluster. On a real 1000-executor cluster the
+Scale stance: AQE, partition coalescing and skew-join splitting are
+Spark's defaults and stay on; the shuffle-partition count is sized by the
+caller to its cluster. The Arrow flag speeds only ``toPandas`` and
+``createDataFrame`` from pandas; the ``mapInPandas``/``applyInPandas``
+kernels use Arrow whatever it says. On a real 1000-executor cluster the
 same builder applies — only master/shuffle sizing change.
 """
 
@@ -30,9 +34,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # bad timestamp parses must yield NULL, not error (SURVEY §2 B3)

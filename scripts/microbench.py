@@ -17,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from bench import build_spark  # noqa: E402
+from bench import build_spark, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -28,16 +28,7 @@ def main() -> None:
     spark = build_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-    warm_dir = "/root/testdata/sf0.001"
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    for name in names:
-        try:
-            qs[name](spark, warm_dir).write.mode("overwrite").format("noop").save()
-        except Exception:  # noqa: BLE001
-            pass
-    spark.catalog.clearCache()
+    warm_up(spark, sf_dir, names)
     out = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"microbench:{name}")

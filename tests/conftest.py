@@ -10,7 +10,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from nspc_etl_basic_spark.session import get_spark  # noqa: E402
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -136,16 +136,9 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[8]")
-        .appName("nspc-etl-basic-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    # the engine's own factory: master and shuffle partitions follow
+    # SPARK_GRAFT_CPUS, so the suite verifies the conf the loader ships with
+    s = get_spark(app_name="nspc-etl-basic-spark-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

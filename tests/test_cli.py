@@ -14,13 +14,22 @@ from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _sql_conf(spark) -> dict:
+    return {k: v for k, v in spark.conf.getAll.items() if k.startswith("spark.sql.")}
+
+
 def test_cli_single_file_exit_codes(spark, tmp_path):
-    # main() calls get_spark() -> getOrCreate() reuses the fixture session
+    # main() calls get_spark() -> getOrCreate(), which re-applies its SQL
+    # conf to the live fixture session. The fixture comes from the same
+    # factory, so nothing may move: a drift here would run every later
+    # test in the session under a conf other than the one it started with.
+    conf_before = _sql_conf(spark)
     src = tmp_path / "sales.csv"
     src.write_text("id,amount\n1,10.5\n2,7\n")
     wh = str(tmp_path / "wh")
     rc = main([str(src), "--warehouse", wh, "--no-move"])
     assert rc == 0
+    assert _sql_conf(spark) == conf_before
     rows = ParquetWarehouse(spark, wh).read("sales_csv").orderBy("id").collect()
     assert [(r.id, float(r.amount)) for r in rows] == [(1, 10.5), (2, 7.0)]
 
