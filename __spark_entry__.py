@@ -1036,8 +1036,8 @@ def _dedup_tier(
     Every driver query must stay self-contained for its oracle — this
     does NOT relax that: the cache key is the documents parquet's
     mtime+size plus ``_replay_code_hash`` over operators/dedup.py and
-    this builder (the streaming-replay precedent at
-    ``_replay_work_dir``), so any change to the data or to any code
+    this builder (``_build_once``, the protocol every cached tree
+    shares), so any change to the data or to any code
     that could change a value rebuilds the tier; a cached read can
     never disagree with a from-scratch run. Before this cache the r7
     bench spent ~29 s re-deriving this exact result five times.
@@ -1049,11 +1049,7 @@ def _dedup_tier(
 
     from nspc_etl_basic_spark.operators import dedup as _dedup_mod
 
-    code = _replay_code_hash(_dedup_mod, _dedup_tier, _docs_wide)
-    work, done = _replay_work_dir(sf_dir, "deduptier", "documents", code)
-    cand_path = os.path.join(work, "cand")
-    comp_path = os.path.join(work, "comp")
-    if not os.path.exists(done):
+    def build(work: str) -> None:
         from nspc_etl_basic_spark.operators.dedup import neardup_components
 
         docs = _docs_wide(spark, sf_dir)
@@ -1062,12 +1058,18 @@ def _dedup_tier(
         cand.count()
         sigs.unpersist()
         comp = neardup_components(_t(spark, sf_dir, "documents"), cand)
-        cand.write.mode("overwrite").parquet(cand_path)
-        comp.write.mode("overwrite").parquet(comp_path)
+        cand.write.parquet(os.path.join(work, "cand"))
+        comp.write.parquet(os.path.join(work, "comp"))
         cand.unpersist()
-        with open(done, "w"):
-            pass
-    return spark.read.parquet(cand_path), spark.read.parquet(comp_path)
+
+    work = _build_once(
+        sf_dir, "deduptier", "documents",
+        (_dedup_mod, _dedup_tier, _docs_wide), build,
+    )
+    return (
+        spark.read.parquet(os.path.join(work, "cand")),
+        spark.read.parquet(os.path.join(work, "comp")),
+    )
 
 
 def _dedup_tier90(
@@ -1085,11 +1087,7 @@ def _dedup_tier90(
 
     from nspc_etl_basic_spark.operators import dedup as _dedup_mod
 
-    code = _replay_code_hash(_dedup_mod, _dedup_tier90, _docs_wide)
-    work, done = _replay_work_dir(sf_dir, "deduptier90", "documents", code)
-    store_path = os.path.join(work, "store")
-    comp_path = os.path.join(work, "comp")
-    if not os.path.exists(done):
+    def build(work: str) -> None:
         from nspc_etl_basic_spark.operators.dedup import (
             build_band_store,
             neardup_components,
@@ -1100,13 +1098,19 @@ def _dedup_tier90(
         old_pairs = lsh_candidate_pairs(csigs).cache()
         old_pairs.count()
         existing = neardup_components(corpus.select("doc_id"), old_pairs)
-        build_band_store(csigs).write.mode("overwrite").parquet(store_path)
-        existing.write.mode("overwrite").parquet(comp_path)
+        build_band_store(csigs).write.parquet(os.path.join(work, "store"))
+        existing.write.parquet(os.path.join(work, "comp"))
         old_pairs.unpersist()
         csigs.unpersist()
-        with open(done, "w"):
-            pass
-    return spark.read.parquet(store_path), spark.read.parquet(comp_path)
+
+    work = _build_once(
+        sf_dir, "deduptier90", "documents",
+        (_dedup_mod, _dedup_tier90, _docs_wide), build,
+    )
+    return (
+        spark.read.parquet(os.path.join(work, "store")),
+        spark.read.parquet(os.path.join(work, "comp")),
+    )
 
 
 def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2783,34 +2787,31 @@ def _trained_codebooks(spark: SparkSession, sf_dir: str):
     replay. Returns ``(centroids, pq_codebooks)``."""
     import json
     import os
-    import shutil
 
     from nspc_etl_basic_spark.operators import pq as _pq_m
     from nspc_etl_basic_spark.operators import similarity as _sim_m
 
-    code = _replay_code_hash(_trained_codebooks, _t, _sim_m, _pq_m)
-    work, done = _replay_work_dir(sf_dir, "codebooks16", "embeddings", code)
-    path = os.path.join(work, "codebooks.json")
-    if not os.path.exists(done):
+    def build(work: str) -> None:
         from nspc_etl_basic_spark.operators.pq import train_pq_codebooks
         from nspc_etl_basic_spark.operators.similarity import (
             train_ivf_centroids,
         )
 
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
         emb = _t(spark, sf_dir, "embeddings")
         cents = train_ivf_centroids(emb, n_cells=16, n_iter=3)
         books = train_pq_codebooks(emb, m=16, k=16, n_iter=3)
-        with open(path, "w") as fh:
+        with open(os.path.join(work, "codebooks.json"), "w") as fh:
             json.dump(
                 {"ivf": [[cid, list(vec)] for cid, vec in cents],
                  "pq": books},
                 fh,
             )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    with open(path) as fh:
+
+    work = _build_once(
+        sf_dir, "codebooks16", "embeddings",
+        (_trained_codebooks, _t, _sim_m, _pq_m), build,
+    )
+    with open(os.path.join(work, "codebooks.json")) as fh:
         blob = json.load(fh)
     cents = [
         (int(cid), [float(x) for x in vec]) for cid, vec in blob["ivf"]
@@ -2837,35 +2838,31 @@ def _residual_codebooks(spark: SparkSession, sf_dir: str):
     ``(centroids, residual_codebooks)``."""
     import json
     import os
-    import shutil
 
     from nspc_etl_basic_spark.operators import pq as _pq_m
     from nspc_etl_basic_spark.operators import similarity as _sim_m
 
     cents, _raw_books = _trained_codebooks(spark, sf_dir)
-    code = _replay_code_hash(
-        _residual_codebooks, _trained_codebooks, _t, _sim_m, _pq_m
-    )
-    work, done = _replay_work_dir(sf_dir, "residbooks16", "embeddings", code)
-    path = os.path.join(work, "books.json")
-    if not os.path.exists(done):
+
+    def build(work: str) -> None:
         from nspc_etl_basic_spark.operators.pq import (
             ivf_residual_frame,
             train_pq_codebooks,
         )
 
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
         emb = _t(spark, sf_dir, "embeddings")
         resid = ivf_residual_frame(emb, cents)
         books = train_pq_codebooks(
             resid, m=16, k=16, n_iter=3, vec_col="__resid", id_col="vec_id"
         )
-        with open(path, "w") as fh:
+        with open(os.path.join(work, "books.json"), "w") as fh:
             json.dump(books, fh)
-        with open(done, "w") as fh:
-            fh.write("ok")
-    with open(path) as fh:
+
+    work = _build_once(
+        sf_dir, "residbooks16", "embeddings",
+        (_residual_codebooks, _trained_codebooks, _t, _sim_m, _pq_m), build,
+    )
+    with open(os.path.join(work, "books.json")) as fh:
         books = [
             [[float(x) for x in cent] for cent in sub]
             for sub in json.load(fh)
@@ -2897,17 +2894,10 @@ def _semdedup_base90(spark: SparkSession, sf_dir: str):
     from-scratch run, and the query's oracle stays the full replay."""
     import json
     import os
-    import shutil
 
     from nspc_etl_basic_spark.operators import semdedup as _sd_m
 
-    code = _replay_code_hash(_semdedup_base90, _t, _sd_m)
-    work, done = _replay_work_dir(
-        sf_dir, "semdedupbase90", "embeddings", code
-    )
-    cents_path = os.path.join(work, "cents.json")
-    table_path = os.path.join(work, "base")
-    if not os.path.exists(done):
+    def build(work: str) -> None:
         from nspc_etl_basic_spark.operators.semdedup import (
             _assign_cells,
             semantic_dedup,
@@ -2916,8 +2906,6 @@ def _semdedup_base90(spark: SparkSession, sf_dir: str):
             train_ivf_centroids,
         )
 
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
         base = _t(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") % 10 != 0
         )
@@ -2929,16 +2917,19 @@ def _semdedup_base90(spark: SparkSession, sf_dir: str):
         # the assignment semantic_dedup computed internally
         _assign_cells(base, cents, "vec_id", "embedding").join(
             labels, "vec_id"
-        ).write.mode("overwrite").parquet(table_path)
-        with open(cents_path, "w") as fh:
+        ).write.parquet(os.path.join(work, "base"))
+        with open(os.path.join(work, "cents.json"), "w") as fh:
             json.dump([[cid, list(vec)] for cid, vec in cents], fh)
-        with open(done, "w") as fh:
-            fh.write("ok")
-    with open(cents_path) as fh:
+
+    work = _build_once(
+        sf_dir, "semdedupbase90", "embeddings",
+        (_semdedup_base90, _t, _sd_m), build,
+    )
+    with open(os.path.join(work, "cents.json")) as fh:
         cents = [
             (int(cid), [float(x) for x in vec]) for cid, vec in json.load(fh)
         ]
-    return cents, spark.read.parquet(table_path)
+    return cents, spark.read.parquet(os.path.join(work, "base"))
 
 
 def corpus_semantic_dedup_auto_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3998,16 +3989,11 @@ def _tt_fixture(spark: SparkSession, sf_dir: str):
     """The shared two-version BucketedTable fixture (customer balances
     in cents): v0 = keys ``c_custkey % 7 < 3``; v1 = differential merge
     of inserts ``% 7 IN (3,4)`` + updates ``% 7 == 0`` at +1000.00.
-    Deterministic work dir per SOURCE identity (mtime+size — regenerated
-    testdata must invalidate the cached table or the oracle, which
-    replays the new parquet, would red a correct engine); built
-    privately and atomically renamed into place so a concurrent builder
-    cannot half-overwrite a table another reader is using."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    Built once per (source, code) identity by ``_build_once`` —
+    regenerated testdata or an edit to BucketedTable rebuilds it, else
+    the oracle, which replays the new parquet, would check a table the
+    current code never wrote."""
+    from nspc_etl_basic_spark.sinks import bucketed_merge as _bm_m
     from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
 
     cust = _t(spark, sf_dir, "customer")
@@ -4022,29 +4008,15 @@ def _tt_fixture(spark: SparkSession, sf_dir: str):
         "c_custkey", (cents + 100000).alias("bal_cents")
     )
 
-    try:
-        st = os.stat(os.path.join(sf_dir, "customer.parquet"))
-        fp = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
-    except OSError:
-        fp = sf_dir
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"nspc_tt_{hashlib.md5(fp.encode()).hexdigest()[:12]}",
-    )
-    t = BucketedTable(spark, work, ["c_custkey"], n_buckets=16)
-    if not (t.exists() and len(t.versions()) >= 2):
-        build = tempfile.mkdtemp(prefix="nspc_tt_build_")
-        os.rmdir(build)
-        tb = BucketedTable(spark, build, ["c_custkey"], n_buckets=16)
-        tb.init(base)
-        tb.merge(inserts.unionByName(updates))
-        try:
-            shutil.rmtree(work, ignore_errors=True)
-            os.rename(build, work)
-        except OSError:
-            work = build  # lost the rename race: use the private copy
+    def build(work: str) -> None:
         t = BucketedTable(spark, work, ["c_custkey"], n_buckets=16)
-    return t
+        t.init(base)
+        t.merge(inserts.unionByName(updates))
+
+    work = _build_once(
+        sf_dir, "tt", "customer", (_tt_fixture, _t, _bm_m), build
+    )
+    return BucketedTable(spark, work, ["c_custkey"], n_buckets=16)
 
 
 def bucketed_time_travel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4429,46 +4401,27 @@ def warehouse_file_prune_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta/Iceberg manifest-pruning pattern; at 100 TB the win is not
     bytes but per-file scheduling). The oracle replays the range filter
     straight off the source parquet, so a pruning bug that drops a
-    matching file reds the row. Work dir is deterministic per source
-    fingerprint and reused (same scheme as bucketed_time_travel_q)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from nspc_etl_basic_spark.sinks.stats_index import load_stats_index
+    matching file reds the row. The table is built once per (source,
+    code) identity by ``_build_once`` and reused."""
+    from nspc_etl_basic_spark.sinks import stats_index as _si_m
+    from nspc_etl_basic_spark.sinks import writer as _writer_m
     from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
 
-    cust = _t(spark, sf_dir, "customer")
-    try:
-        st = os.stat(os.path.join(sf_dir, "customer.parquet"))
-        fp = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
-    except OSError:
-        fp = sf_dir
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"nspc_fp_{hashlib.md5(fp.encode()).hexdigest()[:12]}",
-    )
-    wh = ParquetWarehouse(spark, work)
-    if not (
-        wh.exists("customer")
-        and load_stats_index(wh.data_path("customer")) is not None
-    ):
-        build = tempfile.mkdtemp(prefix="nspc_fp_build_")
-        bwh = ParquetWarehouse(spark, build)
-        bwh.write(
-            cust.repartitionByRange(8, "c_custkey").sortWithinPartitions(
-                "c_custkey"
-            ),
+    def build(work: str) -> None:
+        wh = ParquetWarehouse(spark, work)
+        wh.write(
+            _t(spark, sf_dir, "customer")
+            .repartitionByRange(8, "c_custkey")
+            .sortWithinPartitions("c_custkey"),
             "customer",
         )
-        bwh.analyze("customer", ["c_custkey"])
-        try:
-            shutil.rmtree(work, ignore_errors=True)
-            os.rename(build, work)
-        except OSError:
-            work = build
-        wh = ParquetWarehouse(spark, work)
+        wh.analyze("customer", ["c_custkey"])
+
+    work = _build_once(
+        sf_dir, "fp", "customer",
+        (warehouse_file_prune_q, _t, _writer_m, _si_m), build,
+    )
+    wh = ParquetWarehouse(spark, work)
     return wh.read_pruned("customer", "c_custkey", 50, 120).select(
         "c_custkey",
         "c_name",
@@ -5194,19 +5147,16 @@ def text_bpe_fertility_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     which is NOT the batch operator's whole-corpus answer; the oracle
 #     replays the per-slice cumulative scoring with a window sum.
 #
-# Work dirs are deterministic per (source fingerprint, tag) and reused
-# when a completed build is present (same rationale as
-# bucketed_time_travel_q: repeated bench/correctness runs measure the
-# end-state read, and /tmp doesn't grow per invocation). A missing
-# _DONE marker means a half-built tree: it is removed and rebuilt.
+# Each replay's tree is built once per (source identity, code identity)
+# by ``_build_once`` and reused afterwards (same rationale as the corpus
+# assets: repeated bench/correctness runs measure the end-state read,
+# and /tmp doesn't grow per invocation).
 # ---------------------------------------------------------------------------
-
-_REPLAY_SLICES = 3
 
 
 def _replay_code_hash(*objs) -> str:
-    """md5 over the SOURCE CODE that defines a replay: the shared
-    slicing/drain helpers, the query function, and the TRANSITIVE
+    """md5 over the SOURCE CODE that defines a cached tree: the shared
+    build/slicing/drain helpers, the query function, and the TRANSITIVE
     closure of nspc modules reachable from the modules passed in — a
     streaming facade's semantics live in the operator modules it calls
     (streaming/mv.py folds via operators/merge.py + operators/mv.py),
@@ -5221,7 +5171,11 @@ def _replay_code_hash(*objs) -> str:
 
     h = hashlib.md5()
     work: list = []
-    for obj in (_time_tercile_bounds, _replay_slices, _drain_slices) + objs:
+    shared = (
+        _build_once, _tercile_key, _tercile_bounds, _replay_slices,
+        _drain_slices,
+    )
+    for obj in shared + objs:
         if isinstance(obj, _types.ModuleType):
             work.append(obj)
         else:
@@ -5251,33 +5205,43 @@ def _replay_code_hash(*objs) -> str:
     return h.hexdigest()[:12]
 
 
-def _replay_work_dir(
-    sf_dir: str, tag: str, table: str, code: str
-) -> tuple[str, str]:
-    """Deterministic work dir for a streaming replay build, keyed on the
-    SOURCE parquet's identity (mtime+size — regenerated testdata must
-    invalidate stale state) plus a code-identity hash from
-    ``_replay_code_hash`` so a semantics change in the replay
-    invalidates old trees without anyone remembering to bump a token.
-    Sibling dirs for the same (tag, sf) with a different hash are stale
-    by construction and removed here, as are legacy pre-code-hash dirs
-    (``nspc_replay_<tag>_<12hex>``), so /tmp stays bounded and a stale
-    tree can never be read even by an older binary.
+def _build_once(
+    sf_dir: str,
+    tag: str,
+    table: str,
+    deps: tuple,
+    build: Callable[[str], None],
+) -> str:
+    """The work dir of a cached tree (a streaming replay's end state, a
+    corpus asset, a table fixture), built on first use and reused while
+    its key holds.
 
-    Concurrency guard: a sibling is only swept when it is FINISHED
-    (contains ``_DONE``) or abandoned (untouched for over an hour).
-    Two drivers from different checkouts sharing /tmp (the round-N
-    worktree flow) would otherwise rmtree each other's in-progress
-    builds mid-write — the victim's ``_DONE`` check happens before the
-    other process's sweep, so a partially deleted warehouse could be
-    read without error."""
+    Key: the SOURCE parquet's identity (mtime+size — regenerated
+    testdata must invalidate the tree) plus ``_replay_code_hash(*deps)``,
+    so a semantics change in the builder or any module it reaches
+    re-keys the tree without anyone bumping a token.
+
+    Protocol: ``build(path)`` writes the tree into a private dir, which
+    is then renamed onto the keyed path, so a keyed dir is complete by
+    construction. A build that raises leaves nothing behind. If another
+    driver published the same key meanwhile, its tree is used and the
+    private copy dropped. A build must record only paths relative to
+    its dir (warehouse manifests and stats sidecars do); a file sink's
+    commit log records absolute ones, hence ``_read_file_sink``.
+
+    Sweep: once the keyed tree exists, every other keyed tree of the
+    same (tag, sf) is stale and removed, and so are finished trees of
+    the earlier layouts (``_DONE``-marked ``nspc_replay_*`` dirs and the
+    renamed ``nspc_tt_*`` / ``nspc_fp_*`` fixtures). Private build dirs
+    are never swept, so two drivers from different checkouts that share
+    the temp dir never delete each other's build in progress."""
     import glob
     import hashlib
     import os
     import shutil
     import tempfile
-    import time
 
+    code = _replay_code_hash(*deps)
     try:
         st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
         fp = f"{sf_dir}|{table}|{st.st_mtime_ns}|{st.st_size}|{tag}|{code}"
@@ -5285,67 +5249,75 @@ def _replay_work_dir(
         fp = f"{sf_dir}|{table}|{tag}|{code}"
     tmp = tempfile.gettempdir()
     sf_name = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    prefix = f"nspc_replay_{tag}_{sf_name}_"
+    prefix = f"nspc_asset_{tag}_{sf_name}_"
     work = os.path.join(
         tmp, prefix + hashlib.md5(fp.encode()).hexdigest()[:12]
     )
-
-    def _sweepable(path: str) -> bool:
-        if os.path.exists(os.path.join(path, "_DONE")):
-            return True
-        # abandoned-build heuristic must use the NEWEST mtime in the
-        # tree: deep Spark writes never touch the top-level dir's
-        # mtime, so a top-level check would sweep a live build that has
-        # been legitimately writing nested files for an hour. Replay
-        # trees are small (hundreds of files), so the walk is cheap.
-        newest = 0.0
+    if not os.path.isdir(work):
+        private = tempfile.mkdtemp(prefix=f"nspc_build_{tag}_{sf_name}_")
         try:
-            for root, _dirs, files in os.walk(path):
-                for name in files:
-                    try:
-                        newest = max(
-                            newest,
-                            os.path.getmtime(os.path.join(root, name)),
-                        )
-                    except OSError:
-                        pass
-                newest = max(newest, os.path.getmtime(root))
-        except OSError:
-            return False
-        return newest > 0 and time.time() - newest > 3600
-
-    for stale in glob.glob(os.path.join(tmp, prefix + "*")):
-        if stale != work and _sweepable(stale):
-            shutil.rmtree(stale, ignore_errors=True)
-    for legacy in glob.glob(
-        os.path.join(tmp, f"nspc_replay_{tag}_" + "[0-9a-f]" * 12)
-    ):
-        if _sweepable(legacy):
-            shutil.rmtree(legacy, ignore_errors=True)
-    return work, os.path.join(work, "_DONE")
+            build(private)
+            try:
+                os.rename(private, work)
+            except OSError:
+                if not os.path.isdir(work):
+                    raise
+        finally:
+            shutil.rmtree(private, ignore_errors=True)
+    hex12 = "[0-9a-f]" * 12
+    stale = [
+        p for p in glob.glob(os.path.join(tmp, prefix + hex12)) if p != work
+    ]
+    stale += [
+        p for p in glob.glob(os.path.join(tmp, "nspc_replay_*"))
+        if os.path.exists(os.path.join(p, "_DONE"))
+    ]
+    for legacy in ("nspc_tt_", "nspc_fp_"):
+        stale += glob.glob(os.path.join(tmp, legacy + hex12))
+    for p in stale:
+        shutil.rmtree(p, ignore_errors=True)
+    return work
 
 
-def _time_tercile_bounds(df: DataFrame, ts_col: str) -> tuple[int, int]:
-    """Two integer-µs cut points splitting [min, max] into three
-    contiguous ranges: b1 = lo + span//3, b2 = lo + 2*(span//3) with
-    span = hi - lo + 1. Pure integer arithmetic so the oracle recomputes
-    the identical cuts from the same table. The timestamp cast admits
+def _read_file_sink(spark: SparkSession, path: str) -> DataFrame:
+    """A file sink's output read from its part files. The sink's
+    ``_spark_metadata`` log holds absolute paths into the private build
+    dir that ``_build_once`` renamed away; a finished drain left exactly
+    the committed part files in ``path``."""
+    import os
+
+    return spark.read.parquet(os.path.join(path, "part-*"))
+
+
+def _tercile_key(df: DataFrame, col: str):
+    """The integer a replay slices on: an integral column as is, a
+    timestamp or date column as epoch µs. The timestamp cast admits
     TIMESTAMP_NTZ parquet columns; the session tz is pinned UTC, so it
     is value-preserving and matches DuckDB's tz-free epoch_us."""
-    row = df.agg(
-        F.min(F.unix_micros(F.col(ts_col).cast("timestamp"))).alias("lo"),
-        F.max(F.unix_micros(F.col(ts_col).cast("timestamp"))).alias("hi"),
-    ).first()
+    from pyspark.sql.types import IntegralType
+
+    if isinstance(df.schema[col].dataType, IntegralType):
+        return F.col(col)
+    return F.unix_micros(F.col(col).cast("timestamp"))
+
+
+def _tercile_bounds(df: DataFrame, col: str) -> tuple[int, int]:
+    """Two integer cut points splitting [min, max] of ``_tercile_key``
+    into three contiguous ranges: b1 = lo + span//3, b2 = lo +
+    2*(span//3) with span = hi - lo + 1. Pure integer arithmetic so the
+    oracle recomputes the identical cuts from the same table."""
+    key = _tercile_key(df, col)
+    row = df.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
     lo, hi = int(row["lo"]), int(row["hi"])
     third = (hi - lo + 1) // 3
     return lo + third, lo + 2 * third
 
 
-def _replay_slices(df: DataFrame, ts_col: str) -> list[DataFrame]:
-    b1, b2 = _time_tercile_bounds(df, ts_col)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    return [df.where(us < b1), df.where((us >= b1) & (us < b2)),
-            df.where(us >= b2)]
+def _replay_slices(df: DataFrame, col: str) -> list[DataFrame]:
+    b1, b2 = _tercile_bounds(df, col)
+    key = _tercile_key(df, col)
+    return [df.where(key < b1), df.where((key >= b1) & (key < b2)),
+            df.where(key >= b2)]
 
 
 def _drain_slices(spark, slices, src: str, run_one) -> None:
@@ -5370,7 +5342,6 @@ def stream_scd2_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-order assumption, under which the streamed fold equals the full
     rebuild — the oracle IS the batch scd2_apply rebuild SQL."""
     import os
-    import shutil
 
     from nspc_etl_basic_spark.sinks import writer as _writer_m
     from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
@@ -5381,13 +5352,8 @@ def stream_scd2_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "o_orderdate", "o_orderstatus", "o_orderpriority",
         "o_orderkey",
     )
-    work, done = _replay_work_dir(
-        sf_dir, "scd2", "orders",
-        code=_replay_code_hash(stream_scd2_replay_q, _scd_m, _writer_m),
-    )
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
+
+    def build(work: str) -> None:
         wh = ParquetWarehouse(spark, os.path.join(work, "wh"))
         _drain_slices(
             spark,
@@ -5401,8 +5367,11 @@ def stream_scd2_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dedup_order_col="o_orderkey",
             ),
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    work = _build_once(
+        sf_dir, "scd2", "orders",
+        (stream_scd2_replay_q, _scd_m, _writer_m), build,
+    )
     wh = ParquetWarehouse(spark, os.path.join(work, "wh"))
     return wh.read("dim_customer_orders").select(
         "o_custkey", "o_orderstatus", "o_orderpriority",
@@ -5421,7 +5390,6 @@ def stream_cdc_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-batch last-wins picks max o_orderkey per key (the order
     column is unique, so the content tie-break never fires)."""
     import os
-    import shutil
 
     from pyspark.sql.window import Window as _W
 
@@ -5433,13 +5401,8 @@ def stream_cdc_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = _t(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_orderstatus", "o_orderkey"
     )
-    work, done = _replay_work_dir(
-        sf_dir, "cdc", "orders",
-        code=_replay_code_hash(stream_cdc_replay_q, _ingest_m, _writer_m),
-    )
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
+
+    def build(work: str) -> None:
         wh = ParquetWarehouse(spark, os.path.join(work, "wh"))
         _drain_slices(
             spark,
@@ -5451,8 +5414,11 @@ def stream_cdc_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dedup_order_col="o_orderkey",
             ),
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    work = _build_once(
+        sf_dir, "cdc", "orders",
+        (stream_cdc_replay_q, _ingest_m, _writer_m), build,
+    )
     wh = ParquetWarehouse(spark, os.path.join(work, "wh"))
     ch = wh.read("cust_latest_changes")
     return ch.select(
@@ -5471,7 +5437,6 @@ def stream_mv_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle does exactly that: last-wins per key by (slice DESC,
     o_orderkey DESC), then GROUP BY status."""
     import os
-    import shutil
 
     from nspc_etl_basic_spark.sinks import writer as _writer_m
     from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
@@ -5482,13 +5447,8 @@ def stream_mv_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "o_orderdate", "o_orderstatus", "o_orderkey",
         "o_totalprice",
     )
-    work, done = _replay_work_dir(
-        sf_dir, "mv", "orders",
-        code=_replay_code_hash(stream_mv_replay_q, _mv_m, _writer_m),
-    )
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
+
+    def build(work: str) -> None:
         wh = ParquetWarehouse(spark, os.path.join(work, "wh"))
         _drain_slices(
             spark,
@@ -5502,8 +5462,11 @@ def stream_mv_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dedup_order_col="o_orderkey",
             ),
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    work = _build_once(
+        sf_dir, "mv", "orders",
+        (stream_mv_replay_q, _mv_m, _writer_m), build,
+    )
     wh = ParquetWarehouse(spark, os.path.join(work, "wh"))
     return wh.read("cust_mv").select(
         "o_orderstatus",
@@ -5524,7 +5487,6 @@ def stream_dedup_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct events — the oracle is a plain SELECT over the source
     table. A failed dedup shows up as doubled rows_match."""
     import os
-    import shutil
 
     from nspc_etl_basic_spark.streaming import dedup as _sdedup_m
     from nspc_etl_basic_spark.streaming import ingest as _ingest_m
@@ -5535,14 +5497,9 @@ def stream_dedup_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     feed = ev.unionByName(ev)
-    work, done = _replay_work_dir(
-        sf_dir, "dedupstream", "events",
-        code=_replay_code_hash(stream_dedup_replay_q, _sdedup_m, _ingest_m),
-    )
-    sink = os.path.join(work, "out")
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
+
+    def build(work: str) -> None:
+        sink = os.path.join(work, "out")
         _drain_slices(
             spark,
             _replay_slices(feed, "ts"),
@@ -5553,10 +5510,13 @@ def stream_dedup_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(work, "ckpt"),
             ),
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    work = _build_once(
+        sf_dir, "dedupstream", "events",
+        (stream_dedup_replay_q, _sdedup_m, _ingest_m), build,
+    )
     return (
-        spark.read.parquet(sink)
+        _read_file_sink(spark, os.path.join(work, "out"))
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
     )
@@ -5573,7 +5533,6 @@ def stream_join_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     inner join's final table equal the batch interval join, which is
     exactly the oracle SQL."""
     import os
-    import shutil
 
     from nspc_etl_basic_spark.streaming import ingest as _ingest_m
     from nspc_etl_basic_spark.streaming import joins as _sjoins_m
@@ -5585,14 +5544,9 @@ def stream_join_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     purchases = ev.where(F.col("event_type") == "purchase")
     views = ev.where(F.col("event_type") == "view")
-    work, done = _replay_work_dir(
-        sf_dir, "ssjoin", "events",
-        code=_replay_code_hash(stream_join_replay_q, _sjoins_m, _ingest_m),
-    )
-    sink = os.path.join(work, "out")
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
+
+    def build(work: str) -> None:
+        sink = os.path.join(work, "out")
         lsrc, rsrc = os.path.join(work, "l"), os.path.join(work, "r")
         lslices = _replay_slices(purchases, "ts")
         rslices = _replay_slices(views, "ts")
@@ -5619,9 +5573,14 @@ def stream_join_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sink,
                 os.path.join(work, "ckpt"),
             )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return spark.read.parquet(sink).orderBy("purchase_id", "view_id")
+
+    work = _build_once(
+        sf_dir, "ssjoin", "events",
+        (stream_join_replay_q, _sjoins_m, _ingest_m), build,
+    )
+    return _read_file_sink(spark, os.path.join(work, "out")).orderBy(
+        "purchase_id", "view_id"
+    )
 
 
 def stream_sessionize_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5641,7 +5600,6 @@ def stream_sessionize_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical µs tails."""
     import datetime as _dtmod
     import os
-    import shutil
 
     from nspc_etl_basic_spark.streaming import ingest as _ingest_m
     from nspc_etl_basic_spark.streaming import sessionize as _sess_m
@@ -5649,14 +5607,9 @@ def stream_sessionize_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nspc_etl_basic_spark.streaming.sessionize import sessionize_stateful
 
     ev = _t(spark, sf_dir, "events").select("user_id", "ts")
-    work, done = _replay_work_dir(
-        sf_dir, "sessionize", "events",
-        code=_replay_code_hash(stream_sessionize_replay_q, _sess_m, _ingest_m),
-    )
-    sink = os.path.join(work, "out")
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
+
+    def build(work: str) -> None:
+        sink = os.path.join(work, "out")
         max_ts = ev.agg(F.max("ts")).first()[0]
         sentinel_ts = max_ts + _dtmod.timedelta(hours=2)
         sentinels = ev.select("user_id").distinct().withColumn(
@@ -5675,9 +5628,12 @@ def stream_sessionize_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(work, "ckpt"),
             ),
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return spark.read.parquet(sink).orderBy(
+
+    work = _build_once(
+        sf_dir, "sessionize", "events",
+        (stream_sessionize_replay_q, _sess_m, _ingest_m), build,
+    )
+    return _read_file_sink(spark, os.path.join(work, "out")).orderBy(
         "user_id", "session_start"
     )
 
@@ -5694,7 +5650,6 @@ def stream_novelty_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch); a replayed batch re-derives exactly its own rows). Batch
     ids normalize to 1..3 via dense_rank like the quality replay."""
     import os
-    import shutil
 
     from pyspark.sql.window import Window as _W
 
@@ -5707,37 +5662,25 @@ def stream_novelty_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    work, done = _replay_work_dir(
-        sf_dir, "novelty", "documents",
-        code=_replay_code_hash(stream_novelty_replay_q, _snov_m, _nov_m),
-    )
-    store_path = os.path.join(work, "store")
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
-        row = docs.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).first()
-        lo, hi = int(row["lo"]), int(row["hi"])
-        third = (hi - lo + 1) // 3
-        b1, b2 = lo + third, lo + 2 * third
-        slices = [
-            docs.where(F.col("doc_id") < b1),
-            docs.where((F.col("doc_id") >= b1) & (F.col("doc_id") < b2)),
-            docs.where(F.col("doc_id") >= b2),
-        ]
-        store = gram_store_table(spark, store_path)
+
+    def build(work: str) -> None:
+        store = gram_store_table(spark, os.path.join(work, "store"))
         _drain_slices(
             spark,
-            slices,
+            _replay_slices(docs, "doc_id"),
             os.path.join(work, "src"),
             lambda stream: run_stream_novelty(
                 stream, store, os.path.join(work, "ckpt")
             ),
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    rep = novelty_from_store(gram_store_table(spark, store_path))
+
+    work = _build_once(
+        sf_dir, "novelty", "documents",
+        (stream_novelty_replay_q, _snov_m, _nov_m), build,
+    )
+    rep = novelty_from_store(
+        gram_store_table(spark, os.path.join(work, "store"))
+    )
     return rep.select(
         F.dense_rank().over(_W.orderBy("batch_id")).cast("long").alias(
             "batch_seq"
@@ -5766,7 +5709,6 @@ def stream_semdedup_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_semdedup_update_replay; the terciles here are disjoint, so
     this replay never enters it)."""
     import os
-    import shutil
 
     from nspc_etl_basic_spark.operators import semdedup as _sd_m
     from nspc_etl_basic_spark.operators.similarity import train_ivf_centroids
@@ -5778,39 +5720,26 @@ def stream_semdedup_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    work, done = _replay_work_dir(
-        sf_dir, "semdedup", "embeddings",
-        code=_replay_code_hash(stream_semdedup_replay_q, _ssd_m, _sd_m),
-    )
-    store_path = os.path.join(work, "store")
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
+
+    def build(work: str) -> None:
         cents = train_ivf_centroids(emb, n_cells=16, n_iter=3)
-        row = emb.agg(
-            F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
-        ).first()
-        lo, hi = int(row["lo"]), int(row["hi"])
-        third = (hi - lo + 1) // 3
-        b1, b2 = lo + third, lo + 2 * third
-        slices = [
-            emb.where(F.col("vec_id") < b1),
-            emb.where((F.col("vec_id") >= b1) & (F.col("vec_id") < b2)),
-            emb.where(F.col("vec_id") >= b2),
-        ]
-        store = label_store_table(spark, store_path)
+        store = label_store_table(spark, os.path.join(work, "store"))
         _drain_slices(
             spark,
-            slices,
+            _replay_slices(emb, "vec_id"),
             os.path.join(work, "src"),
             lambda stream: run_stream_semdedup(
                 stream, store, os.path.join(work, "ckpt"), cents,
                 threshold=0.3,
             ),
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return semdedup_from_store(label_store_table(spark, store_path))
+
+    work = _build_once(
+        sf_dir, "semdedup", "embeddings",
+        (stream_semdedup_replay_q, _ssd_m, _sd_m), build,
+    )
+    store = label_store_table(spark, os.path.join(work, "store"))
+    return semdedup_from_store(store)
 
 
 def stream_semdedup_update_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5831,7 +5760,6 @@ def stream_semdedup_update_replay_q(spark: SparkSession, sf_dir: str) -> DataFra
     changed ids, moved labels); unchanged-replay idempotency rides
     the same classification join and is pinned in pytest."""
     import os
-    import shutil
 
     from nspc_etl_basic_spark.operators import semdedup as _sd_m
     from nspc_etl_basic_spark.operators.similarity import train_ivf_centroids
@@ -5843,16 +5771,8 @@ def stream_semdedup_update_replay_q(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    work, done = _replay_work_dir(
-        sf_dir, "semdedupupd", "embeddings",
-        code=_replay_code_hash(
-            stream_semdedup_update_replay_q, _ssd_m, _sd_m
-        ),
-    )
-    store_path = os.path.join(work, "store")
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
+
+    def build(work: str) -> None:
         cents = train_ivf_centroids(emb, n_cells=16, n_iter=3)
         perturbed = emb.select(
             "vec_id",
@@ -5861,7 +5781,7 @@ def stream_semdedup_update_replay_q(spark: SparkSession, sf_dir: str) -> DataFra
             ).otherwise(F.col("embedding")).alias("embedding"),
         )
         corrections = emb.where(F.col("vec_id") % 25 == 0)
-        store = label_store_table(spark, store_path)
+        store = label_store_table(spark, os.path.join(work, "store"))
         _drain_slices(
             spark,
             [perturbed, corrections],
@@ -5871,9 +5791,13 @@ def stream_semdedup_update_replay_q(spark: SparkSession, sf_dir: str) -> DataFra
                 threshold=0.3,
             ),
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return semdedup_from_store(label_store_table(spark, store_path))
+
+    work = _build_once(
+        sf_dir, "semdedupupd", "embeddings",
+        (stream_semdedup_update_replay_q, _ssd_m, _sd_m), build,
+    )
+    store = label_store_table(spark, os.path.join(work, "store"))
+    return semdedup_from_store(store)
 
 
 def stream_semdedup_retire_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5890,7 +5814,6 @@ def stream_semdedup_retire_replay_q(spark: SparkSession, sf_dir: str) -> DataFra
     pairs/components). The delete itself rewrites only the buckets
     holding the retired keys (BucketedTable.delete)."""
     import os
-    import shutil
 
     from nspc_etl_basic_spark.operators import semdedup as _sd_m
     from nspc_etl_basic_spark.operators.similarity import train_ivf_centroids
@@ -5903,18 +5826,10 @@ def stream_semdedup_retire_replay_q(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    work, done = _replay_work_dir(
-        sf_dir, "semdedupret", "embeddings",
-        code=_replay_code_hash(
-            stream_semdedup_retire_replay_q, _ssd_m, _sd_m
-        ),
-    )
-    store_path = os.path.join(work, "store")
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
+
+    def build(work: str) -> None:
         cents = train_ivf_centroids(emb, n_cells=16, n_iter=3)
-        store = label_store_table(spark, store_path)
+        store = label_store_table(spark, os.path.join(work, "store"))
         _drain_slices(
             spark,
             [emb],
@@ -5927,9 +5842,13 @@ def stream_semdedup_retire_replay_q(spark: SparkSession, sf_dir: str) -> DataFra
         retire_ids(
             store, emb.where(F.col("vec_id") % 20 == 0), threshold=0.3
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return semdedup_from_store(label_store_table(spark, store_path))
+
+    work = _build_once(
+        sf_dir, "semdedupret", "embeddings",
+        (stream_semdedup_retire_replay_q, _ssd_m, _sd_m), build,
+    )
+    store = label_store_table(spark, os.path.join(work, "store"))
+    return semdedup_from_store(store)
 
 
 def stream_quality_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5943,7 +5862,6 @@ def stream_quality_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions — three slices × four checks, twelve value-hashed
     rows."""
     import os
-    import shutil
 
     from pyspark.sql.window import Window as _W
 
@@ -5965,25 +5883,23 @@ def stream_quality_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         Check("value_min", minimum("value"), lo=0.0),
         Check("value_mean", mean_of("value"), lo=0.0, hi=1000.0),
     ]
-    work, done = _replay_work_dir(
-        sf_dir, "quality", "events",
-        code=_replay_code_hash(stream_quality_replay_q, _squal_m, _qual_m),
-    )
-    metrics = os.path.join(work, "metrics")
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
+
+    def build(work: str) -> None:
         _drain_slices(
             spark,
             _replay_slices(ev, "ts"),
             os.path.join(work, "src"),
             lambda stream: run_stream_quality(
-                stream, checks, metrics, os.path.join(work, "ckpt")
+                stream, checks, os.path.join(work, "metrics"),
+                os.path.join(work, "ckpt"),
             ),
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    m = spark.read.parquet(metrics)
+
+    work = _build_once(
+        sf_dir, "quality", "events",
+        (stream_quality_replay_q, _squal_m, _qual_m), build,
+    )
+    m = spark.read.parquet(os.path.join(work, "metrics"))
     return m.select(
         F.dense_rank().over(_W.orderBy("batch_id")).alias("batch_seq"),
         "check_name",
@@ -6005,7 +5921,6 @@ def stream_ewma_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the batch in-row fold and the oracle is the batch events_ewma
     list_reduce SQL, verbatim."""
     import os
-    import shutil
 
     from nspc_etl_basic_spark.streaming import ewma as _ewma_m
     from nspc_etl_basic_spark.streaming.ewma import (
@@ -6015,15 +5930,11 @@ def stream_ewma_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _t(spark, sf_dir, "events")
-    work, done = _replay_work_dir(
-        sf_dir, "ewma", "events",
-        code=_replay_code_hash(stream_ewma_replay_q, _ewma_m),
-    )
-    store_path = os.path.join(work, "store")
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
-        store = ewma_store_table(spark, store_path, "user_id", n_buckets=8)
+
+    def build(work: str) -> None:
+        store = ewma_store_table(
+            spark, os.path.join(work, "store"), "user_id", n_buckets=8
+        )
         _drain_slices(
             spark,
             _replay_slices(ev, "ts"),
@@ -6034,9 +5945,14 @@ def stream_ewma_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 alpha=0.3,
             ),
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    store = ewma_store_table(spark, store_path, "user_id", n_buckets=8)
+
+    work = _build_once(
+        sf_dir, "ewma", "events",
+        (stream_ewma_replay_q, _ewma_m), build,
+    )
+    store = ewma_store_table(
+        spark, os.path.join(work, "store"), "user_id", n_buckets=8
+    )
     return ewma_from_store(store, "user_id")
 
 
@@ -6052,7 +5968,6 @@ def stream_anomaly_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-domain mean/sd/z arithmetic as the already-oracled
     events_anomaly."""
     import os
-    import shutil
 
     from nspc_etl_basic_spark.streaming import anomaly as _anom_m
     from nspc_etl_basic_spark.streaming.anomaly import (
@@ -6061,14 +5976,8 @@ def stream_anomaly_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _t(spark, sf_dir, "events")
-    work, done = _replay_work_dir(
-        sf_dir, "anomaly", "events",
-        code=_replay_code_hash(stream_anomaly_replay_q, _anom_m),
-    )
-    out_path = os.path.join(work, "out")
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
+
+    def build(work: str) -> None:
         store = stats_store_table(
             spark, os.path.join(work, "store"), "event_type", n_buckets=4
         )
@@ -6077,14 +5986,17 @@ def stream_anomaly_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             _replay_slices(ev, "ts"),
             os.path.join(work, "src"),
             lambda stream: run_stream_anomaly(
-                stream, store, out_path,
+                stream, store, os.path.join(work, "out"),
                 checkpoint_path=os.path.join(work, "ckpt"),
                 group_col="event_type", value_col="value", threshold=3.0,
             ),
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return spark.read.parquet(out_path).select(
+
+    work = _build_once(
+        sf_dir, "anomaly", "events",
+        (stream_anomaly_replay_q, _anom_m), build,
+    )
+    return spark.read.parquet(os.path.join(work, "out")).select(
         "event_id", "event_type", "value", "mean", "stddev", "z", "batch_id"
     )
 

@@ -41,8 +41,6 @@ DEFAULT_CONFIG: dict[str, Any] = {
         "transaction_mode": "strict",
         # upsert key columns (reference test/test_upsert_config.yaml:17)
         "primary_key_columns": ["id"],
-        # 'last_wins' duplicate-PK resolution within a file
-        "duplicate_keys_in_source": "last_wins",
         # sample size for type inference (reference loader.py:729)
         "inference_sample_rows": 1000,
         # reproduce the reference's accidental "CSV dates stay NVARCHAR"
@@ -56,7 +54,6 @@ DEFAULT_CONFIG: dict[str, Any] = {
         "enable_checkpointing": True,
         "resume_incomplete_batches": True,
         "max_resume_age_hours": 24,
-        "cleanup_completed_batches": False,
         "batch_table_name": "EtlBatchJobStatistics",
     },
     "tables": {},

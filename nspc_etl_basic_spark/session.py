@@ -4,7 +4,8 @@ runs the SQL conf the tests verify.
 
 Scale stance: AQE, partition coalescing and skew-join splitting are
 Spark's defaults and stay on; the shuffle-partition count is sized by the
-caller to its cluster. The Arrow flag speeds only ``toPandas`` and
+caller to its cluster, or, when the caller gives none, to the session's
+own ``defaultParallelism``. The Arrow flag speeds only ``toPandas`` and
 ``createDataFrame`` from pandas; the ``mapInPandas``/``applyInPandas``
 kernels use Arrow whatever it says. On a real 1000-executor cluster the
 same builder applies — only master/shuffle sizing change.
@@ -24,16 +25,11 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus) if cpus else 32
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # bad timestamp parses must yield NULL, not error (SURVEY §2 B3)
@@ -44,4 +40,9 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # no count given: one shuffle partition per core the session runs on
+    if shuffle_partitions is None:
+        shuffle_partitions = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark

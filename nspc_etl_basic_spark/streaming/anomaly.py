@@ -33,6 +33,7 @@ from nspc_etl_basic_spark.operators.anomaly import (
     zscore_against,
 )
 from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
+from nspc_etl_basic_spark.streaming.ingest import drain
 
 
 def stats_store_table(
@@ -94,12 +95,5 @@ def run_stream_anomaly(
         )
         store.merge(keyed)  # initializes the table when absent
 
-    q = (
-        df.writeStream.foreachBatch(_score_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = df.writeStream.foreachBatch(_score_batch)
+    return drain(writer, checkpoint_path, query_name)

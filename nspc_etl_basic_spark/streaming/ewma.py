@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
+from nspc_etl_basic_spark.streaming.ingest import drain
 
 
 def ewma_store_table(
@@ -103,15 +104,8 @@ def run_stream_ewma(
         )
         store.merge(out)  # last-wins on (key, batch_id): replay-safe
 
-    q = (
-        df.writeStream.foreachBatch(_advance)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = df.writeStream.foreachBatch(_advance)
+    return drain(writer, checkpoint_path, query_name)
 
 
 def ewma_from_store(store: BucketedTable, key_col: str) -> DataFrame:

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from nspc_etl_basic_spark.operators.sketches import _ISIN_LITERAL_CAP
 from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
+from nspc_etl_basic_spark.streaming.ingest import drain
 
 #: sentinel key row carrying each batch's TOTAL row count (needed for
 #: threshold * N at report time); real keys are stringified, and the
@@ -124,15 +125,8 @@ def run_stream_heavy_hitters(
         )
         store.merge(rows)  # last-wins on (key, batch_id): replay-safe
 
-    q = (
-        df.writeStream.foreachBatch(_track_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = df.writeStream.foreachBatch(_track_batch)
+    return drain(writer, checkpoint_path, query_name)
 
 
 def heavy_hitters_from_store(

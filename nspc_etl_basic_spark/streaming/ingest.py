@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 
 def stream_directory(
@@ -50,14 +51,25 @@ def run_available_now(
     output_mode: str = "append",
     query_name: str = "ingest",
 ):
-    """Drain all currently-available input, then stop — the exact semantics
-    of the reference's one-shot directory batch (process all pending files,
-    checkpoint each). Returns the finished StreamingQuery."""
-    q = (
+    """Drain all currently-available input into a file sink, then stop
+    — the exact semantics of the reference's one-shot directory batch
+    (process all pending files, checkpoint each). Returns the finished
+    StreamingQuery."""
+    writer = (
         df.writeStream.format(fmt)
         .option("path", sink_path)
-        .option("checkpointLocation", checkpoint_path)
         .outputMode(output_mode)
+    )
+    return drain(writer, checkpoint_path, query_name)
+
+
+def drain(writer: DataStreamWriter, checkpoint_path: str, query_name: str):
+    """Start ``writer`` under an AvailableNow trigger with its checkpoint
+    and query name, wait until every currently-available input has been
+    processed, and return the finished StreamingQuery. The one drain
+    every streaming facade in this package runs through."""
+    q = (
+        writer.option("checkpointLocation", checkpoint_path)
         .queryName(query_name)
         .trigger(availableNow=True)
         .start()
@@ -146,15 +158,8 @@ def run_stream_upsert(
             merged = src
         warehouse.overwrite_snapshot(merged, table)
 
-    q = (
-        df.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = df.writeStream.foreachBatch(_merge_batch)
+    return drain(writer, checkpoint_path, query_name)
 
 
 def run_stream_upsert_bucketed(
@@ -178,15 +183,8 @@ def run_stream_upsert_bucketed(
     def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
         table.merge(_content_last_wins(batch_df, table.pk_cols, dedup_order_col))
 
-    q = (
-        df.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = df.writeStream.foreachBatch(_merge_batch)
+    return drain(writer, checkpoint_path, query_name)
 
 
 def run_stream_upsert_jdbc(
@@ -223,15 +221,8 @@ def run_stream_upsert_jdbc(
             options=options, dialect=dialect, batch_size=batch_size,
         )
 
-    q = (
-        df.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = df.writeStream.foreachBatch(_merge_batch)
+    return drain(writer, checkpoint_path, query_name)
 
 
 def run_stream_upsert_cdc(
@@ -300,12 +291,5 @@ def run_stream_upsert_cdc(
             for c in caches:
                 c.unpersist()
 
-    q = (
-        df.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = df.writeStream.foreachBatch(_merge_batch)
+    return drain(writer, checkpoint_path, query_name)

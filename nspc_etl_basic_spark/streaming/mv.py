@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from nspc_etl_basic_spark.operators.merge import merge_changes, merge_upsert
 from nspc_etl_basic_spark.operators.mv import incremental_refresh, summary_mv
-from nspc_etl_basic_spark.streaming.ingest import _content_last_wins
+from nspc_etl_basic_spark.streaming.ingest import _content_last_wins, drain
 
 
 def run_stream_mv(
@@ -83,12 +83,5 @@ def run_stream_mv(
             for c in caches:
                 c.unpersist()
 
-    q = (
-        df.writeStream.foreachBatch(_fold_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = df.writeStream.foreachBatch(_fold_batch)
+    return drain(writer, checkpoint_path, query_name)

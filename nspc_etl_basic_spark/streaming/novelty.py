@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from nspc_etl_basic_spark.operators.novelty import _ngram_hashes
 from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
+from nspc_etl_basic_spark.streaming.ingest import drain
 
 #: sentinel hash ids for per-batch metrics (the md5 ring is >= 0)
 _H_INSTANCES = -1
@@ -106,15 +107,8 @@ def run_stream_novelty(
             dist.unpersist()
             grams.unpersist()
 
-    q = (
-        df.writeStream.foreachBatch(_track_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = df.writeStream.foreachBatch(_track_batch)
+    return drain(writer, checkpoint_path, query_name)
 
 
 def novelty_from_store(store: BucketedTable) -> DataFrame:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nspc_etl_basic_spark.operators.quality import Check, run_checks
+from nspc_etl_basic_spark.streaming.ingest import drain
 
 
 class QualityGateError(RuntimeError):
@@ -59,15 +60,9 @@ def run_stream_quality(
                     f"micro-batch {batch_id} failed checks: {failed}"
                 )
 
-    q = (
-        df.writeStream.foreachBatch(_check_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    writer = df.writeStream.foreachBatch(_check_batch)
     try:
-        q.awaitTermination()
+        return drain(writer, checkpoint_path, query_name)
     except Exception as exc:  # noqa: BLE001 — unwrap the gate failure
         # Spark wraps foreachBatch exceptions in StreamingQueryException;
         # re-surface the gate violation as the exported type so callers'
@@ -75,4 +70,3 @@ def run_stream_quality(
         if "QualityGateError" in str(exc):
             raise QualityGateError(str(exc)) from exc
         raise
-    return q

@@ -21,6 +21,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 
 from nspc_etl_basic_spark.operators.scd import scd2_apply_changes, scd2_from_feed
+from nspc_etl_basic_spark.streaming.ingest import drain
 
 
 def run_stream_scd2(
@@ -68,12 +69,5 @@ def run_stream_scd2(
             out = scd2_from_feed(src, key_cols, ts_col, attr_cols)
         warehouse.overwrite_snapshot(out, table)
 
-    q = (
-        df.writeStream.foreachBatch(_apply_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = df.writeStream.foreachBatch(_apply_batch)
+    return drain(writer, checkpoint_path, query_name)

@@ -83,6 +83,7 @@ from nspc_etl_basic_spark.operators.dedup import incremental_components
 from nspc_etl_basic_spark.operators.semdedup import _assign_cells
 from nspc_etl_basic_spark.operators.similarity import dot, norm
 from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
+from nspc_etl_basic_spark.streaming.ingest import drain
 
 
 def label_store_table(spark, path: str, n_buckets: int = 16) -> BucketedTable:
@@ -373,15 +374,8 @@ def run_stream_semdedup(
 
         store.merge(upsert)
 
-    q = (
-        df.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = df.writeStream.foreachBatch(_merge_batch)
+    return drain(writer, checkpoint_path, query_name)
 
 
 def retire_ids(

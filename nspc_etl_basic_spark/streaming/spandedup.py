@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from nspc_etl_basic_spark.operators.spandedup import incremental_dedup_spans
 from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
+from nspc_etl_basic_spark.streaming.ingest import drain
 
 
 def gram_store_table(
@@ -88,12 +89,5 @@ def run_stream_span_dedup(
         )
         store.merge(keyed)  # initializes the table when absent
 
-    q = (
-        df.writeStream.foreachBatch(_dedup_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = df.writeStream.foreachBatch(_dedup_batch)
+    return drain(writer, checkpoint_path, query_name)

@@ -142,17 +142,17 @@ def main() -> None:
     import glob
 
     # no underscore after 'deduptier': the tier90 work dirs are named
-    # nspc_replay_deduptier90_* and must go cold too, or the
+    # nspc_asset_deduptier90_* and must go cold too, or the
     # dedup_components_incr datapoint measures a warm tier. Round 10
     # added two more materialized corpus assets with the same staleness
     # contract — the semdedup base tier and the trained IVF/PQ
     # codebooks — which must equally go cold here or the
     # corpus_semantic_dedup* / sim_ann_* datapoints measure warm reads.
     for pat in (
-        "/tmp/nspc_replay_deduptier*",
-        "/tmp/nspc_replay_semdedupbase90_*",
-        "/tmp/nspc_replay_codebooks16_*",
-        "/tmp/nspc_replay_residbooks16_*",
+        "/tmp/nspc_asset_deduptier*",
+        "/tmp/nspc_asset_semdedupbase90_*",
+        "/tmp/nspc_asset_codebooks16_*",
+        "/tmp/nspc_asset_residbooks16_*",
     ):
         for d in glob.glob(pat):
             shutil.rmtree(d, ignore_errors=True)

@@ -8,7 +8,9 @@ import os
 import subprocess
 import sys
 
+from nspc_etl_basic_spark import load_config
 from nspc_etl_basic_spark.__main__ import main
+from nspc_etl_basic_spark.session import get_spark
 from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -35,6 +37,36 @@ def test_cli_single_file_exit_codes(spark, tmp_path):
 
     # missing path -> 1 (loader.py:1686-1687)
     assert main([str(tmp_path / "nope.csv"), "--warehouse", wh]) == 1
+
+
+def test_get_spark_sizes_shuffles_from_the_session(spark, monkeypatch):
+    # SPARK_GRAFT_CPUS unset (the CLI default): master is local[*], and
+    # shuffle partitions must follow the session's own parallelism, not a
+    # constant that disagrees with the core count
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    try:
+        s = get_spark(app_name="nspc-etl-basic-spark-tests")
+        assert s.conf.get("spark.sql.shuffle.partitions") == str(
+            s.sparkContext.defaultParallelism
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_config_file_with_retired_keys_loads(tmp_path):
+    # keys nothing reads any more must not stop an older YAML from loading
+    cfg = tmp_path / "old.yaml"
+    cfg.write_text(
+        "loader:\n  duplicate_keys_in_source: last_wins\n"
+        "  table_mode: upsert\n"
+        "batch_processing:\n  cleanup_completed_batches: true\n"
+    )
+    loaded = load_config(str(cfg))
+    assert loaded["loader"]["table_mode"] == "upsert"
+    assert loaded["loader"]["duplicate_keys_in_source"] == "last_wins"
+    assert loaded["batch_processing"]["cleanup_completed_batches"] is True
+    assert loaded["batch_processing"]["max_resume_age_hours"] == 24
 
 
 def test_cli_flags_override_config(spark, tmp_path):
