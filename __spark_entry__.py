@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from nspc_etl_basic_spark.functions.casting import parse_datetime_col
+from nspc_etl_basic_spark.materialize import hold, scope
 from nspc_etl_basic_spark.operators.dedup import (
     exact_dedup,
     jaccard_on_candidates,
@@ -1053,14 +1054,14 @@ def _dedup_tier(
         from nspc_etl_basic_spark.operators.dedup import neardup_components
 
         docs = _docs_wide(spark, sf_dir)
-        sigs = minhash_signatures(docs).cache()
-        cand = lsh_candidate_pairs(sigs).cache()
-        cand.count()
-        sigs.unpersist()
-        comp = neardup_components(_t(spark, sf_dir, "documents"), cand)
-        cand.write.parquet(os.path.join(work, "cand"))
-        comp.write.parquet(os.path.join(work, "comp"))
-        cand.unpersist()
+        with scope():
+            sigs = hold(minhash_signatures(docs))
+            cand = hold(lsh_candidate_pairs(sigs))
+            cand.count()
+            sigs.unpersist()
+            comp = neardup_components(_t(spark, sf_dir, "documents"), cand)
+            cand.write.parquet(os.path.join(work, "cand"))
+            comp.write.parquet(os.path.join(work, "comp"))
 
     work = _build_once(
         sf_dir, "deduptier", "documents",
@@ -1094,14 +1095,13 @@ def _dedup_tier90(
         )
 
         corpus = _docs_wide(spark, sf_dir).filter(F.col("doc_id") % 10 != 0)
-        csigs = minhash_signatures(corpus).cache()
-        old_pairs = lsh_candidate_pairs(csigs).cache()
-        old_pairs.count()
-        existing = neardup_components(corpus.select("doc_id"), old_pairs)
-        build_band_store(csigs).write.parquet(os.path.join(work, "store"))
-        existing.write.parquet(os.path.join(work, "comp"))
-        old_pairs.unpersist()
-        csigs.unpersist()
+        with scope():
+            csigs = hold(minhash_signatures(corpus))
+            old_pairs = hold(lsh_candidate_pairs(csigs))
+            old_pairs.count()
+            existing = neardup_components(corpus.select("doc_id"), old_pairs)
+            build_band_store(csigs).write.parquet(os.path.join(work, "store"))
+            existing.write.parquet(os.path.join(work, "comp"))
 
     work = _build_once(
         sf_dir, "deduptier90", "documents",
@@ -1327,15 +1327,14 @@ def dedup_components_incr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # path) — materialized here once per (source, code) identity, same
     # contract as _dedup_tier
     store, existing = _dedup_tier90(spark, sf_dir)
-    batch_pairs = incremental_lsh_pairs(
-        minhash_signatures(batch), store, max_bucket_size=1000
-    ).cache()
-    batch_pairs.count()
-    out = incremental_components(
-        batch.select("doc_id"), batch_pairs, existing
-    )
-    batch_pairs.unpersist()
-    return out
+    with scope():
+        batch_pairs = hold(incremental_lsh_pairs(
+            minhash_signatures(batch), store, max_bucket_size=1000
+        ))
+        batch_pairs.count()
+        return incremental_components(
+            batch.select("doc_id"), batch_pairs, existing
+        )
 
 
 def dedup_band_retire_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3442,9 +3441,9 @@ def orders_bloom_prune_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     orders = _t(spark, sf_dir, "orders")
     words = build_bloom(cust, "c_custkey")
-    passed = orders.where(
+    passed = hold(orders.where(
         bloom_might_contain(words, F.col("o_custkey"))
-    ).cache()
+    ))
     keys = cust.select(F.col("c_custkey").alias("o_custkey")).distinct()
     exact = passed.join(F.broadcast(keys), "o_custkey", "left_semi")
     a = passed.groupBy("o_orderpriority").agg(
@@ -4175,6 +4174,27 @@ def sim_ann_pq_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@functools.cache
+def _scratch_root() -> str:
+    """One per-process dir for the tables that driver queries write on
+    every call, removed at interpreter exit. It cannot go when a query
+    returns: the DataFrame it returns reads its table lazily."""
+    import atexit
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix="nspc_scratch_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh dir for one query call, under ``_scratch_root``."""
+    import tempfile
+
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
+
+
 def warehouse_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution on append (ParquetWarehouse.append_evolve): the
     even-key half of orders lands first with o_orderkey narrowed to INT
@@ -4185,8 +4205,6 @@ def warehouse_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     once — which is exactly the SQL the oracle states. Narrowing is
     refused (pytest); the rewrite-on-change economics are documented in
     SCALE.md."""
-    import tempfile
-
     from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
 
     orders = _t(spark, sf_dir, "orders")
@@ -4197,7 +4215,7 @@ def warehouse_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = orders.where(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_totalprice"
     )
-    wh = ParquetWarehouse(spark, tempfile.mkdtemp(prefix="nspc_evolve_"))
+    wh = ParquetWarehouse(spark, _scratch_dir("nspc_evolve_"))
     wh.write(first, "t")
     wh.append_evolve(batch, "t")
     return wh.read("t").select(
@@ -4216,14 +4234,12 @@ def orders_bucketed_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of the small side instead, which is equally shuffle-free
     for the data rows. Either way the layout changes the PLAN, never
     the answer — the oracle is the plain SQL join."""
-    import tempfile
-
     from nspc_etl_basic_spark.sinks.bucketed import (
         read_bucketed,
         write_bucketed,
     )
 
-    base = tempfile.mkdtemp(prefix="nspc_buckjoin_")
+    base = _scratch_dir("nspc_buckjoin_")
     orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_nationkey"
@@ -4260,14 +4276,12 @@ def events_partition_prune_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     mechanism to the stats index's file-level pruning). Layout changes
     the plan, never the answer: the oracle is the plain filtered
     aggregate."""
-    import tempfile
-
     from nspc_etl_basic_spark.sinks.bucketed import write_partitioned
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    path = tempfile.mkdtemp(prefix="nspc_part_") + "/events"
+    path = _scratch_dir("nspc_part_") + "/events"
     write_partitioned(ev, path, ["event_type"])
     back = spark.read.parquet(path).where(
         F.col("event_type").isin("click", "purchase")
@@ -4318,14 +4332,12 @@ def events_dpp_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     DPP is Spark's runtime complement to static partition pruning: the
     pruning predicate isn't known until the dim filter evaluates. The
     oracle is the plain join over an inline VALUES dim."""
-    import tempfile
-
     from nspc_etl_basic_spark.sinks.bucketed import write_partitioned
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    path = tempfile.mkdtemp(prefix="nspc_dpp_") + "/events"
+    path = _scratch_dir("nspc_dpp_") + "/events"
     write_partitioned(ev, path, ["event_type"])
     fact = spark.read.parquet(path)
     dim = spark.createDataFrame(
@@ -4364,8 +4376,6 @@ def warehouse_snapshot_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT the merge-touched-but-identical rows merge_changes would tag.
     One co-partitioned full-outer join on the pk is the honest price of
     diffing without a write-time feed (SCALE.md)."""
-    import tempfile
-
     from nspc_etl_basic_spark.operators.merge import (
         merge_upsert,
         snapshot_diff,
@@ -4382,7 +4392,7 @@ def warehouse_snapshot_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = merge_upsert(v0, src, ["o_orderkey"]).where(
         F.col("o_orderkey") % 10 != 4
     )
-    wh = ParquetWarehouse(spark, tempfile.mkdtemp(prefix="nspc_diff_"))
+    wh = ParquetWarehouse(spark, _scratch_dir("nspc_diff_"))
     wh.write(v0, "t")
     wh.overwrite_snapshot(merged, "t")
     return snapshot_diff(

@@ -131,32 +131,3 @@ def bloom_might_contain(
         ) == F.lit(1)
         cond = bit if cond is None else (cond & bit)
     return cond
-
-
-def bloom_prune(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str | None = None,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-    hash_fn: str = "md5",
-    exact: bool = True,
-) -> DataFrame:
-    """Fact rows whose key is in the dim, bloom-pruned first.
-
-    ``exact=True`` (default) re-verifies survivors with a real
-    broadcast semi-join — the bloom only shrinks the joined volume, it
-    is never the correctness carrier (the stats-index rule). With
-    ``exact=False`` the caller accepts the documented FP rate (e.g.
-    pre-filtering before an expensive downstream stage that re-checks
-    anyway)."""
-    dim_key = dim_key or fact_key
-    words = build_bloom(dim, dim_key, m_bits, k, hash_fn)
-    pruned = fact.where(
-        bloom_might_contain(words, F.col(fact_key), m_bits, k, hash_fn)
-    )
-    if not exact:
-        return pruned
-    keys = dim.select(F.col(dim_key).alias(fact_key)).distinct()
-    return pruned.join(F.broadcast(keys), fact_key, "left_semi")

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from nspc_etl_basic_spark.materialize import hold, scope
+
 DEFAULT_SHINGLE_K = 8
 N_MINHASHES = 8  # md5 = 32 hex chars -> 8 disjoint 4-char slices
 
@@ -451,42 +453,6 @@ def containment_on_candidates(
     )
 
 
-def near_dedup_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_SHINGLE_K,
-    n_hashes: int = N_MINHASHES,
-    band_size: int = 2,
-    threshold: float = 0.8,
-    max_bucket_size: int | None = 1000,
-) -> DataFrame:
-    """End-to-end near-dup pipeline: MinHash -> LSH candidates -> exact
-    Jaccard filter >= threshold. Returns confirmed near-duplicate pairs.
-
-    Signatures are a projection (no shuffle); the candidate set is
-    materialized eagerly so the verification stage can broadcast it.
-
-    The LSH hot-key guard is ON by default here (``max_bucket_size=1000``):
-    the composed pipeline is what a user points at a raw corpus, where one
-    boilerplate band key can collect millions of docs and turn the bucket
-    self-join into a single O(bucket²) task. The trade: pairs whose ONLY
-    collision is inside a dropped mega-bucket are missed — such clusters
-    are better handled by exact dedup; pass ``max_bucket_size=None`` to
-    restore exact all-pairs semantics."""
-    # cache the (tiny) signature table: it is a pure projection, so without
-    # materialization both branches of the band self-join would recompute
-    # every shingle hash
-    sigs = minhash_signatures(df, text_col, id_col, k, n_hashes).cache()
-    cand = lsh_candidate_pairs(
-        sigs, id_col, n_hashes, band_size, max_bucket_size=max_bucket_size
-    ).cache()
-    cand.count()
-    sigs.unpersist()  # cand is materialized; the signature cache is dead weight
-    jac = jaccard_on_candidates(df, cand, text_col, id_col, k)
-    return jac.filter(F.col("jaccard") >= threshold)
-
-
 def neardup_components(
     nodes: DataFrame,
     pairs: DataFrame,
@@ -595,104 +561,100 @@ def neardup_components(
         edges_raw.sparkSession.sparkContext.defaultParallelism,
         n_edges // 500_000 + 2,
     ))
-    edges = edges_raw.repartition(n_parts, "dst").cache()
+    with scope():
+        edges = hold(edges_raw.repartition(n_parts, "dst"))
 
-    # static degree pass (one map-side-combined groupBy over the cached
-    # edges): split out hot-dst edges once; see the docstring's skew
-    # note. A graph with fewer TOTAL edges than the threshold cannot
-    # contain a hot node — skip the pass outright, so small candidate
-    # graphs (and every toy-scale run) keep the original plan shape.
-    if n_edges >= int(hot_degree_threshold):
-        hot_nodes = (
-            edges.groupBy("dst")
-            .agg(F.count(F.lit(1)).alias("__deg"))
-            .where(F.col("__deg") >= int(hot_degree_threshold))
-            .select(F.col("dst").alias("node"))
-            .cache()
-        )
-        n_hot = hot_nodes.count()
-    else:
-        hot_nodes, n_hot = None, 0
-    if n_hot > 0:
-        cold_edges = edges.join(
-            F.broadcast(hot_nodes.select(F.col("node").alias("dst"))),
-            "dst", "left_anti",
-        ).repartition(n_parts, "dst").cache()
-        hot_edges = edges.join(
-            F.broadcast(hot_nodes.select(F.col("node").alias("dst"))),
-            "dst", "semi",
-        ).cache()
-        cold_edges.count(), hot_edges.count()
-        edges.unpersist()
-    else:
-        cold_edges, hot_edges = edges, None
-        if hot_nodes is not None:
-            hot_nodes.unpersist()
-
-    labels = (
-        (edges if hot_edges is None else cold_edges.select("src").unionByName(
-            hot_edges.select("src")))
-        .select(F.col("src").alias("node"))
-        .distinct()
-        .select(F.col("node"), F.col("node").alias("label"))
-        .coalesce(n_parts)
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-
-    for _ in range(max_iter):
-        cold_nb = cold_edges.join(
-            labels, cold_edges["dst"] == labels["node"]
-        ).select("src", "label")
-        if hot_edges is not None:
-            # hot-node labels: one row per hot node — broadcast, no
-            # dst-keyed shuffle, the hub's edges stay spread across
-            # whatever partitions they arrived in
-            hot_labels = labels.join(hot_nodes, "node", "semi")
-            hot_nb = hot_edges.join(
-                F.broadcast(hot_labels),
-                hot_edges["dst"] == hot_labels["node"],
-            ).select("src", "label")
-            all_nb = cold_nb.unionByName(hot_nb)
-        else:
-            all_nb = cold_nb
-        neighbor_min = all_nb.groupBy("src").agg(
-            F.min("label").alias("nb_label")
-        )
-        stepped = labels.join(
-            neighbor_min, labels["node"] == neighbor_min["src"], "left"
-        ).select(
-            labels["node"],
-            F.least(
-                labels["label"], F.coalesce(F.col("nb_label"), labels["label"])
-            ).alias("label"),
-        )
-        # pointer jump: label <- label(label); labels are node ids of the
-        # same component, so the self-join always resolves in-component.
-        # (A second jump per round was measured SLOWER on the sf0.1
-        # candidate graph — the extra self-join outweighs the saved
-        # rounds when the label table is join-overhead-bound.)
-        jump_to = stepped.select(
-            F.col("node").alias("__jn"), F.col("label").alias("__jl")
-        )
-        new_labels = (
-            stepped.join(jump_to, stepped["label"] == F.col("__jn"), "left")
-            .select(
-                stepped["node"],
-                F.coalesce(F.col("__jl"), stepped["label"]).alias("label"),
+        # static degree pass (one map-side-combined groupBy over the cached
+        # edges): split out hot-dst edges once; see the docstring's skew
+        # note. A graph with fewer TOTAL edges than the threshold cannot
+        # contain a hot node — skip the pass outright, so small candidate
+        # graphs (and every toy-scale run) keep the original plan shape.
+        if n_edges >= int(hot_degree_threshold):
+            hot_nodes = hold(
+                edges.groupBy("dst")
+                .agg(F.count(F.lit(1)).alias("__deg"))
+                .where(F.col("__deg") >= int(hot_degree_threshold))
+                .select(F.col("dst").alias("node"))
             )
+            n_hot = hot_nodes.count()
+        else:
+            hot_nodes, n_hot = None, 0
+        if n_hot > 0:
+            cold_edges = hold(edges.join(
+                F.broadcast(hot_nodes.select(F.col("node").alias("dst"))),
+                "dst", "left_anti",
+            ).repartition(n_parts, "dst"))
+            hot_edges = hold(edges.join(
+                F.broadcast(hot_nodes.select(F.col("node").alias("dst"))),
+                "dst", "semi",
+            ))
+            cold_edges.count(), hot_edges.count()
+            edges.unpersist()
+        else:
+            cold_edges, hot_edges = edges, None
+            if hot_nodes is not None:
+                hot_nodes.unpersist()
+
+        labels = (
+            (edges if hot_edges is None else cold_edges.select("src").unionByName(
+                hot_edges.select("src")))
+            .select(F.col("src").alias("node"))
+            .distinct()
+            .select(F.col("node"), F.col("node").alias("label"))
             .coalesce(n_parts)
             .localCheckpoint(eager=True)
         )
-        labels = new_labels
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    cold_edges.unpersist()
-    if hot_edges is not None:
-        hot_edges.unpersist()
-        hot_nodes.unpersist()
+        prev_sum = labels.agg(F.sum("label")).collect()[0][0]
+
+        for _ in range(max_iter):
+            cold_nb = cold_edges.join(
+                labels, cold_edges["dst"] == labels["node"]
+            ).select("src", "label")
+            if hot_edges is not None:
+                # hot-node labels: one row per hot node — broadcast, no
+                # dst-keyed shuffle, the hub's edges stay spread across
+                # whatever partitions they arrived in
+                hot_labels = labels.join(hot_nodes, "node", "semi")
+                hot_nb = hot_edges.join(
+                    F.broadcast(hot_labels),
+                    hot_edges["dst"] == hot_labels["node"],
+                ).select("src", "label")
+                all_nb = cold_nb.unionByName(hot_nb)
+            else:
+                all_nb = cold_nb
+            neighbor_min = all_nb.groupBy("src").agg(
+                F.min("label").alias("nb_label")
+            )
+            stepped = labels.join(
+                neighbor_min, labels["node"] == neighbor_min["src"], "left"
+            ).select(
+                labels["node"],
+                F.least(
+                    labels["label"], F.coalesce(F.col("nb_label"), labels["label"])
+                ).alias("label"),
+            )
+            # pointer jump: label <- label(label); labels are node ids of the
+            # same component, so the self-join always resolves in-component.
+            # (A second jump per round was measured SLOWER on the sf0.1
+            # candidate graph — the extra self-join outweighs the saved
+            # rounds when the label table is join-overhead-bound.)
+            jump_to = stepped.select(
+                F.col("node").alias("__jn"), F.col("label").alias("__jl")
+            )
+            new_labels = (
+                stepped.join(jump_to, stepped["label"] == F.col("__jn"), "left")
+                .select(
+                    stepped["node"],
+                    F.coalesce(F.col("__jl"), stepped["label"]).alias("label"),
+                )
+                .coalesce(n_parts)
+                .localCheckpoint(eager=True)
+            )
+            labels = new_labels
+            cur_sum = labels.agg(F.sum("label")).collect()[0][0]
+            if cur_sum == prev_sum:
+                break
+            prev_sum = cur_sum
 
     singletons = (
         nodes.select(F.col(id_col).alias("node"))
@@ -855,37 +817,36 @@ def incremental_components(
     lab_b = touched.select(
         F.col("__n").alias("id_b"), F.col("__c").alias("__cb")
     )
-    contracted = (
-        pairs.join(F.broadcast(lab_a), "id_a", "left")
-        .join(F.broadcast(lab_b), "id_b", "left")
-        .select(
-            F.coalesce("__ca", F.col("id_a")).alias("id_a"),
-            F.coalesce("__cb", F.col("id_b")).alias("id_b"),
+    with scope():
+        contracted = hold(
+            pairs.join(F.broadcast(lab_a), "id_a", "left")
+            .join(F.broadcast(lab_b), "id_b", "left")
+            .select(
+                F.coalesce("__ca", F.col("id_a")).alias("id_a"),
+                F.coalesce("__cb", F.col("id_b")).alias("id_b"),
+            )
+            .where(F.col("id_a") != F.col("id_b"))
         )
-        .where(F.col("id_a") != F.col("id_b"))
-        .cache()
-    )
-    # single-pass union-find instead of the distributed fixpoint
-    # (round 12): the contracted graph is batch-bounded BY CONTRACT —
-    # its labels are F.broadcast into both corpus scans below, so the
-    # one-task kernel adds no size limit the plan did not already have,
-    # and it replaces the fixpoint's ~4 jobs/round x O(log diameter)
-    # rounds with one Spark job. Every node of the contracted graph
-    # appears in an edge (the != filter above removed only self-loops,
-    # whose nodes the old sub_nodes derivation dropped identically), so
-    # no singleton pass is needed; labels are the same min-id-per-
-    # component the fixpoint computes (union-by-min; pinned equivalent
-    # in tests/test_dedup.py).
-    # localCheckpoint, not cache(): materialized once for the two
-    # broadcast joins below, and its blocks are released by the
-    # ContextCleaner when the result frame is dropped — nothing stays
-    # pinned in the CacheManager across repeated calls
-    merged = components_onepass(
-        contracted, id_col=id_col
-    ).select(
-        F.col(id_col).alias("__m"), F.col("component_id").alias("__ml")
-    ).localCheckpoint(eager=True)
-    contracted.unpersist()
+        # single-pass union-find instead of the distributed fixpoint
+        # (round 12): the contracted graph is batch-bounded BY CONTRACT —
+        # its labels are F.broadcast into both corpus scans below, so the
+        # one-task kernel adds no size limit the plan did not already have,
+        # and it replaces the fixpoint's ~4 jobs/round x O(log diameter)
+        # rounds with one Spark job. Every node of the contracted graph
+        # appears in an edge (the != filter above removed only self-loops,
+        # whose nodes the old sub_nodes derivation dropped identically), so
+        # no singleton pass is needed; labels are the same min-id-per-
+        # component the fixpoint computes (union-by-min; pinned equivalent
+        # in tests/test_dedup.py).
+        # localCheckpoint, not cache(): materialized once for the two
+        # broadcast joins below, and its blocks are released by the
+        # ContextCleaner when the result frame is dropped — nothing stays
+        # pinned in the CacheManager across repeated calls
+        merged = components_onepass(
+            contracted, id_col=id_col
+        ).select(
+            F.col(id_col).alias("__m"), F.col("component_id").alias("__ml")
+        ).localCheckpoint(eager=True)
 
     # (b) second corpus-label scan: relabel only touched components
     relabeled_existing = (

@@ -18,12 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nspc_etl_basic_spark.materialize import hold
+
 
 def chi2_drift(
     df: DataFrame,
     category_col: str,
     in_b_col: str,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Chi-square drift report between slice A (``in_b_col`` false) and
     slice B (true) over ``category_col``.
@@ -46,19 +47,15 @@ def chi2_drift(
     Scale: one map-side-combined groupBy over (category) with
     conditional counts — 8-byte rows, the data itself never reshuffles
     — plus two 1-row broadcasts (slice totals, statistic). Category
-    cardinality bounds every post-aggregation structure.
-
-    Cache lifecycle: two category-sized frames are cached (they anchor
-    the branching plan below) and the result is lazy, so this function
-    cannot unpersist them itself. One-shot reports can let them age
-    out; REPEATED callers (scheduled drift monitoring) pass ``caches``
-    and unpersist after materializing the report.
+    cardinality bounds every post-aggregation structure. The two
+    category-sized frames it caches are released by the caller's
+    ``materialize.scope``.
     """
     # cache the category-sized contingency table: every downstream
     # branch (slice totals, per-cell frame, the statistic, the output)
     # hangs off it, and without the cache Catalyst duplicates the full
     # input scan per branch (audited: 8 scans -> 2)
-    counts = (
+    counts = hold(
         df.groupBy(F.col(category_col).alias("category"))
         .agg(
             F.sum(F.when(~F.col(in_b_col), 1).otherwise(0))
@@ -68,10 +65,7 @@ def chi2_drift(
             .cast("long")
             .alias("obs_b"),
         )
-        .cache()
     )
-    if caches is not None:
-        caches.append(counts)
     totals = counts.agg(
         F.sum("obs_a").cast("long").alias("__ta"),
         F.sum("obs_b").cast("long").alias("__tb"),
@@ -90,16 +84,14 @@ def chi2_drift(
         F.when(exp_a > 0, da * da / exp_a).otherwise(F.lit(0.0))
         + F.when(exp_b > 0, db * db / exp_b).otherwise(F.lit(0.0))
     )
-    per_cat = with_tot.select(
+    per_cat = hold(with_tot.select(
         "category",
         "obs_a",
         "obs_b",
         F.round(exp_a, 6).alias("exp_a"),
         F.round(exp_b, 6).alias("exp_b"),
         F.round(cell, 6).alias("contrib"),
-    ).cache()
-    if caches is not None:
-        caches.append(per_cat)
+    ))
     stat = per_cat.agg(
         # exact decimal accumulation of the rounded contributions:
         # order-independent, so the statistic value-hashes cross-engine

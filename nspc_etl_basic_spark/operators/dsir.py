@@ -130,50 +130,26 @@ def dsir_scores(
     text_col: str = "text",
     n_buckets: int = 1024,
     salt: str = "dsir",
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Per-document target-likeness: ``(id_col, score)`` with
     ``score = sum(cnt_b * w_b)`` over the document's hashed token
     counts — exact BIGINT end-to-end. Select the top fraction by score
     (or hash-threshold within score bands) downstream.
 
-    Two execution shapes, same exact values:
-
-    - ``caches`` given (the scale path): the per-(doc, bucket)
-      pre-aggregation is CACHED and both the source bucket
-      distribution (``sum(cnt)`` per bucket) and the scoring join
-      read it — without the cache Catalyst recomputes the corpus
-      explode + hash per branch (audited: exchange reuse does NOT
-      kick in across the two aggregation shapes), and at 100 TB the
-      tokenize + hash pass is the dominant cost. ONE tokenize pass;
-      the caller owns the cache (chi2_drift pattern: the result is
-      lazy so this function cannot unpersist — materialize, then
-      unpersist every frame in ``caches``).
-    - ``caches=None`` (the default, leak-free path): the ≤n_buckets
-      weight rows are computed EAGERLY (one tokenize pass) and
-      re-attached as a broadcast local relation, so the returned lazy
-      plan re-tokenizes once more at materialization — TWO passes
-      total, but nothing is pinned in the CacheManager across
-      repeated invocations (an un-owned corpus-sized cache leaked per
-      call here until round 8), and the scoring scan keeps its
-      parquet pushdown."""
+    The ≤n_buckets weight rows are computed EAGERLY (one tokenize pass)
+    and re-attached as a broadcast local relation, so the returned lazy
+    plan re-tokenizes once more at materialization — TWO passes total,
+    but nothing is pinned in the CacheManager across repeated
+    invocations, and the scoring scan keeps its parquet pushdown."""
     doc_counts = hashed_token_counts(source, id_col, text_col, n_buckets, salt)
     t = _corpus_bucket_counts(target, text_col, n_buckets, salt, "t_cnt")
-    if caches is not None:
-        doc_counts = doc_counts.cache()
-        caches.append(doc_counts)
-        s = doc_counts.groupBy("bucket").agg(
-            F.sum("cnt").cast("long").alias("s_cnt")
-        )
-        weights = F.broadcast(_bucket_weights(s, t))
-    else:
-        s = doc_counts.groupBy("bucket").agg(
-            F.sum("cnt").cast("long").alias("s_cnt")
-        )
-        rows = _bucket_weights(s, t).collect()
-        weights = F.broadcast(
-            source.sparkSession.createDataFrame(rows, "bucket bigint, w bigint")
-        )
+    s = doc_counts.groupBy("bucket").agg(
+        F.sum("cnt").cast("long").alias("s_cnt")
+    )
+    rows = _bucket_weights(s, t).collect()
+    weights = F.broadcast(
+        source.sparkSession.createDataFrame(rows, "bucket bigint, w bigint")
+    )
     return (
         doc_counts.join(weights, "bucket")
         .groupBy(id_col)

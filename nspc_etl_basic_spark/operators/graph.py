@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nspc_etl_basic_spark.materialize import hold, scope
+
 
 def pagerank(
     edges: DataFrame,
@@ -71,97 +73,96 @@ def pagerank(
             f"checkpoint_every must be >= 1, got {checkpoint_every}"
         )
 
-    e = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(weight).cast("long").alias("w"),
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .cache()
-    )
-    n_nodes = nodes.count()  # bounded metadata scalar (node count)
-    out_w = e.groupBy("src").agg(F.sum("w").alias("__ow"))
-    # cache the fraction table PRE-PARTITIONED on the join key: the
-    # n_iter per-round joins then reuse the cached hash partitioning and
-    # only the node-sized rank table is exchanged each round — without
-    # it every round re-shuffled the EDGE-sized side (n_iter edge
-    # shuffles for the one paid here). repartition carries no explicit
-    # partition count, so AQE sizes it from the data (scale-adaptive,
-    # not a local[32] constant).
-    frac = (
-        e.join(out_w, "src")
-        .select(
-            "src",
-            "dst",
-            F.expr(f"(CAST(w AS DECIMAL(38,0)) * {int(scale)}) div __ow").alias(
-                "frac"
-            ),
+    with scope():
+        e = edges.select(
+            F.col(src).alias("src"),
+            F.col(dst).alias("dst"),
+            F.col(weight).cast("long").alias("w"),
         )
-        .repartition("src")
-        .cache()
-    )
-    frac.count()  # materialize once; the loop reads it n_iter times
-    src_nodes = out_w.select(F.col("src").alias("node"))
-
-    # the dangling-node SET is static (it's a graph property, not a rank
-    # property) — detect it once; when empty (the common case for trade/
-    # link graphs) every round drops its dangling-sum aggregation AND
-    # the 1-row broadcast, roughly halving per-round job count
-    dangling = nodes.join(src_nodes, "node", "left_anti").cache()
-    has_dangling = dangling.limit(1).count() > 0
-    if not has_dangling:
-        dangling.unpersist()
-
-    base = ((100 - damping_pct) * scale) // 100
-    ranks = nodes.select("node", F.lit(int(scale)).cast("long").alias("rank"))
-    for it in range(n_iter):
-        inc = (
-            frac.join(ranks, frac["src"] == ranks["node"])
-            .groupBy("dst")
-            .agg(
-                F.sum(
-                    F.expr(f"(CAST(rank AS DECIMAL(38,0)) * frac) div {int(scale)}")
-                ).alias("__inc")
-            )
-            .withColumnRenamed("dst", "node")
+        nodes = hold(
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        joined = nodes.join(inc, "node", "left")
-        if has_dangling:
-            dang = ranks.join(F.broadcast(dangling), "node", "left_semi").agg(
-                F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("__dsum")
+        n_nodes = nodes.count()  # bounded metadata scalar (node count)
+        out_w = e.groupBy("src").agg(F.sum("w").alias("__ow"))
+        # cache the fraction table PRE-PARTITIONED on the join key: the
+        # n_iter per-round joins then reuse the cached hash partitioning and
+        # only the node-sized rank table is exchanged each round — without
+        # it every round re-shuffled the EDGE-sized side (n_iter edge
+        # shuffles for the one paid here). repartition carries no explicit
+        # partition count, so AQE sizes it from the data (scale-adaptive,
+        # not a local[32] constant).
+        frac = hold(
+            e.join(out_w, "src")
+            .select(
+                "src",
+                "dst",
+                F.expr(f"(CAST(w AS DECIMAL(38,0)) * {int(scale)}) div __ow").alias(
+                    "frac"
+                ),
             )
-            joined = joined.crossJoin(F.broadcast(dang))
-            share = f"(__dsum div {int(n_nodes)})"
-        else:
-            share = "CAST(0 AS BIGINT)"
-        ranks = joined.select(
-            "node",
-            (
-                F.lit(base)
-                + F.expr(
-                    f"(CAST({int(damping_pct)} AS DECIMAL(38,0))"
-                    f" * (coalesce(__inc, CAST(0 AS BIGINT))"
-                    f"    + {share})) div 100"
+            .repartition("src")
+        )
+        frac.count()  # materialize once; the loop reads it n_iter times
+        src_nodes = out_w.select(F.col("src").alias("node"))
+
+        # the dangling-node SET is static (it's a graph property, not a rank
+        # property) — detect it once; when empty (the common case for trade/
+        # link graphs) every round drops its dangling-sum aggregation AND
+        # the 1-row broadcast, roughly halving per-round job count
+        dangling = hold(nodes.join(src_nodes, "node", "left_anti"))
+        has_dangling = dangling.limit(1).count() > 0
+        if not has_dangling:
+            dangling.unpersist()
+
+        base = ((100 - damping_pct) * scale) // 100
+        ranks = nodes.select("node", F.lit(int(scale)).cast("long").alias("rank"))
+        for it in range(n_iter):
+            inc = (
+                frac.join(ranks, frac["src"] == ranks["node"])
+                .groupBy("dst")
+                .agg(
+                    F.sum(
+                        F.expr(f"(CAST(rank AS DECIMAL(38,0)) * frac) div {int(scale)}")
+                    ).alias("__inc")
                 )
+                .withColumnRenamed("dst", "node")
             )
-            .cast("long")
-            .alias("rank"),
-        )
-        # lineage cut every `checkpoint_every` rounds (and on the last
-        # round), not every round: each eager localCheckpoint is a full
-        # Spark job over the node-sized state, and at bench scale the
-        # per-job submission overhead — not the 25-row data — owned the
-        # iteration wall (guide §1.2: fix the job shape first). A
-        # bounded handful of rounds per plan keeps optimizer/codegen
-        # time flat while cutting the job count ~checkpoint_every-fold;
-        # the integer arithmetic is untouched, so ranks stay
-        # bit-identical round for round.
-        if (it + 1) % checkpoint_every == 0 or it == n_iter - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+            joined = nodes.join(inc, "node", "left")
+            if has_dangling:
+                dang = ranks.join(F.broadcast(dangling), "node", "left_semi").agg(
+                    F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("__dsum")
+                )
+                joined = joined.crossJoin(F.broadcast(dang))
+                share = f"(__dsum div {int(n_nodes)})"
+            else:
+                share = "CAST(0 AS BIGINT)"
+            ranks = joined.select(
+                "node",
+                (
+                    F.lit(base)
+                    + F.expr(
+                        f"(CAST({int(damping_pct)} AS DECIMAL(38,0))"
+                        f" * (coalesce(__inc, CAST(0 AS BIGINT))"
+                        f"    + {share})) div 100"
+                    )
+                )
+                .cast("long")
+                .alias("rank"),
+            )
+            # lineage cut every `checkpoint_every` rounds (and on the last
+            # round), not every round: each eager localCheckpoint is a full
+            # Spark job over the node-sized state, and at bench scale the
+            # per-job submission overhead — not the 25-row data — owned the
+            # iteration wall (guide §1.2: fix the job shape first). A
+            # bounded handful of rounds per plan keeps optimizer/codegen
+            # time flat while cutting the job count ~checkpoint_every-fold;
+            # the integer arithmetic is untouched, so ranks stay
+            # bit-identical round for round.
+            if (it + 1) % checkpoint_every == 0 or it == n_iter - 1:
+                ranks = ranks.localCheckpoint(eager=True)
+        return ranks
 
 
 def triangle_stats(
@@ -194,21 +195,19 @@ def triangle_stats(
     sqrt-bounded by construction. Outputs are exact integers
     (value-hash-stable); wedge arithmetic runs in DECIMAL(38,0).
     """
-    und = (
+    und = hold(
         pairs.select(
             F.least(F.col(id_a), F.col(id_b)).alias("a"),
             F.greatest(F.col(id_a), F.col(id_b)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .cache()
     )
-    deg = (
+    deg = hold(
         und.select(F.col("a").alias("v"))
         .unionByName(und.select(F.col("b").alias("v")))
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("d"))
-        .cache()
     )
 
     n_nodes = deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
@@ -222,7 +221,7 @@ def triangle_stats(
     # orient: lower (degree, id) endpoint -> higher
     da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
-    oriented = (
+    oriented = hold(
         und.join(da, "a")
         .join(db, "b")
         .select(
@@ -245,7 +244,6 @@ def triangle_stats(
             .alias("e")
         )
         .select("e.src", "e.dst", "e.dst_d")
-        .cache()
     )
     e1 = oriented.select(
         F.col("src"), F.col("dst").alias("v1"), F.col("dst_d").alias("d1")

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from nspc_etl_basic_spark.materialize import hold
 from nspc_etl_basic_spark.sources.reader import SEQ_COL
 
 
@@ -137,7 +138,6 @@ def merge_changes(
     source: DataFrame,
     pk_cols: list[str],
     broadcast_source: bool | None = None,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Change-data-feed for the join-based MERGE (Delta CDF semantics):
     every row the merge touches, tagged ``op`` ∈ {'insert',
@@ -155,16 +155,10 @@ def merge_changes(
     small by construction (≤ |source|) — then every feed leg is a
     map-only broadcast semi/anti join: the target is never shuffled,
     never broadcast, and its non-key columns are read once (for the
-    preimage leg). The matched-key table is cached (it anchors three
-    broadcasts); pass ``broadcast_source=False`` for symmetric-size
-    merges to let AQE pick shuffled joins instead.
-
-    Cache lifecycle: the feed is lazy, so this function cannot
-    unpersist the matched-key cache itself. One-shot callers can let it
-    age out, but REPEATED callers (the per-micro-batch streaming folds)
-    must pass ``caches`` — the cached handle is appended to it, and the
-    caller unpersists after materializing the feed, or cached plans
-    accumulate in executor storage for the life of the stream.
+    preimage leg). The matched-key table is held (it anchors three
+    broadcasts) until the caller's ``materialize.scope`` exits; pass
+    ``broadcast_source=False`` for symmetric-size merges to let AQE
+    pick shuffled joins instead.
     """
     src = source.select(*target.columns)
     if broadcast_source is False:
@@ -174,13 +168,10 @@ def merge_changes(
         post = src.join(tkeys, pk_cols, "left_semi")
     else:
         src_keys = src.select(*pk_cols).distinct()
-        matched = (
+        matched = hold(
             target.select(*pk_cols)
             .join(F.broadcast(src_keys), pk_cols, "left_semi")
-            .cache()
         )
-        if caches is not None:
-            caches.append(matched)
         inserts = src.join(F.broadcast(matched), pk_cols, "left_anti")
         pre = target.join(F.broadcast(matched), pk_cols, "left_semi")
         post = src.join(F.broadcast(matched), pk_cols, "left_semi")

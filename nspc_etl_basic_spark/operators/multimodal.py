@@ -404,28 +404,3 @@ def synthesize_media(spark, n: int = 64, kind: str = "image") -> DataFrame:
         return (i, bytearray(payload), meta)
 
     return spark.createDataFrame([gen(i) for i in range(n)], MEDIA_SCHEMA)
-
-
-def media_from_binary_files(df: DataFrame) -> DataFrame:
-    """Bridge a ``binaryFile``-source DataFrame (`sources/reader.py:
-    read_binary_dir`) into the MEDIA_SCHEMA shape the kernels consume.
-
-    ``media_id`` is ``xxhash64(path)`` (stable across re-reads), the
-    format comes from the file extension, and the dimension fields are
-    null — real decode fills them downstream. Keeps ``source_path`` for
-    lineage. Pure projection, no shuffle; payload bytes stay columnar.
-    """
-    return df.select(
-        F.xxhash64(F.col("path")).alias("media_id"),
-        F.col("content").alias("payload"),
-        F.struct(
-            F.lower(
-                F.regexp_extract(F.col("path"), r"\.([A-Za-z0-9]+)$", 1)
-            ).alias("format"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("n_frames"),
-            F.lit(None).cast("int").alias("sample_rate"),
-        ).alias("meta"),
-        F.col("path").alias("source_path"),
-    )

@@ -199,8 +199,9 @@ def embedding_neardup(
     The all-pairs O(n^2) comparison is avoided the same way MinHash-LSH
     avoids it for text: bucket on the rp-signature (one shuffle keyed by an
     8-byte long), compare only within buckets (expected n^2 / 2^n_planes
-    pairs), verify with exact cosine. Caller should ``.cache()`` the corpus
-    if it is a recomputable projection — both self-join branches read it.
+    pairs), verify with exact cosine. Both self-join branches read the
+    corpus, so a caller whose corpus is a recomputable projection should
+    ``materialize.hold`` it inside a ``scope``.
 
     ``max_bucket_size`` is the same hot-key guard as in
     ``dedup.lsh_candidate_pairs``: a degenerate signature bucket (e.g. the

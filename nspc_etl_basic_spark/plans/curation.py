@@ -49,6 +49,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nspc_etl_basic_spark.materialize import hold, scope
+
 DEFAULT_SPLIT = {"train": 0.8, "val": 0.1, "test": 0.1}
 
 
@@ -161,14 +163,12 @@ def run_curation(
             neardup_components,
         )
 
-        sigs = minhash_signatures(
-            kept, text_col=text_col, id_col=id_col
-        ).cache()
-        cand = lsh_candidate_pairs(sigs, id_col=id_col).cache()
-        cand.count()
-        sigs.unpersist()
-        comp = neardup_components(kept.select(id_col), cand, id_col=id_col)
-        cand.unpersist()
+        with scope():
+            sigs = hold(minhash_signatures(kept, text_col=text_col, id_col=id_col))
+            cand = hold(lsh_candidate_pairs(sigs, id_col=id_col))
+            cand.count()
+            sigs.unpersist()
+            comp = neardup_components(kept.select(id_col), cand, id_col=id_col)
         out["clusters"] = comp
         quality_col = d_cfg.get("quality_col", "n_chars")
         kept = keep_best_representative(

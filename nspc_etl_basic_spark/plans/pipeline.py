@@ -36,6 +36,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from nspc_etl_basic_spark.config import load_config
+from nspc_etl_basic_spark.materialize import hold, scope
 from nspc_etl_basic_spark.naming import generate_table_name
 from nspc_etl_basic_spark.operators.cast import cast_and_split
 from nspc_etl_basic_spark.operators.merge import (
@@ -220,306 +221,306 @@ def process_file(
     logger.info("processing %s -> table %s (mode=%s, txn=%s, job=%s)",
                 file_path, table_name, mode, txn, job_run_id)
 
-    raw = None
     try:
-        # cached before the first count: the file is parsed once
-        raw = df = read_any(spark, file_path, with_seq=True).cache()
-        rows_read = df.count()
-        result.rows_read = rows_read
+        with scope():
+            # cached before the first count: the file is parsed once
+            df = hold(read_any(spark, file_path, with_seq=True))
+            rows_read = df.count()
+            result.rows_read = rows_read
 
-        if rows_read == 0 or not [c for c in df.columns if not c.startswith("__")]:
-            # A5: empty file — valid no-op in upsert mode (loader.py:1420-1432)
-            if mode == "upsert":
-                result.status = "Validated" if dry_run else "Completed"
-                if move_files:
-                    result.moved_to = _move_file(file_path, "processed")
-                return result
-            raise ValueError(f"Empty file: {file_path}")
+            if rows_read == 0 or not [c for c in df.columns if not c.startswith("__")]:
+                # A5: empty file — valid no-op in upsert mode (loader.py:1420-1432)
+                if mode == "upsert":
+                    result.status = "Validated" if dry_run else "Completed"
+                    if move_files:
+                        result.moved_to = _move_file(file_path, "processed")
+                    return result
+                raise ValueError(f"Empty file: {file_path}")
 
-        # Schema authority (reference parity): for append/upsert into an
-        # EXISTING table the target's schema governs the cast — the
-        # reference inserts into the existing DDL and the database rejects
-        # mismatches (e.g. 'invalid' into an INT column, the strict-rollback
-        # scenario test_upsert_operations.py:698-734). Fresh tables get
-        # file inference. With ``database.type: jdbc`` the authority is the
-        # JDBC table itself (the reference's actual deployment shape).
-        db_cfg = config.get("database", {})
-        use_jdbc = db_cfg.get("type") == "jdbc" and db_cfg.get("url")
-        if use_jdbc and mode == "scd2":
-            # fail up front with a clear message instead of a KeyError
-            # deep in the jdbc writer after the full read/cast work
-            raise ValueError(
-                "table_mode 'scd2' is not supported with database.type "
-                "'jdbc' — the SCD2 fold targets the parquet warehouse"
-            )
-        jdbc_opts = _jdbc_options(db_cfg) if use_jdbc else {}
-        # bucketed layout: upserts go through the differential merge
-        # (sinks/bucketed_merge.py) — per-file cost proportional to the
-        # batch's buckets, not the table. The config knob for large,
-        # frequently-merged targets where the snapshot rewrite stops
-        # being runnable per file.
-        bucketed = None
-        if (
-            not use_jdbc
-            and mode == "upsert"
-            and db_cfg.get("layout") == "bucketed"
-        ):
-            from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
-
-            bucketed = BucketedTable(
-                spark,
-                os.path.join(warehouse.path, table_name),
-                pk_cols,
-                n_buckets=int(db_cfg.get("n_buckets", 64)),
-            )
-        jdbc_struct = None
-        if use_jdbc and mode in ("append", "upsert"):
-            jdbc_struct = _jdbc_target_schema(
-                spark, db_cfg["url"], table_name, jdbc_opts
-            )
-        # the snapshot target read for schema authority is also the
-        # upsert's merge target (one read of the table per file)
-        target = None
-        if use_jdbc:
-            existing = jdbc_struct is not None
-        elif bucketed is not None:
-            existing = bucketed.exists()
-        else:
-            existing = mode in ("append", "upsert", "scd2") and warehouse.exists(
-                table_name
-            )
-        if existing:
-            if use_jdbc:
-                target_struct = jdbc_struct
-            elif bucketed is not None:
-                target_struct = bucketed.read().schema
-            else:
-                target = warehouse.read(table_name)
-                target_struct = target.schema
-            if mode == "scd2":
-                # the stored table carries interval columns instead of the
-                # feed's ts column: schema authority for the feed is the
-                # attr columns plus valid_from RENAMED back to ts_column
-                from pyspark.sql import types as _T
-
-                scd2_ts = (loader_cfg.get("scd2", {}) or {}).get("ts_column")
-                fields = []
-                for f in target_struct.fields:
-                    if f.name in ("valid_to", "is_current"):
-                        continue
-                    if f.name == "valid_from":
-                        if not scd2_ts:
-                            raise ValueError(
-                                "scd2 mode requires loader.scd2.ts_column"
-                            )
-                        fields.append(
-                            _T.StructField(scd2_ts, f.dataType, f.nullable)
-                        )
-                    else:
-                        fields.append(f)
-                target_struct = _T.StructType(fields)
-            file_cols = [c for c in df.columns if not c.startswith("__")]
-            extra = [c for c in file_cols if c not in target_struct.names]
-            if extra:
+            # Schema authority (reference parity): for append/upsert into an
+            # EXISTING table the target's schema governs the cast — the
+            # reference inserts into the existing DDL and the database rejects
+            # mismatches (e.g. 'invalid' into an INT column, the strict-rollback
+            # scenario test_upsert_operations.py:698-734). Fresh tables get
+            # file inference. With ``database.type: jdbc`` the authority is the
+            # JDBC table itself (the reference's actual deployment shape).
+            db_cfg = config.get("database", {})
+            use_jdbc = db_cfg.get("type") == "jdbc" and db_cfg.get("url")
+            if use_jdbc and mode == "scd2":
+                # fail up front with a clear message instead of a KeyError
+                # deep in the jdbc writer after the full read/cast work
                 raise ValueError(
-                    f"columns {extra} not in existing table '{table_name}'"
+                    "table_mode 'scd2' is not supported with database.type "
+                    "'jdbc' — the SCD2 fold targets the parquet warehouse"
                 )
-            # missing target columns -> NULL (SQL INSERT column-list rule)
-            for c in target_struct.names:
-                if c not in file_cols:
-                    df = df.withColumn(c, F.lit(None).cast("string"))
-            struct = target_struct
-            result.details["sql_types"] = {
-                f.name: f.dataType.simpleString() for f in target_struct.fields
-            }
-        else:
-            schema = infer_schema(df, table_name=table_name, config=config)
-            struct = schema.struct
-            result.details["sql_types"] = schema.sql_types
+            jdbc_opts = _jdbc_options(db_cfg) if use_jdbc else {}
+            # bucketed layout: upserts go through the differential merge
+            # (sinks/bucketed_merge.py) — per-file cost proportional to the
+            # batch's buckets, not the table. The config knob for large,
+            # frequently-merged targets where the snapshot rewrite stops
+            # being runnable per file.
+            bucketed = None
+            if (
+                not use_jdbc
+                and mode == "upsert"
+                and db_cfg.get("layout") == "bucketed"
+            ):
+                from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
 
-        valid, invalid = cast_and_split(df, struct)
-        invalid_count = invalid.count()
-        result.rows_failed = invalid_count
-
-        if txn == "strict" and invalid_count > 0:
-            raise ValueError(
-                f"strict mode: {invalid_count} row(s) failed validation"
-            )
-        if txn == "tolerant" and invalid_count > max_row_errors:
-            raise ValueError(
-                f"tolerant mode: {invalid_count} failed rows exceed "
-                f"max-row-errors={max_row_errors}"
-            )
-
-        if invalid_count > 0 and not dry_run:
-            meta.write_invalid_rows(invalid, job_run_id, table_name, invalid_count)
-            logger.info("%d invalid row(s) recorded for %s", invalid_count, table_name)
-            if log_artifacts:
-                # bounded: tolerant mode capped this at max-row-errors above
-                txt = _write_failed_rows_txt(
-                    src_dir, stem, job_run_id, invalid.collect()
+                bucketed = BucketedTable(
+                    spark,
+                    os.path.join(warehouse.path, table_name),
+                    pk_cols,
+                    n_buckets=int(db_cfg.get("n_buckets", 64)),
                 )
-                if txt:
-                    logger.info("failed-row detail written to %s", txt)
-
-        # declarative quality gate (quality.checks): one aggregate pass
-        # over the VALID rows; results always recorded, action 'fail'
-        # aborts before the sink (target untouched — strict-rollback
-        # semantics match the cast-validation path above)
-        q_cfg = config.get("quality", {}) or {}
-        q_specs = q_cfg.get("checks") or []
-        if q_specs:
-            from nspc_etl_basic_spark.operators.quality import (
-                checks_from_config,
-                run_checks,
-            )
-
-            q_rows = [
-                r.asDict()
-                for r in run_checks(valid, checks_from_config(q_specs)).collect()
-            ]
-            if not dry_run:
-                meta.write_quality_results(q_rows, job_run_id, table_name)
-            failed_checks = [r["check_name"] for r in q_rows if not r["passed"]]
-            result.details["quality"] = {
-                r["check_name"]: r["value"] for r in q_rows
-            }
-            if failed_checks:
-                logger.warning(
-                    "quality checks failed for %s: %s", table_name, failed_checks
+            jdbc_struct = None
+            if use_jdbc and mode in ("append", "upsert"):
+                jdbc_struct = _jdbc_target_schema(
+                    spark, db_cfg["url"], table_name, jdbc_opts
                 )
-                if q_cfg.get("action", "log") == "fail":
+            # the snapshot target read for schema authority is also the
+            # upsert's merge target (one read of the table per file)
+            target = None
+            if use_jdbc:
+                existing = jdbc_struct is not None
+            elif bucketed is not None:
+                existing = bucketed.exists()
+            else:
+                existing = mode in ("append", "upsert", "scd2") and warehouse.exists(
+                    table_name
+                )
+            if existing:
+                if use_jdbc:
+                    target_struct = jdbc_struct
+                elif bucketed is not None:
+                    target_struct = bucketed.read().schema
+                else:
+                    target = warehouse.read(table_name)
+                    target_struct = target.schema
+                if mode == "scd2":
+                    # the stored table carries interval columns instead of the
+                    # feed's ts column: schema authority for the feed is the
+                    # attr columns plus valid_from RENAMED back to ts_column
+                    from pyspark.sql import types as _T
+
+                    scd2_ts = (loader_cfg.get("scd2", {}) or {}).get("ts_column")
+                    fields = []
+                    for f in target_struct.fields:
+                        if f.name in ("valid_to", "is_current"):
+                            continue
+                        if f.name == "valid_from":
+                            if not scd2_ts:
+                                raise ValueError(
+                                    "scd2 mode requires loader.scd2.ts_column"
+                                )
+                            fields.append(
+                                _T.StructField(scd2_ts, f.dataType, f.nullable)
+                            )
+                        else:
+                            fields.append(f)
+                    target_struct = _T.StructType(fields)
+                file_cols = [c for c in df.columns if not c.startswith("__")]
+                extra = [c for c in file_cols if c not in target_struct.names]
+                if extra:
                     raise ValueError(
-                        f"quality gate: checks failed: {failed_checks}"
+                        f"columns {extra} not in existing table '{table_name}'"
                     )
+                # missing target columns -> NULL (SQL INSERT column-list rule)
+                for c in target_struct.names:
+                    if c not in file_cols:
+                        df = df.withColumn(c, F.lit(None).cast("string"))
+                struct = target_struct
+                result.details["sql_types"] = {
+                    f.name: f.dataType.simpleString() for f in target_struct.fields
+                }
+            else:
+                schema = infer_schema(df, table_name=table_name, config=config)
+                struct = schema.struct
+                result.details["sql_types"] = schema.sql_types
 
-        if dry_run:
-            # preflight stops here: everything a real load would have
-            # validated has run; nothing has been written or moved
-            result.status = "Validated"
-            logger.info(
-                "dry-run validated %s: %d read, %d failed (no writes)",
-                table_name, result.rows_read, result.rows_failed,
-            )
-            return result
+            valid, invalid = cast_and_split(df, struct)
+            invalid_count = invalid.count()
+            result.rows_failed = invalid_count
 
-        if use_jdbc:
-            # reference deployment shape: data lands in the database; the
-            # metadata/statistics tables stay in the parquet warehouse
-            # (the reference keeps those in the same DB — a config knob a
-            # real deployment can flip by pointing the warehouse at JDBC)
-            h1_types = result.details.get("sql_types")
-            if mode == "upsert":
-                from nspc_etl_basic_spark.sinks.jdbc_merge import jdbc_upsert
-
-                counts = jdbc_upsert(
-                    spark, valid, db_cfg["url"], table_name, pk_cols,
-                    sql_types=None if existing else h1_types,
-                    options=jdbc_opts,
-                    dialect=db_cfg.get("dialect", "ansi"),
-                    batch_size=int(loader_cfg.get("batch_size", 1000)),
+            if txn == "strict" and invalid_count > 0:
+                raise ValueError(
+                    f"strict mode: {invalid_count} row(s) failed validation"
                 )
+            if txn == "tolerant" and invalid_count > max_row_errors:
+                raise ValueError(
+                    f"tolerant mode: {invalid_count} failed rows exceed "
+                    f"max-row-errors={max_row_errors}"
+                )
+
+            if invalid_count > 0 and not dry_run:
+                meta.write_invalid_rows(invalid, job_run_id, table_name, invalid_count)
+                logger.info("%d invalid row(s) recorded for %s", invalid_count, table_name)
+                if log_artifacts:
+                    # bounded: tolerant mode capped this at max-row-errors above
+                    txt = _write_failed_rows_txt(
+                        src_dir, stem, job_run_id, invalid.collect()
+                    )
+                    if txt:
+                        logger.info("failed-row detail written to %s", txt)
+
+            # declarative quality gate (quality.checks): one aggregate pass
+            # over the VALID rows; results always recorded, action 'fail'
+            # aborts before the sink (target untouched — strict-rollback
+            # semantics match the cast-validation path above)
+            q_cfg = config.get("quality", {}) or {}
+            q_specs = q_cfg.get("checks") or []
+            if q_specs:
+                from nspc_etl_basic_spark.operators.quality import (
+                    checks_from_config,
+                    run_checks,
+                )
+
+                q_rows = [
+                    r.asDict()
+                    for r in run_checks(valid, checks_from_config(q_specs)).collect()
+                ]
+                if not dry_run:
+                    meta.write_quality_results(q_rows, job_run_id, table_name)
+                failed_checks = [r["check_name"] for r in q_rows if not r["passed"]]
+                result.details["quality"] = {
+                    r["check_name"]: r["value"] for r in q_rows
+                }
+                if failed_checks:
+                    logger.warning(
+                        "quality checks failed for %s: %s", table_name, failed_checks
+                    )
+                    if q_cfg.get("action", "log") == "fail":
+                        raise ValueError(
+                            f"quality gate: checks failed: {failed_checks}"
+                        )
+
+            if dry_run:
+                # preflight stops here: everything a real load would have
+                # validated has run; nothing has been written or moved
+                result.status = "Validated"
+                logger.info(
+                    "dry-run validated %s: %d read, %d failed (no writes)",
+                    table_name, result.rows_read, result.rows_failed,
+                )
+                return result
+
+            if use_jdbc:
+                # reference deployment shape: data lands in the database; the
+                # metadata/statistics tables stay in the parquet warehouse
+                # (the reference keeps those in the same DB — a config knob a
+                # real deployment can flip by pointing the warehouse at JDBC)
+                h1_types = result.details.get("sql_types")
+                if mode == "upsert":
+                    from nspc_etl_basic_spark.sinks.jdbc_merge import jdbc_upsert
+
+                    counts = jdbc_upsert(
+                        spark, valid, db_cfg["url"], table_name, pk_cols,
+                        sql_types=None if existing else h1_types,
+                        options=jdbc_opts,
+                        dialect=db_cfg.get("dialect", "ansi"),
+                        batch_size=int(loader_cfg.get("batch_size", 1000)),
+                    )
+                    result.rows_inserted = counts.inserted
+                    result.rows_updated = counts.updated
+                else:
+                    clean = valid.select(
+                        [c for c in valid.columns if not c.startswith("__")]
+                    )
+                    jdbc_write(
+                        clean, db_cfg["url"], table_name, mode=mode,
+                        sql_types=None if existing else h1_types,
+                        options=jdbc_opts,
+                        batch_size=int(loader_cfg.get("batch_size", 1000)),
+                    )
+                    result.rows_inserted = rows_read - invalid_count
+            elif bucketed is not None:
+                deduped = dedup_last_wins(valid, pk_cols, order_col=SEQ_COL)
+                deduped = deduped.select(
+                    [c for c in deduped.columns if not c.startswith("__")]
+                )
+                counts = bucketed.merge(deduped)
                 result.rows_inserted = counts.inserted
                 result.rows_updated = counts.updated
+            elif mode == "scd2":
+                # fifth table mode (round-4 extension): the file is a CDC
+                # change feed; the target is a Type-2 dimension history.
+                # (key, ts) uniqueness comes from last-wins dedup on input
+                # order — the same E1 rule the upsert path applies.
+                from nspc_etl_basic_spark.operators.scd import (
+                    scd2_apply_changes,
+                    scd2_from_feed,
+                )
+
+                scfg = loader_cfg.get("scd2", {}) or {}
+                ts_col = scfg.get("ts_column")
+                if not ts_col:
+                    raise ValueError("scd2 mode requires loader.scd2.ts_column")
+                attr_cols = list(scfg.get("attr_columns") or [
+                    c for c in valid.columns
+                    if not c.startswith("__") and c not in pk_cols and c != ts_col
+                ])
+                feed = dedup_last_wins(
+                    valid, pk_cols + [ts_col], order_col=SEQ_COL
+                ).select(*pk_cols, ts_col, *attr_cols, SEQ_COL)
+                prev_rows = 0
+                if target is not None:
+                    prev_rows = target.count()
+                    out = scd2_apply_changes(
+                        target,
+                        feed,
+                        pk_cols, ts_col, attr_cols,
+                        tiebreak_cols=[SEQ_COL],
+                    )
+                else:
+                    out = scd2_from_feed(
+                        feed, pk_cols, ts_col, attr_cols, tiebreak_cols=[SEQ_COL]
+                    )
+                warehouse.overwrite_snapshot(out, table_name)
+                # history rows actually ADDED (a replayed file nets 0), not
+                # the feed size — the job-statistics contract everywhere else
+                result.rows_inserted = max(
+                    warehouse.read(table_name).count() - prev_rows, 0
+                )
+            elif mode == "upsert":
+                deduped = dedup_last_wins(valid, pk_cols, order_col=SEQ_COL)
+                if target is not None:
+                    observe = MergeObservation()
+                    merged = merge_upsert(target, deduped, pk_cols, observe=observe)
+                    warehouse.overwrite_snapshot(merged, table_name)
+                    counts = merge_counts(observe)
+                    result.rows_inserted = counts.inserted
+                    result.rows_updated = counts.updated
+                else:
+                    observe = MergeObservation()
+                    warehouse.write(
+                        observe.on("merged", deduped), table_name, mode="drop_recreate"
+                    )
+                    result.rows_inserted = merge_counts(observe).inserted
             else:
-                clean = valid.select(
-                    [c for c in valid.columns if not c.startswith("__")]
-                )
-                jdbc_write(
-                    clean, db_cfg["url"], table_name, mode=mode,
-                    sql_types=None if existing else h1_types,
-                    options=jdbc_opts,
-                    batch_size=int(loader_cfg.get("batch_size", 1000)),
-                )
+                warehouse.write(valid, table_name, mode=mode)
                 result.rows_inserted = rows_read - invalid_count
-        elif bucketed is not None:
-            deduped = dedup_last_wins(valid, pk_cols, order_col=SEQ_COL)
-            deduped = deduped.select(
-                [c for c in deduped.columns if not c.startswith("__")]
-            )
-            counts = bucketed.merge(deduped)
-            result.rows_inserted = counts.inserted
-            result.rows_updated = counts.updated
-        elif mode == "scd2":
-            # fifth table mode (round-4 extension): the file is a CDC
-            # change feed; the target is a Type-2 dimension history.
-            # (key, ts) uniqueness comes from last-wins dedup on input
-            # order — the same E1 rule the upsert path applies.
-            from nspc_etl_basic_spark.operators.scd import (
-                scd2_apply_changes,
-                scd2_from_feed,
-            )
 
-            scfg = loader_cfg.get("scd2", {}) or {}
-            ts_col = scfg.get("ts_column")
-            if not ts_col:
-                raise ValueError("scd2 mode requires loader.scd2.ts_column")
-            attr_cols = list(scfg.get("attr_columns") or [
-                c for c in valid.columns
-                if not c.startswith("__") and c not in pk_cols and c != ts_col
-            ])
-            feed = dedup_last_wins(
-                valid, pk_cols + [ts_col], order_col=SEQ_COL
-            ).select(*pk_cols, ts_col, *attr_cols, SEQ_COL)
-            prev_rows = 0
-            if target is not None:
-                prev_rows = target.count()
-                out = scd2_apply_changes(
-                    target,
-                    feed,
-                    pk_cols, ts_col, attr_cols,
-                    tiebreak_cols=[SEQ_COL],
-                )
-            else:
-                out = scd2_from_feed(
-                    feed, pk_cols, ts_col, attr_cols, tiebreak_cols=[SEQ_COL]
-                )
-            warehouse.overwrite_snapshot(out, table_name)
-            # history rows actually ADDED (a replayed file nets 0), not
-            # the feed size — the job-statistics contract everywhere else
-            result.rows_inserted = max(
-                warehouse.read(table_name).count() - prev_rows, 0
+            # optional file-level min/max stats maintenance (sinks/
+            # stats_index.py): database.stats_columns lists the predicate
+            # columns; the index is rebuilt after every commit so pruned
+            # reads stay consistent with the current version (the sidecar
+            # lives inside the version dir)
+            stats_cols = db_cfg.get("stats_columns") or []
+            if stats_cols and not use_jdbc and bucketed is None:
+                have = set(warehouse.read(table_name).columns)
+                cols = [c for c in stats_cols if c in have]
+                if cols:
+                    warehouse.analyze(table_name, cols)
+                    result.details["stats_index"] = cols
+
+            result.status = "Completed"
+            logger.info(
+                "completed %s: %d read, %d inserted, %d updated, %d failed",
+                table_name, result.rows_read, result.rows_inserted,
+                result.rows_updated, result.rows_failed,
             )
-        elif mode == "upsert":
-            deduped = dedup_last_wins(valid, pk_cols, order_col=SEQ_COL)
-            if target is not None:
-                observe = MergeObservation()
-                merged = merge_upsert(target, deduped, pk_cols, observe=observe)
-                warehouse.overwrite_snapshot(merged, table_name)
-                counts = merge_counts(observe)
-                result.rows_inserted = counts.inserted
-                result.rows_updated = counts.updated
-            else:
-                observe = MergeObservation()
-                warehouse.write(
-                    observe.on("merged", deduped), table_name, mode="drop_recreate"
-                )
-                result.rows_inserted = merge_counts(observe).inserted
-        else:
-            warehouse.write(valid, table_name, mode=mode)
-            result.rows_inserted = rows_read - invalid_count
-
-        # optional file-level min/max stats maintenance (sinks/
-        # stats_index.py): database.stats_columns lists the predicate
-        # columns; the index is rebuilt after every commit so pruned
-        # reads stay consistent with the current version (the sidecar
-        # lives inside the version dir)
-        stats_cols = db_cfg.get("stats_columns") or []
-        if stats_cols and not use_jdbc and bucketed is None:
-            have = set(warehouse.read(table_name).columns)
-            cols = [c for c in stats_cols if c in have]
-            if cols:
-                warehouse.analyze(table_name, cols)
-                result.details["stats_index"] = cols
-
-        result.status = "Completed"
-        logger.info(
-            "completed %s: %d read, %d inserted, %d updated, %d failed",
-            table_name, result.rows_read, result.rows_inserted,
-            result.rows_updated, result.rows_failed,
-        )
-        if move_files:
-            result.moved_to = _move_file(file_path, "processed")
+            if move_files:
+                result.moved_to = _move_file(file_path, "processed")
     except Exception as exc:  # noqa: BLE001 — per-file failure is data, not a crash
         logger.exception("load failed for %s", file_path)
         result.status = "Failed"
@@ -528,8 +529,6 @@ def process_file(
             result.moved_to = _move_file(file_path, "error")
     finally:
         flog.__exit__()
-        if raw is not None:
-            raw.unpersist()
         result.duration_seconds = time.time() - t0
         if not dry_run and config.get("job_statistics", {}).get("enabled", True):
             end_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.types import StructType
 
+from nspc_etl_basic_spark.materialize import hold, scope
 from nspc_etl_basic_spark.operators.merge import (
     MergeCounts,
     MergeObservation,
@@ -274,8 +275,8 @@ class BucketedTable:
                 f"writer configured {self.n_buckets}"
             )
 
-        src = source.cache()
-        try:
+        with scope():
+            src = hold(source)
             # bounded driver collect: at most n_buckets ints
             touched = [
                 r[0]
@@ -313,8 +314,6 @@ class BucketedTable:
 
             self._commit(merged, m["buckets"])
             return merge_counts(observe)
-        finally:
-            src.unpersist()
 
     def lookup(self, keys: DataFrame) -> DataFrame:
         """Point lookups served from only the buckets the keys hash to —
@@ -348,8 +347,8 @@ class BucketedTable:
         if m is None:
             raise FileNotFoundError(f"bucketed table at {self.path} is empty")
 
-        k = keys.select(*self.pk_cols).distinct().cache()
-        try:
+        with scope():
+            k = hold(keys.select(*self.pk_cols).distinct())
             touched = [
                 r[0]
                 for r in k.select(self._bucket_expr().alias("b"))
@@ -373,8 +372,6 @@ class BucketedTable:
 
             self._commit(kept, m["buckets"], touched_live, m.get("schema"))
             return removed
-        finally:
-            k.unpersist()
 
     def fragmentation(self) -> dict:
         """Layout health probe: how scattered is the table across version

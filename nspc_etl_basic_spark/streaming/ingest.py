@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
+from nspc_etl_basic_spark.materialize import scope
+
 
 def stream_directory(
     spark: SparkSession,
@@ -269,15 +271,16 @@ def run_stream_upsert_cdc(
                 .collect()[0]["m"]
             )
             feed_done = hwm is not None and int(hwm) >= int(batch_id)
-        caches: list[DataFrame] = []
-        if warehouse.exists(table):
-            tgt = warehouse.read(table)
-            feed = merge_changes(tgt, src, pk_cols, caches=caches)
-            merged = merge_upsert(tgt, src, pk_cols)
-        else:
-            feed = src.select(F.lit("insert").alias("op"), "*")
-            merged = src
-        try:
+        # per-batch scope: a long-running stream must not accumulate
+        # one cached plan per micro-batch
+        with scope():
+            if warehouse.exists(table):
+                tgt = warehouse.read(table)
+                feed = merge_changes(tgt, src, pk_cols)
+                merged = merge_upsert(tgt, src, pk_cols)
+            else:
+                feed = src.select(F.lit("insert").alias("op"), "*")
+                merged = src
             if not feed_done:
                 warehouse.write(
                     feed.withColumn("batch_id", F.lit(int(batch_id))),
@@ -285,11 +288,6 @@ def run_stream_upsert_cdc(
                     mode="append",
                 )
             warehouse.overwrite_snapshot(merged, table)
-        finally:
-            # per-batch cache, per-batch release: a long-running stream
-            # must not accumulate one pinned plan per micro-batch
-            for c in caches:
-                c.unpersist()
 
     writer = df.writeStream.foreachBatch(_merge_batch)
     return drain(writer, checkpoint_path, query_name)

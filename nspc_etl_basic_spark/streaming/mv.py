@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nspc_etl_basic_spark.materialize import scope
 from nspc_etl_basic_spark.operators.merge import merge_changes, merge_upsert
 from nspc_etl_basic_spark.operators.mv import incremental_refresh, summary_mv
 from nspc_etl_basic_spark.streaming.ingest import _content_last_wins, drain
@@ -54,15 +55,14 @@ def run_stream_mv(
 
     def _fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         src = _content_last_wins(batch_df, pk_cols, dedup_order_col)
-        caches: list[DataFrame] = []
-        if warehouse.exists(table):
-            tgt = warehouse.read(table)
-            feed = merge_changes(tgt, src, pk_cols, caches=caches)
-            merged = merge_upsert(tgt, src, pk_cols)
-        else:
-            feed = src.select(F.lit("insert").alias("op"), "*")
-            merged = src
-        try:
+        with scope():  # per-batch release of merge_changes' cache
+            if warehouse.exists(table):
+                tgt = warehouse.read(table)
+                feed = merge_changes(tgt, src, pk_cols)
+                merged = merge_upsert(tgt, src, pk_cols)
+            else:
+                feed = src.select(F.lit("insert").alias("op"), "*")
+                merged = src
             if warehouse.exists(mv_table):
                 prev_full = warehouse.read(mv_table)
                 applied = prev_full.agg(
@@ -78,10 +78,6 @@ def run_stream_mv(
                 ).withColumn("batch_id", F.lit(int(batch_id)))
                 warehouse.overwrite_snapshot(mv_new, mv_table)
             warehouse.overwrite_snapshot(merged, table)
-        finally:
-            # per-batch cache, per-batch release (see merge_changes)
-            for c in caches:
-                c.unpersist()
 
     writer = df.writeStream.foreachBatch(_fold_batch)
     return drain(writer, checkpoint_path, query_name)

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nspc_etl_basic_spark.materialize import hold, scope
 from nspc_etl_basic_spark.operators.novelty import _ngram_hashes
 from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
 from nspc_etl_basic_spark.streaming.ingest import drain
@@ -76,12 +77,12 @@ def run_stream_novelty(
         # three actions hang off the exploded grams (instance count,
         # distinct count, anti-join feed into merge); cache the batch's
         # distinct grams so the explode + md5 runs once per batch, and
-        # unpersist in finally (the chi2_drift/merge_changes lifecycle)
-        grams = batch_df.select(
-            F.explode(_ngram_hashes(F.col(text_col), n)).alias("h")
-        ).cache()
-        dist = grams.distinct().cache()
-        try:
+        # release them with the batch
+        with scope():
+            grams = hold(batch_df.select(
+                F.explode(_ngram_hashes(F.col(text_col), n)).alias("h")
+            ))
+            dist = hold(grams.distinct())
             n_inst = grams.count()
             n_dist = dist.count()
             if store.exists():
@@ -103,9 +104,6 @@ def run_stream_novelty(
                 )
             )
             store.merge(rows)  # last-wins on (h, batch_id): replay-safe
-        finally:
-            dist.unpersist()
-            grams.unpersist()
 
     writer = df.writeStream.foreachBatch(_track_batch)
     return drain(writer, checkpoint_path, query_name)

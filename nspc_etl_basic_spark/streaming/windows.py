@@ -57,34 +57,3 @@ def sliding_window_agg(
     return df.groupBy(
         F.window(ts_col, window, slide), F.col(key_col)
     ).agg(*_agg_exprs())
-
-
-def session_window_agg(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str | None = None,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Spark's NATIVE ``session_window`` (dynamic windows that extend
-    while events keep arriving within ``gap``), batch and streaming.
-    Streaming requires the watermark: a session only closes — and its
-    state is only dropped — once the watermark passes its end, so this
-    is append-mode with bounded state. The applyInPandasWithState
-    sessionizer (streaming/sessionize.py) remains the tier for
-    per-session custom logic; this is the declarative fast path the
-    engine should prefer when the aggregate IS expressible."""
-    df = events
-    if watermark:
-        df = df.withWatermark(ts_col, watermark)
-    sess = df.groupBy(
-        F.session_window(F.col(ts_col), gap), F.col(key_col)
-    ).agg(*_agg_exprs())
-    return sess.select(
-        key_col,
-        F.col("session_window.start").alias("session_start"),
-        F.col("session_window.end").alias("session_end"),
-        "n_events",
-        "sum_value",
-        "avg_value",
-    )

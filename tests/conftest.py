@@ -74,7 +74,6 @@ SLOW_TESTS = {
     "test_sessionize_stateful_emits_closed_sessions",
     "test_sessionize_stateful_preserves_microseconds",
     "test_stream_novelty_first_seen_attribution",
-    "test_session_window_stream_matches_batch",
     "test_stream_upsert_cdc_feed_exactly_once",
     "test_stream_dedup_exact_first_wins",
     "test_stream_upsert_jdbc_merges_microbatches",

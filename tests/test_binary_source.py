@@ -7,11 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nspc_etl_basic_spark.operators.codecs import decode_png, encode_png
-from nspc_etl_basic_spark.operators.multimodal import (
-    image_features,
-    media_from_binary_files,
-)
+from nspc_etl_basic_spark.operators.codecs import encode_png
 from nspc_etl_basic_spark.operators.quality import Check, completeness, minimum
 from nspc_etl_basic_spark.sources.reader import read_binary_dir
 from nspc_etl_basic_spark.streaming.quality import (
@@ -41,32 +37,6 @@ def test_read_binary_dir_globs_and_size_guard(spark, tmp_path):
 
     small = read_binary_dir(spark, str(tmp_path), glob="*.png", max_bytes=5_000)
     assert small.count() == 3  # 10 KB file filtered by metadata
-
-
-def test_binary_dir_to_image_features_real_decode(spark, tmp_path):
-    _write_pngs(tmp_path, n=3, size=8)
-    media = media_from_binary_files(
-        read_binary_dir(spark, str(tmp_path), glob="*.png")
-    )
-    rows = media.collect()
-    assert len(rows) == 3
-    assert all(r["meta"]["format"] == "png" for r in rows)
-    # payloads survive the trip byte-exact
-    by_name = {r["source_path"].rsplit("/", 1)[-1]: r for r in rows}
-    for p in _write_pngs(tmp_path, n=3, size=8):  # rewrite same contents
-        arr = decode_png(bytes(by_name[p.name]["payload"]))
-        assert arr.shape[:2] == (8, 8)
-
-    feats = image_features(media, require_real_decode=True).collect()
-    assert len(feats) == 3
-    import math
-
-    got = sorted(r["mean_intensity"] for r in feats)
-    # image_features floors to 6 decimals
-    want = sorted(math.floor(i * 40 / 255.0 * 1e6) / 1e6 for i in range(3))
-    for g, w in zip(got, want):
-        assert abs(g - w) < 1e-9
-    assert all(r["width"] == 8 and r["height"] == 8 for r in feats)
 
 
 def _stream(spark, src, schema):

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from nspc_etl_basic_spark.operators.bloom import (
     bloom_might_contain,
-    bloom_prune,
     build_bloom,
 )
 from nspc_etl_basic_spark.operators.skew import skew_report
@@ -52,19 +51,6 @@ def test_bloom_fp_rate_bounded(spark, dim_fact, hash_fn):
     fp_rate = (n_pass - n_true) / max(1, n_nonmember)
     # 286 keys in 2^16 bits, k=5 -> theoretical fp ~ 2e-8; allow 1%
     assert fp_rate < 0.01
-
-
-def test_bloom_prune_exact_equals_semi_join(spark, dim_fact):
-    dim, fact = dim_fact
-    got = sorted(
-        r["row_id"] for r in bloom_prune(fact, dim, "k").collect()
-    )
-    want = sorted(
-        r["row_id"]
-        for r in fact.join(F.broadcast(dim.distinct()), "k", "left_semi")
-        .collect()
-    )
-    assert got == want
 
 
 def test_bloom_membership_is_projection(spark, dim_fact):

@@ -10,7 +10,6 @@ from nspc_etl_basic_spark.operators.dedup import (
     exact_dedup,
     lsh_candidate_pairs,
     minhash_signatures,
-    near_dedup_minhash,
 )
 
 
@@ -59,37 +58,18 @@ def test_exact_dedup_groups_on_hash_not_id(spark):
     assert got == {1: 2, 2: 1}
 
 
-def test_near_dedup_end_to_end_threshold(spark):
-    a = "the quick brown fox jumps over the lazy dog again and again and again"
-    docs = _corpus(
-        spark,
-        [(1, a), (2, a + "!"), (3, "completely different text about spark engines")],
-    )
-    got = near_dedup_minhash(docs, threshold=0.8).collect()
-    assert [(r.id_a, r.id_b) for r in got] == [(1, 2)]
-    assert all(r.jaccard >= 0.8 for r in got)
-
-
-def test_near_dedup_composed_cap_on_by_default(spark):
-    # The composed pipeline must ship with the hot-key guard ON: a
-    # degenerate boilerplate bucket (60 identical docs, bucket size > the
-    # 1000 default is impractical in a unit test, so pass an explicit small
-    # cap through the composed path) contributes zero candidate pairs,
-    # while a distinct near-dup pair in small buckets survives.
+def test_lsh_bucket_cap_drops_mega_bucket(spark):
+    # The hot-key guard: a degenerate boilerplate bucket (30 identical
+    # docs, above a cap of 10) contributes zero candidate pairs, while a
+    # distinct near-dup pair in small buckets survives.
     boiler = [(i, "lorem ipsum dolor sit amet " * 3) for i in range(30)]
     pair = [
         (100, "the quick brown fox jumps over the lazy dog again and again"),
         (101, "the quick brown fox jumps over the lazy dog again and again!"),
     ]
-    docs = _corpus(spark, boiler + pair)
-    got = near_dedup_minhash(docs, threshold=0.8, max_bucket_size=10).collect()
-    assert [(r.id_a, r.id_b) for r in got] == [(100, 101)]
-    # and the default value itself is non-None (the guard is on unless the
-    # caller explicitly asks for exact all-pairs)
-    import inspect
-
-    default = inspect.signature(near_dedup_minhash).parameters["max_bucket_size"].default
-    assert default is not None and default > 0
+    sigs = minhash_signatures(_corpus(spark, boiler + pair))
+    got = lsh_candidate_pairs(sigs, max_bucket_size=10).collect()
+    assert {(r.id_a, r.id_b) for r in got} == {(100, 101)}
 
 
 def test_minhash_null_text_dropped(spark):

@@ -161,21 +161,17 @@ def test_bigrams_use_take_ordered(spark, sf_dir):
 
 
 def test_composed_neardup_has_bucket_cap_filter(spark, sf_dir):
-    """The composed near_dedup_minhash pipeline must carry the LSH
-    hot-key guard by default: the bucket-size window count and its
-    filter must appear in the candidate plan (dropping O(bucket²)
-    mega-buckets is what keeps the self-join scale-safe on raw corpora)."""
+    """A capped LSH candidate plan must carry the hot-key guard: the
+    bucket-size window count and its filter must appear in the plan
+    (dropping O(bucket²) mega-buckets is what keeps the self-join
+    scale-safe on raw corpora)."""
     from nspc_etl_basic_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signatures,
-        near_dedup_minhash,
     )
-    import inspect
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    cap = inspect.signature(near_dedup_minhash).parameters["max_bucket_size"].default
-    assert cap is not None
-    plan = _plan(lsh_candidate_pairs(minhash_signatures(docs), max_bucket_size=cap))
+    plan = _plan(lsh_candidate_pairs(minhash_signatures(docs), max_bucket_size=1000))
     assert "__bsz" in plan, plan
 
 
@@ -529,28 +525,6 @@ def test_dsir_scores_broadcasts_weights(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
     assert "InMemoryTableScan" not in plan and "InMemoryRelation" not in plan
     assert "CartesianProduct" not in plan
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def test_dsir_scores_caches_path_tokenizes_once(spark, sf_dir):
-    """dsir_scores with a caller-owned caches list: the per-(doc,
-    bucket) pre-aggregation is cached (InMemory scan) so the corpus
-    tokenizes once, and the caller can unpersist."""
-    from nspc_etl_basic_spark.operators.dsir import dsir_scores
-    from pyspark.sql import functions as F
-
-    spark.catalog.clearCache()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    caches = []
-    df = dsir_scores(
-        docs, docs.where(F.col("lang") == "en"), caches=caches
-    )
-    plan = _plan_simple(df)
-    assert "BroadcastHashJoin" in plan
-    assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan
-    assert len(caches) == 1
-    for c in caches:
-        c.unpersist()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

@@ -683,69 +683,6 @@ def test_stream_upsert_bucketed_exactly_once_across_restart(spark, tmp_path):
     assert (n2, got2) == (n, got)
 
 
-def test_session_window_stream_matches_batch(spark, tmp_path):
-    """Native session_window in streaming append mode: sessions close
-    only when the watermark passes their end, and the closed sessions
-    match the batch session_window result exactly."""
-    import datetime as dt
-
-    from nspc_etl_basic_spark.streaming.windows import session_window_agg
-
-    base = dt.datetime(2024, 1, 1, 0, 0)
-    rows = [
-        # user 1: two sessions (gap 40 min between event 2 and 3)
-        (1, base + dt.timedelta(minutes=0), "u", 1.0),
-        (2, base + dt.timedelta(minutes=10), "u", 2.0),
-        (3, base + dt.timedelta(minutes=50), "u", 4.0),
-        # user 2: one session
-        (4, base + dt.timedelta(minutes=5), "v", 8.0),
-        # far-future event pushes the watermark past every session end
-        (5, base + dt.timedelta(hours=12), "w", 16.0),
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    batch = spark.createDataFrame(rows, schema)
-    src = tmp_path / "sess_ev"
-    batch.coalesce(1).write.parquet(str(src))
-
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    agg = session_window_agg(
-        stream, gap="30 minutes", watermark="1 minute", key_col="user_id"
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.session_start): (r.session_end, r.n_events, r.sum_value)
-        for r in spark.sql("select * from sess_out").collect()
-    }
-    # batch twin over the same rows (sessions for u and v are closed;
-    # w's session may be withheld by the final watermark — exclude it)
-    expected = {
-        (r.user_id, r.session_start): (r.session_end, r.n_events, r.sum_value)
-        for r in session_window_agg(
-            batch, gap="30 minutes", key_col="user_id"
-        ).collect()
-        if r.user_id != "w"
-    }
-    for k, v in expected.items():
-        assert got.get(k) == v, (k, v, got)
-    # the two u-sessions really are split at the 40-minute gap
-    u_sessions = [k for k in expected if k[0] == "u"]
-    assert len(u_sessions) == 2
-
-
 def test_stream_upsert_cdc_feed_exactly_once(spark, tmp_path):
     """CDC streaming upsert: the change feed records each batch's
     insert/update legs exactly once, tagged by batch, and the snapshot
