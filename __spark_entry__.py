@@ -5242,9 +5242,11 @@ def _build_once(
     Sweep: once the keyed tree exists, every other keyed tree of the
     same (tag, sf) is stale and removed, and so are finished trees of
     the earlier layouts (``_DONE``-marked ``nspc_replay_*`` dirs and the
-    renamed ``nspc_tt_*`` / ``nspc_fp_*`` fixtures). Private build dirs
-    are never swept, so two drivers from different checkouts that share
-    the temp dir never delete each other's build in progress."""
+    renamed ``nspc_tt_*`` / ``nspc_fp_*`` fixtures). A private build dir
+    carries its owner's pid in its name (``nspc_build_p<pid>_*``) and is
+    swept only once that process is gone, so a SIGKILLed build does not
+    leak its dir and two drivers that share the temp dir never delete
+    each other's build in progress."""
     import glob
     import hashlib
     import os
@@ -5264,7 +5266,9 @@ def _build_once(
         tmp, prefix + hashlib.md5(fp.encode()).hexdigest()[:12]
     )
     if not os.path.isdir(work):
-        private = tempfile.mkdtemp(prefix=f"nspc_build_{tag}_{sf_name}_")
+        private = tempfile.mkdtemp(
+            prefix=f"nspc_build_p{os.getpid()}_{tag}_{sf_name}_"
+        )
         try:
             build(private)
             try:
@@ -5284,9 +5288,26 @@ def _build_once(
     ]
     for legacy in ("nspc_tt_", "nspc_fp_"):
         stale += glob.glob(os.path.join(tmp, legacy + hex12))
+    for p in glob.glob(os.path.join(tmp, "nspc_build_p*")):
+        pid = os.path.basename(p)[len("nspc_build_p"):].split("_", 1)[0]
+        if pid.isdigit() and not _pid_alive(int(pid)):
+            stale.append(p)
     for p in stale:
         shutil.rmtree(p, ignore_errors=True)
     return work
+
+
+def _pid_alive(pid: int) -> bool:
+    """Whether process ``pid`` exists (a zombie or another user's counts)."""
+    import os
+
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
 
 
 def _read_file_sink(spark: SparkSession, path: str) -> DataFrame:

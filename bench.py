@@ -11,7 +11,8 @@ Timing methodology: one warmup pass (`warm_up`, shared with
 scripts/microbench.py and scripts/profile_queries.py) amortizes
 JVM/codegen startup, then each query executes to completion through the
 `noop` datasource (full computation, zero serialization-to-driver cost —
-measures the engine, not collect()).
+measures the engine, not collect()), inside a `materialize.scope()` that
+releases the frames the query held.
 
 Telemetry (round 13, purely additive — no timing change): /proc/stat
 CPU-tick deltas are sampled around every timed query and the whole run,
@@ -34,6 +35,7 @@ import re
 import time
 
 import __spark_entry__ as entrymod
+from nspc_etl_basic_spark.materialize import scope
 from nspc_etl_basic_spark.session import get_spark
 
 
@@ -70,9 +72,18 @@ def build_spark(cpus: int):
 def warm_up(spark, sf_dir: str, names) -> None:
     """JVM + whole-stage-codegen JIT + parquet footer caches. Run each named
     query once at sf0.001 (the sibling of `sf_dir`, else `sf_dir` itself)
-    so each plan's generated code is compiled before timing — the timed
-    pass then measures steady-state engine throughput (the 100 TB-relevant
-    number), not one-time JIT."""
+    so the timed pass measures steady-state engine throughput (the 100
+    TB-relevant number), not one-time JIT.
+
+    The classes compiled here are found at timing only while they stay
+    in Spark's codegen cache. The 209 queries generate about 2,700; at
+    Spark's default of 100 entries the timed pass recompiled 3,509 of
+    them (37.6 s of Janino), at the factory's 4,000 it compiles 185 (see
+    `session.CODEGEN_CACHE_ENTRIES`). What is left comes from code the
+    warm-up did not generate: a plan that differs at `sf_dir` (a
+    broadcast chosen at sf0.001, a shuffle at sf0.1) or one that inlines
+    a per-call literal (a random seed, a timestamp) compiles in the timed
+    pass whatever the cache size."""
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
@@ -80,10 +91,10 @@ def warm_up(spark, sf_dir: str, names) -> None:
     qs = entrymod.queries()
     for name in names:
         try:
-            qs[name](spark, warm_dir).write.mode("overwrite").format("noop").save()
+            with scope():
+                qs[name](spark, warm_dir).write.mode("overwrite").format("noop").save()
         except Exception:  # noqa: BLE001 — warmup must never fail the bench
             pass
-    spark.catalog.clearCache()
 
 
 def main() -> None:
@@ -114,11 +125,18 @@ def main() -> None:
         q_t0 = _cpu_ticks()
         # per-query isolation: one broken plan must never zero the whole
         # round's perf evidence (BENCH_r02 died on a single AnalysisException)
+        # storage hygiene between queries: a query's held frames outlive
+        # its call (the returned DF still reads them), and across 100+
+        # queries x repeats a full block manager made later iterative
+        # queries (observed: dedup_components 5 s -> 57 s) pay
+        # eviction/GC. One scope per query releases them after its
+        # repeats, which still share them.
         try:
-            for _ in range(max(1, repeats)):
-                t0 = time.monotonic()
-                qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-                best = min(best, time.monotonic() - t0)
+            with scope():
+                for _ in range(max(1, repeats)):
+                    t0 = time.monotonic()
+                    qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+                    best = min(best, time.monotonic() - t0)
             timings[name] = round(best, 3)
         except Exception as exc:  # noqa: BLE001
             msg = f"{type(exc).__name__}: {exc}"[:300]
@@ -126,13 +144,6 @@ def main() -> None:
             errors[name] = msg
         q_t1 = _cpu_ticks()
         steal_by_query[name] = _ppm(q_t1[0] - q_t0[0], q_t1[2] - q_t0[2])
-        # storage hygiene between queries: several query contracts cache
-        # intermediates they cannot unpersist (the returned DF still
-        # references them); across 100+ queries x repeats the block
-        # manager fills and later iterative queries (observed:
-        # dedup_components 5 s -> 57 s) pay eviction/GC, corrupting
-        # their timings. Repeats of ONE query still share its caches.
-        spark.catalog.clearCache()
 
     run_t1 = _cpu_ticks()
     total = round(

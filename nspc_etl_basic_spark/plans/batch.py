@@ -91,13 +91,17 @@ class BatchJobManager:
             .filter(
                 (F.col("DirectoryPath") == self.directory_path)
                 & F.col("BatchStatus").isin("InProgress", "Failed")
-                & (F.col("BatchStartTime") > F.lit(cutoff))
             )
             .orderBy(F.col("BatchStartTime").desc())
             .limit(1)
             .collect()
         )
-        if candidates:
+        # the age cut runs here, on the newest candidate (it is younger
+        # than the cutoff exactly when some candidate is): as a filter,
+        # the per-call cutoff was a timestamp literal inlined into the
+        # generated code, so every batch compiled the lookup anew
+        start = candidates[0].BatchStartTime if candidates else None
+        if start is not None and start > cutoff:
             row = candidates[0]
             processed, failed = row.FilesProcessed or 0, row.FilesFailed or 0
             remaining = (row.TotalFiles or 0) - processed - failed

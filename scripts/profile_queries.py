@@ -2,6 +2,8 @@
 queries() callable, incl. any eager plan-build actions), EXECUTION time
 (noop sink), and the Spark JOB COUNT each phase submitted — separates
 compile/driver-bound queries from job-overhead-bound and data-bound ones.
+`compiles` and `compile_s` count the generated classes Janino compiled
+for the query (plan build and execution) and the time it spent on them.
 
 Usage: python scripts/profile_queries.py query [query ...]
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
@@ -18,6 +20,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import build_spark, warm_up  # noqa: E402
+from nspc_etl_basic_spark.materialize import scope  # noqa: E402
+from nspc_etl_basic_spark.session import codegen_compiles  # noqa: E402
 
 
 def _next_job_id(spark) -> int:
@@ -37,21 +41,23 @@ def main() -> None:
     out = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"profile:{name}")
-        j0 = _next_job_id(spark)
-        t0 = time.monotonic()
-        df = qs[name](spark, sf_dir)
-        t1 = time.monotonic()
-        j1 = _next_job_id(spark)
-        df.write.mode("overwrite").format("noop").save()
-        t2 = time.monotonic()
-        j2 = _next_job_id(spark)
+        j0, c0 = _next_job_id(spark), codegen_compiles(spark)
+        with scope():
+            t0 = time.monotonic()
+            df = qs[name](spark, sf_dir)
+            t1 = time.monotonic()
+            j1 = _next_job_id(spark)
+            df.write.mode("overwrite").format("noop").save()
+            t2 = time.monotonic()
+        j2, c2 = _next_job_id(spark), codegen_compiles(spark)
         out[name] = {
             "build_s": round(t1 - t0, 3),
             "exec_s": round(t2 - t1, 3),
             "build_jobs": j1 - j0,
             "exec_jobs": j2 - j1,
+            "compiles": c2[0] - c0[0],
+            "compile_s": round(c2[1] - c0[1], 3),
         }
-        spark.catalog.clearCache()
     print(json.dumps(out, indent=1))
     spark.stop()
 

@@ -4,6 +4,7 @@ accumulated batch totals, and the email notification sink."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 
 from nspc_etl_basic_spark import load_config
 from nspc_etl_basic_spark.plans.batch import BatchJobManager, process_directory
+from nspc_etl_basic_spark.session import codegen_compiles
 from nspc_etl_basic_spark.sinks.email import EmailNotificationManager
 from nspc_etl_basic_spark.sinks.metadata import MetadataStore
 from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
@@ -115,6 +117,33 @@ def test_batch_manager_no_resume_when_checkpointing_disabled(spark, tmp_path):
     bid, resumed, processed, failed = mgr.get_or_create_batch_job()
     assert not resumed and bid
     assert processed == failed == 0
+
+
+def test_resume_skips_batches_past_max_age_and_compiles_once(spark, tmp_path):
+    cfg = _cfg(tmp_path)
+    meta = MetadataStore(ParquetWarehouse(spark, str(tmp_path / "wh")), cfg)
+    mgr = BatchJobManager(meta, str(tmp_path / "in"), cfg)
+    now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+
+    def in_progress(bid, age_h, seq):
+        meta.append_batch_event({
+            "BatchJobID": bid, "DirectoryPath": mgr.directory_path,
+            "TotalFiles": 3, "FilesProcessed": 1, "FilesFailed": 0,
+            "BatchStartTime": now - datetime.timedelta(hours=age_h),
+            "BatchEndTime": None, "BatchStatus": "InProgress",
+            "IsResumed": False, "OriginalBatchJobID": None, "EventSeq": seq,
+        })
+
+    in_progress("stale", 30, 1)  # older than max_resume_age_hours (24)
+    bid, resumed, _, _ = mgr.get_or_create_batch_job()
+    assert not resumed and bid != "stale"
+    in_progress("fresh", 1, 2)
+    assert mgr.get_or_create_batch_job() == ("fresh", True, 1, 0)
+    before = codegen_compiles(spark)[0]
+    assert mgr.get_or_create_batch_job() == ("fresh", True, 1, 0)
+    # the lookup's plan carries no per-call literal: the second one finds
+    # every class it generates already compiled
+    assert codegen_compiles(spark)[0] == before
 
 
 # ---------------------------------------------------------------------------

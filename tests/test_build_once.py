@@ -6,11 +6,15 @@ redirected to the test's own directory."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import tempfile
 
 import pytest
 
 import __spark_entry__ as entry
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _dep_a():
@@ -119,3 +123,42 @@ def test_lost_publish_race_uses_the_winners_tree(tmp_root):
     assert work == keyed[0]
     assert open(os.path.join(work, "payload")).read() == "built"
     assert _entries(root) == [os.path.basename(work)]
+
+
+# a build that announces its private dir, then hangs until killed
+HANGING_BUILD = """
+import os, sys, time
+import __spark_entry__ as entry
+
+def build(work):
+    with open(os.path.join(work, "half"), "w") as fh:
+        fh.write("partial")
+    print(work, flush=True)
+    time.sleep(600)
+
+entry._build_once(sys.argv[1], "tag", "t", (), build)
+"""
+
+
+def test_killed_build_is_swept_once_its_owner_is_dead(tmp_root):
+    root, sf = tmp_root
+    env = dict(os.environ, TMPDIR=str(root))
+    env["PYTHONPATH"] = REPO + os.pathsep + env.get("PYTHONPATH", "")
+    proc = subprocess.Popen(
+        [sys.executable, "-c", HANGING_BUILD, sf],
+        cwd=REPO, env=env, stdout=subprocess.PIPE, text=True,
+    )
+    try:
+        private = proc.stdout.readline().strip()
+        assert os.path.dirname(private) == str(root)
+        assert os.path.basename(private).startswith(f"nspc_build_p{proc.pid}_")
+        # the owner is alive: its build is left alone
+        entry._build_once(sf, "other", "t", (_dep_a,), _writer([]))
+        assert os.listdir(private) == ["half"]
+    finally:
+        proc.kill()
+        proc.wait()
+        proc.stdout.close()
+    entry._build_once(sf, "tag", "t", (_dep_a,), _writer([]))
+    left = _entries(root)
+    assert len(left) == 2 and all(p.startswith("nspc_asset_") for p in left), left

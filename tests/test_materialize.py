@@ -1,8 +1,9 @@
 """The cache owner (``materialize.hold`` / ``materialize.scope``): scopes
-release what they hold, and the engine's cached paths leave Spark's
-CacheManager empty once they return. The last two tests guard the rule
-itself: only ``materialize.py`` caches, and no function takes a
-``caches`` list."""
+release what they hold; the engine's cached paths leave Spark's
+CacheManager empty once they return, and driver queries that return a
+plan over held frames leave it empty under the runner's scope. The last
+two tests guard the rule itself: only ``materialize.py`` caches, and no
+function takes a ``caches`` list."""
 
 from __future__ import annotations
 
@@ -144,6 +145,22 @@ def test_bucketed_merge_and_delete_release_their_caches(clean, tmp_path):
     assert (counts.inserted, counts.updated) == (1, 1)
     assert _cache_empty(clean)
     assert t.delete(clean.createDataFrame([(3,), (5,)], "id long")) == 2
+    assert _cache_empty(clean)
+
+
+@pytest.mark.parametrize(
+    "qid",
+    ["graph_triangles", "events_drift_chi2", "d5_merge_changes", "orders_bloom_prune"],
+)
+def test_driver_query_under_a_scope_releases_its_caches(clean, sf_dir, qid):
+    """These queries return a lazy plan over frames they hold, so the
+    frames outlive the call; the runner's scope (``bench.py``, the
+    parity tests) releases them once the result is read."""
+    import __spark_entry__ as entry
+
+    with scope():
+        assert entry.queries()[qid](clean, sf_dir).collect() is not None
+        assert not _cache_empty(clean)
     assert _cache_empty(clean)
 
 

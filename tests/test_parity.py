@@ -14,6 +14,7 @@ import math
 import pytest
 
 import __spark_entry__ as entrymod
+from nspc_etl_basic_spark.materialize import scope
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
@@ -74,8 +75,10 @@ def query_ids():
 
 @pytest.mark.parametrize("qid", query_ids())
 def test_parity(qid, spark, duck, sf_dir):
-    sdf = QUERIES[qid](spark, sf_dir)
-    spark_rows = sdf.collect()
+    # the query's held frames are released once its rows are read
+    with scope():
+        sdf = QUERIES[qid](spark, sf_dir)
+        spark_rows = sdf.collect()
     spark_cols = sdf.columns
 
     if qid not in ORACLES:
