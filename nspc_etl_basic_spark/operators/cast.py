@@ -60,8 +60,9 @@ def cast_and_split(
     """Project/cast ``df`` (all-string) onto ``schema``; return
     ``(valid, invalid)``.
 
-    ``valid`` has exactly the schema's columns with target types (plus any
-    passthrough ``__``-prefixed engine columns when ``keep_extra_cols``).
+    ``valid`` has exactly the schema's columns with target types and
+    metadata (an inferred field's H1 ``sql_type``), plus any passthrough
+    ``__``-prefixed engine columns when ``keep_extra_cols``.
     ``invalid`` keeps the ORIGINAL string values plus an ``__errors``
     array<string> column naming each failed column — the error-log sink
     (H9) consumes it.
@@ -108,7 +109,10 @@ def cast_and_split(
     with_err = df.withColumn(ERROR_COL, errors)
     valid = (
         with_err.filter(F.size(ERROR_COL) == 0)
-        .select(*[casted[f.name].alias(f.name) for f in schema.fields], *extra)
+        .select(
+            *[casted[f.name].alias(f.name, metadata=f.metadata) for f in schema.fields],
+            *extra,
+        )
     )
     invalid = with_err.filter(F.size(ERROR_COL) > 0).select(
         *[F.col(f.name) for f in schema.fields], *extra, F.col(ERROR_COL)

@@ -18,8 +18,12 @@ Transaction semantics:
   tolerant = invalid rows <= max-row-errors -> write valid split, log
              invalid rows; beyond threshold -> no write, file -> error/
              (H4/G2, loader.py:1014-1068)
-Upsert adds: E1 last-wins dedup -> D1 merge snapshot -> D2 true
-inserted/updated split (H5/H6, loader.py:1169-1270).
+Upsert adds: E1 last-wins dedup -> D1 merge -> D2 true inserted/updated
+split (H5/H6, loader.py:1169-1270).
+
+Sinks: ``_table_owner`` picks the target's layout owner once; schema
+authority, upserts and the other table modes then go through its
+``schema()`` / ``merge(source)`` / ``write(df, mode)`` (sinks/writer.py).
 """
 
 from __future__ import annotations
@@ -39,40 +43,53 @@ from nspc_etl_basic_spark.config import load_config
 from nspc_etl_basic_spark.materialize import hold, scope
 from nspc_etl_basic_spark.naming import generate_table_name
 from nspc_etl_basic_spark.operators.cast import cast_and_split
-from nspc_etl_basic_spark.operators.merge import (
-    MergeObservation,
+
+# perfbench's layer spans wrap ``merge_counts``/``merge_upsert`` by their
+# name in this module; the merge itself runs in the table owner
+from nspc_etl_basic_spark.operators.merge import (  # noqa: F401
     dedup_last_wins,
     merge_counts,
     merge_upsert,
 )
 from nspc_etl_basic_spark.operators.schema_inference import infer_schema
-from nspc_etl_basic_spark.sinks.metadata import MetadataStore
-from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse, jdbc_write
+from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
+from nspc_etl_basic_spark.sinks.jdbc_merge import JdbcTable
+from nspc_etl_basic_spark.sinks.metadata import MetadataStore, invalid_row_report
+from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse, SnapshotTable
 from nspc_etl_basic_spark.sources.reader import SEQ_COL, read_any
 
 logger = logging.getLogger(__name__)
 
 
-def _jdbc_options(db_cfg: dict) -> dict:
-    return {
-        k: db_cfg[k] for k in ("driver", "user", "password") if db_cfg.get(k)
-    }
-
-
-def _jdbc_target_schema(spark, url: str, table: str, opts: dict):
-    """Schema of an existing JDBC table, or None when it doesn't exist —
-    the JDBC twin of ``warehouse.exists + .read().schema`` (the existing
-    table's DDL governs the cast, reference
-    test_upsert_operations.py:698-734)."""
-    reader = (
-        spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    )
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load().schema
-    except Exception:  # noqa: BLE001 — missing table surfaces as an analysis error
-        return None
+def _table_owner(spark, config: dict, warehouse, table_name, pk_cols, mode):
+    """The target's keyed-upsert owner; the one place the loader reads
+    ``database.type`` / ``database.layout``. ``type: jdbc`` (the
+    reference's deployment shape) lands data in the database while the
+    metadata tables stay in the warehouse; ``layout: bucketed`` upserts
+    rewrite only the buckets a file's keys touch (for large,
+    frequently-merged targets); otherwise the snapshot table, the only
+    one scd2 folds into."""
+    db_cfg = config.get("database", {})
+    if db_cfg.get("type") == "jdbc" and db_cfg.get("url"):
+        if mode == "scd2":
+            raise ValueError(
+                "table_mode 'scd2' is not supported with database.type "
+                "'jdbc' — the SCD2 fold targets the parquet warehouse"
+            )
+        return JdbcTable(
+            spark, db_cfg["url"], table_name, pk_cols,
+            options={k: db_cfg[k] for k in ("driver", "user", "password") if db_cfg.get(k)},
+            dialect=db_cfg.get("dialect", "ansi"),
+            batch_size=int(config["loader"].get("batch_size", 1000)),
+        )
+    if mode == "upsert" and db_cfg.get("layout") == "bucketed":
+        return BucketedTable(
+            spark,
+            os.path.join(warehouse.path, table_name),
+            pk_cols,
+            n_buckets=int(db_cfg.get("n_buckets", 64)),
+        )
+    return warehouse.table(table_name, pk_cols)
 
 
 @dataclass
@@ -222,6 +239,13 @@ def process_file(
                 file_path, table_name, mode, txn, job_run_id)
 
     try:
+        if txn not in ("strict", "tolerant"):
+            # any other value would skip both validation gates below
+            raise ValueError(
+                f"unknown loader.transaction_mode {txn!r}: "
+                "expected 'strict' or 'tolerant'"
+            )
+        table = _table_owner(spark, config, warehouse, table_name, pk_cols, mode)
         with scope():
             # cached before the first count: the file is parsed once
             df = hold(read_any(spark, file_path, with_seq=True))
@@ -242,61 +266,12 @@ def process_file(
             # reference inserts into the existing DDL and the database rejects
             # mismatches (e.g. 'invalid' into an INT column, the strict-rollback
             # scenario test_upsert_operations.py:698-734). Fresh tables get
-            # file inference. With ``database.type: jdbc`` the authority is the
-            # JDBC table itself (the reference's actual deployment shape).
-            db_cfg = config.get("database", {})
-            use_jdbc = db_cfg.get("type") == "jdbc" and db_cfg.get("url")
-            if use_jdbc and mode == "scd2":
-                # fail up front with a clear message instead of a KeyError
-                # deep in the jdbc writer after the full read/cast work
-                raise ValueError(
-                    "table_mode 'scd2' is not supported with database.type "
-                    "'jdbc' — the SCD2 fold targets the parquet warehouse"
-                )
-            jdbc_opts = _jdbc_options(db_cfg) if use_jdbc else {}
-            # bucketed layout: upserts go through the differential merge
-            # (sinks/bucketed_merge.py) — per-file cost proportional to the
-            # batch's buckets, not the table. The config knob for large,
-            # frequently-merged targets where the snapshot rewrite stops
-            # being runnable per file.
-            bucketed = None
-            if (
-                not use_jdbc
-                and mode == "upsert"
-                and db_cfg.get("layout") == "bucketed"
-            ):
-                from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
-
-                bucketed = BucketedTable(
-                    spark,
-                    os.path.join(warehouse.path, table_name),
-                    pk_cols,
-                    n_buckets=int(db_cfg.get("n_buckets", 64)),
-                )
-            jdbc_struct = None
-            if use_jdbc and mode in ("append", "upsert"):
-                jdbc_struct = _jdbc_target_schema(
-                    spark, db_cfg["url"], table_name, jdbc_opts
-                )
-            # the snapshot target read for schema authority is also the
-            # upsert's merge target (one read of the table per file)
-            target = None
-            if use_jdbc:
-                existing = jdbc_struct is not None
-            elif bucketed is not None:
-                existing = bucketed.exists()
-            else:
-                existing = mode in ("append", "upsert", "scd2") and warehouse.exists(
-                    table_name
-                )
-            if existing:
-                if use_jdbc:
-                    target_struct = jdbc_struct
-                elif bucketed is not None:
-                    target_struct = bucketed.read().schema
-                else:
-                    target = warehouse.read(table_name)
-                    target_struct = target.schema
+            # file inference. A snapshot table's read here is also the
+            # upsert's merge target (one read of the table per file).
+            target_struct = (
+                table.schema() if mode in ("append", "upsert", "scd2") else None
+            )
+            if target_struct is not None:
                 if mode == "scd2":
                     # the stored table carries interval columns instead of the
                     # feed's ts column: schema authority for the feed is the
@@ -353,13 +328,14 @@ def process_file(
                 )
 
             if invalid_count > 0 and not dry_run:
-                meta.write_invalid_rows(invalid, job_run_id, table_name, invalid_count)
+                # one collect serves the error log and the failed-row
+                # artifact; bounded: tolerant mode capped it at
+                # max-row-errors above
+                report = invalid_row_report(invalid).collect()
+                meta.write_invalid_rows(report, job_run_id, table_name)
                 logger.info("%d invalid row(s) recorded for %s", invalid_count, table_name)
                 if log_artifacts:
-                    # bounded: tolerant mode capped this at max-row-errors above
-                    txt = _write_failed_rows_txt(
-                        src_dir, stem, job_run_id, invalid.collect()
-                    )
+                    txt = _write_failed_rows_txt(src_dir, stem, job_run_id, report)
                     if txt:
                         logger.info("failed-row detail written to %s", txt)
 
@@ -404,44 +380,7 @@ def process_file(
                 )
                 return result
 
-            if use_jdbc:
-                # reference deployment shape: data lands in the database; the
-                # metadata/statistics tables stay in the parquet warehouse
-                # (the reference keeps those in the same DB — a config knob a
-                # real deployment can flip by pointing the warehouse at JDBC)
-                h1_types = result.details.get("sql_types")
-                if mode == "upsert":
-                    from nspc_etl_basic_spark.sinks.jdbc_merge import jdbc_upsert
-
-                    counts = jdbc_upsert(
-                        spark, valid, db_cfg["url"], table_name, pk_cols,
-                        sql_types=None if existing else h1_types,
-                        options=jdbc_opts,
-                        dialect=db_cfg.get("dialect", "ansi"),
-                        batch_size=int(loader_cfg.get("batch_size", 1000)),
-                    )
-                    result.rows_inserted = counts.inserted
-                    result.rows_updated = counts.updated
-                else:
-                    clean = valid.select(
-                        [c for c in valid.columns if not c.startswith("__")]
-                    )
-                    jdbc_write(
-                        clean, db_cfg["url"], table_name, mode=mode,
-                        sql_types=None if existing else h1_types,
-                        options=jdbc_opts,
-                        batch_size=int(loader_cfg.get("batch_size", 1000)),
-                    )
-                    result.rows_inserted = rows_read - invalid_count
-            elif bucketed is not None:
-                deduped = dedup_last_wins(valid, pk_cols, order_col=SEQ_COL)
-                deduped = deduped.select(
-                    [c for c in deduped.columns if not c.startswith("__")]
-                )
-                counts = bucketed.merge(deduped)
-                result.rows_inserted = counts.inserted
-                result.rows_updated = counts.updated
-            elif mode == "scd2":
+            if mode == "scd2":
                 # fifth table mode (round-4 extension): the file is a CDC
                 # change feed; the target is a Type-2 dimension history.
                 # (key, ts) uniqueness comes from last-wins dedup on input
@@ -462,6 +401,7 @@ def process_file(
                 feed = dedup_last_wins(
                     valid, pk_cols + [ts_col], order_col=SEQ_COL
                 ).select(*pk_cols, ts_col, *attr_cols, SEQ_COL)
+                target = table.read()
                 prev_rows = 0
                 if target is not None:
                     prev_rows = target.count()
@@ -482,22 +422,16 @@ def process_file(
                     warehouse.read(table_name).count() - prev_rows, 0
                 )
             elif mode == "upsert":
+                # E1 last-wins dedup, then the layout owner's D1 merge with
+                # its observed D2 insert/update split
                 deduped = dedup_last_wins(valid, pk_cols, order_col=SEQ_COL)
-                if target is not None:
-                    observe = MergeObservation()
-                    merged = merge_upsert(target, deduped, pk_cols, observe=observe)
-                    warehouse.overwrite_snapshot(merged, table_name)
-                    counts = merge_counts(observe)
-                    result.rows_inserted = counts.inserted
-                    result.rows_updated = counts.updated
-                else:
-                    observe = MergeObservation()
-                    warehouse.write(
-                        observe.on("merged", deduped), table_name, mode="drop_recreate"
-                    )
-                    result.rows_inserted = merge_counts(observe).inserted
+                counts = table.merge(
+                    deduped.select([c for c in deduped.columns if not c.startswith("__")])
+                )
+                result.rows_inserted = counts.inserted
+                result.rows_updated = counts.updated
             else:
-                warehouse.write(valid, table_name, mode=mode)
+                table.write(valid, mode)
                 result.rows_inserted = rows_read - invalid_count
 
             # optional file-level min/max stats maintenance (sinks/
@@ -505,8 +439,8 @@ def process_file(
             # columns; the index is rebuilt after every commit so pruned
             # reads stay consistent with the current version (the sidecar
             # lives inside the version dir)
-            stats_cols = db_cfg.get("stats_columns") or []
-            if stats_cols and not use_jdbc and bucketed is None:
+            stats_cols = config.get("database", {}).get("stats_columns") or []
+            if stats_cols and isinstance(table, SnapshotTable):
                 have = set(warehouse.read(table_name).columns)
                 cols = [c for c in stats_cols if c in have]
                 if cols:

@@ -101,6 +101,10 @@ class BucketedTable:
     def exists(self) -> bool:
         return self._read_manifest() is not None
 
+    def schema(self) -> StructType | None:
+        """The table's schema, or None when it does not exist."""
+        return self.read().schema if self.exists() else None
+
     # ------------------------------------------------------------------
     # bucketing
     # ------------------------------------------------------------------

@@ -21,6 +21,8 @@ staging path, which is also the only shape that scales:
 At 100 TB the target table never enters Spark at all — the database does
 the keyed matching on its own indexes; Spark's job is bulk-loading the
 (file-sized) staging rows in parallel.
+
+``JdbcTable`` wraps both as the JDBC layout's keyed-upsert owner.
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from nspc_etl_basic_spark.operators.merge import MergeCounts, dedup_last_wins
 from nspc_etl_basic_spark.sinks.writer import jdbc_write
@@ -245,3 +248,65 @@ def jdbc_upsert(
         return MergeCounts(inserted=total - updated, updated=updated)
     finally:
         conn.close()
+
+
+def _recorded_ddl(df: DataFrame) -> dict[str, str] | None:
+    """The H1 types ``infer_schema`` recorded on ``df``'s fields."""
+    return {
+        f.name: f.metadata["sql_type"]
+        for f in df.schema.fields
+        if "sql_type" in f.metadata
+    } or None
+
+
+class JdbcTable:
+    """One JDBC table's keyed-upsert owner (sinks/writer.py), built from
+    the deployment's connection settings (``options``: driver, user,
+    password). A table that ``merge`` or ``write`` creates gets the H1
+    DDL recorded on the source's fields."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        url: str,
+        table: str,
+        pk_cols: list[str],
+        options: dict | None = None,
+        dialect: str = "ansi",
+        batch_size: int = 1000,
+    ):
+        self.spark = spark
+        self.url = url
+        self.table = table
+        self.pk_cols = list(pk_cols)
+        self.options = dict(options or {})
+        self.dialect = dialect
+        self.batch_size = int(batch_size)
+
+    def schema(self) -> StructType | None:
+        """The existing table's schema, or None when it does not exist."""
+        reader = (
+            self.spark.read.format("jdbc")
+            .option("url", self.url)
+            .option("dbtable", self.table)
+        )
+        for k, v in self.options.items():
+            reader = reader.option(k, v)
+        try:
+            return reader.load().schema
+        except Exception:  # noqa: BLE001 — missing table surfaces as an analysis error
+            return None
+
+    def merge(self, source: DataFrame) -> MergeCounts:
+        return jdbc_upsert(
+            self.spark, source, self.url, self.table, self.pk_cols,
+            sql_types=_recorded_ddl(source), options=self.options,
+            dialect=self.dialect, batch_size=self.batch_size,
+        )
+
+    def write(self, df: DataFrame, mode: str) -> None:
+        df = df.select([c for c in df.columns if not c.startswith("__")])
+        jdbc_write(
+            df, self.url, self.table, mode=mode, sql_types=_recorded_ddl(df),
+            options=self.options, batch_size=self.batch_size,
+        )

@@ -13,6 +13,7 @@ UPDATE — the Spark-native equivalent of the reference's in-place updates.
 from __future__ import annotations
 
 import datetime as _dt
+import uuid
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -87,6 +88,20 @@ QUALITY_SCHEMA = T.StructType(
 )
 
 
+def invalid_row_report(invalid: DataFrame) -> DataFrame:
+    """``cast_and_split``'s ``invalid`` plus the EtlJobError fields Spark
+    computes per row (``__ColumnName``, ``__ErrorMessage``); collected
+    once for ``write_invalid_rows`` and the failed-row artifact."""
+    from nspc_etl_basic_spark.operators.cast import ERROR_COL
+
+    row = [c for c in invalid.columns if c != ERROR_COL]
+    return invalid.select(
+        "*",
+        F.array_join(F.col(ERROR_COL), "; ").alias("__ColumnName"),
+        F.to_json(F.struct(*row)).alias("__ErrorMessage"),
+    )
+
+
 class MetadataStore:
     def __init__(self, warehouse: ParquetWarehouse, config: dict | None = None):
         self.wh = warehouse
@@ -128,29 +143,27 @@ class MetadataStore:
         return self.wh.read(self.stats_table)
 
     # ---- H9: error log
-    def write_invalid_rows(
-        self, invalid: DataFrame, job_run_id: str, table_name: str, n_invalid: int
-    ) -> None:
-        """Distributed error sink: one EtlJobError row per invalid source
-        row (G2's failed-row log), no driver-side iteration. ``n_invalid``
-        is the row count of ``invalid`` the caller already holds: the
-        sink runs one Spark job (the append), none when it is 0."""
-        from nspc_etl_basic_spark.operators.cast import ERROR_COL
-
-        if n_invalid == 0:
+    def write_invalid_rows(self, report: list, job_run_id: str, table_name: str) -> None:
+        """One EtlJobError row per collected ``invalid_row_report`` row
+        (G2). ``ErrorID``/``ErrorTimestamp`` are made on the driver:
+        ``uuid()`` and ``current_timestamp()`` get inlined into generated
+        code, a new class per file."""
+        if not report:
             return
-        rows = invalid.select(
-            F.expr("uuid()").alias("ErrorID"),
-            F.lit(job_run_id).alias("JobRunID"),
-            F.lit(table_name).alias("TableName"),
-            F.array_join(F.col(ERROR_COL), "; ").alias("ColumnName"),
-            F.lit("CAST_VALIDATION").alias("ErrorType"),
-            F.to_json(F.struct(*[c for c in invalid.columns if c != ERROR_COL])).alias(
-                "ErrorMessage"
-            ),
-            F.current_timestamp().alias("ErrorTimestamp"),
-        )
-        rows.write.mode("append").parquet(self.wh.table_path(self.error_table))
+        now = _dt.datetime.now(_dt.timezone.utc)
+        rows = [
+            {
+                "ErrorID": str(uuid.uuid4()),
+                "JobRunID": job_run_id,
+                "TableName": table_name,
+                "ColumnName": r["__ColumnName"],
+                "ErrorType": "CAST_VALIDATION",
+                "ErrorMessage": r["__ErrorMessage"],
+                "ErrorTimestamp": now,
+            }
+            for r in report
+        ]
+        self._append(rows, ERROR_LOG_SCHEMA, self.error_table)
 
     # ---- quality-check results (round-4 extension; same append-only shape)
     def write_quality_results(

@@ -1,13 +1,18 @@
 """Table sinks + table-mode semantics (SURVEY.md §2 H1-H7).
 
 Primary store is a Parquet warehouse directory (one subdir per table) —
-matches the driver's parquet testdata and the DuckDB oracle. A JDBC writer
-with ``createTableColumnTypes`` DDL parity hangs off the same interface for
-reference-compatible SQL Server targets.
+matches the driver's parquet testdata and the DuckDB oracle. The JDBC
+writer (``jdbc_write``, H1 DDL parity for SQL Server targets) is wrapped
+by ``sinks/jdbc_merge.JdbcTable``.
 
 Mode mapping (reference ``handle_existing_table``, loader.py:895-932):
   drop_recreate -> versioned snapshot commit | append -> append |
   fail -> error | upsert -> snapshot rewrite via operators.merge.
+
+One keyed-upsert owner per table layout, one surface — ``schema()``,
+``merge(source) -> MergeCounts``, ``write(df, mode)``: ``SnapshotTable``
+(``ParquetWarehouse.table``), ``BucketedTable`` and ``JdbcTable``. The
+loader and the streaming sinks merge only through it.
 
 Commit protocol (object-store safe)
 -----------------------------------
@@ -63,6 +68,14 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from nspc_etl_basic_spark.operators.merge import (
+    MergeCounts,
+    MergeObservation,
+    merge_counts,
+    merge_upsert,
+)
 
 MANIFEST_NAME = "_current"
 #: BucketedTable's manifest name (sinks/bucketed_merge.py)
@@ -503,6 +516,50 @@ class ParquetWarehouse:
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self.table_path(name), ignore_errors=True)
+
+    def table(self, name: str, pk_cols: list[str]) -> "SnapshotTable":
+        """The keyed-upsert owner of snapshot table ``name``."""
+        return SnapshotTable(self, name, pk_cols)
+
+
+class SnapshotTable:
+    """One snapshot table's keyed-upsert owner (module docstring). It
+    reads the table at most once between its commits: schema authority,
+    a caller's change feed and the merge share that read, and each
+    commit through the handle drops it."""
+
+    def __init__(self, warehouse: ParquetWarehouse, name: str, pk_cols: list[str]):
+        self.wh = warehouse
+        self.name = name
+        self.pk_cols = list(pk_cols)
+        self._current: DataFrame | None = None
+
+    def read(self) -> DataFrame | None:
+        """The current snapshot, or None when the table does not exist."""
+        if self._current is None and self.wh.exists(self.name):
+            self._current = self.wh.read(self.name)
+        return self._current
+
+    def schema(self) -> StructType | None:
+        current = self.read()
+        return None if current is None else current.schema
+
+    def merge(self, source: DataFrame) -> MergeCounts:
+        """D1 + D2: upsert the key-unique ``source`` and commit; the
+        insert/update split is observed on the commit's write."""
+        target = self.read()
+        observe = MergeObservation()
+        if target is None:
+            self.write(observe.on("merged", source), "drop_recreate")
+        else:
+            merged = merge_upsert(target, source, self.pk_cols, observe=observe)
+            self.wh.overwrite_snapshot(merged, self.name)
+            self._current = None
+        return merge_counts(observe)
+
+    def write(self, df: DataFrame, mode: str) -> None:
+        self.wh.write(df, self.name, mode=mode)
+        self._current = None
 
 
 #: H1 (SQL Server spelling) -> Spark-parseable DDL. Spark validates

@@ -5,8 +5,7 @@ from nspc_etl_basic_spark.streaming.dedup import (
 from nspc_etl_basic_spark.streaming.ingest import (
     run_available_now,
     run_stream_upsert,
-    run_stream_upsert_bucketed,
-    run_stream_upsert_jdbc,
+    run_stream_upsert_cdc,
     stream_directory,
 )
 from nspc_etl_basic_spark.streaming.windows import (
@@ -17,6 +16,7 @@ from nspc_etl_basic_spark.streaming.sessionize import sessionize_stateful
 from nspc_etl_basic_spark.streaming.joins import attribution_join
 from nspc_etl_basic_spark.streaming.quality import QualityGateError, run_stream_quality
 from nspc_etl_basic_spark.streaming.scd import run_stream_scd2
+from nspc_etl_basic_spark.streaming.mv import run_stream_mv
 from nspc_etl_basic_spark.streaming.anomaly import run_stream_anomaly, stats_store_table
 from nspc_etl_basic_spark.streaming.spandedup import (
     gram_store_table,
@@ -29,6 +29,7 @@ __all__ = [
     "QualityGateError",
     "run_stream_quality",
     "run_stream_scd2",
+    "run_stream_mv",
     "run_stream_anomaly",
     "stats_store_table",
     "gram_store_table",
@@ -37,8 +38,7 @@ __all__ = [
     "stream_directory",
     "run_available_now",
     "run_stream_upsert",
-    "run_stream_upsert_bucketed",
-    "run_stream_upsert_jdbc",
+    "run_stream_upsert_cdc",
     "windowed_agg",
     "sliding_window_agg",
     "sessionize_stateful",

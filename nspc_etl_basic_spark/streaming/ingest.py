@@ -11,6 +11,10 @@ and ``maxFilesPerTrigger`` bounds per-micro-batch work.
 Scale: the file-source listing is incremental; each micro-batch is a
 normal Catalyst-planned job, so everything in operators/ composes
 unchanged over ``readStream`` inputs.
+
+Keyed sinks merge only through a layout's upsert owner (sinks/writer.py):
+``run_stream_upsert`` takes any of the three; the CDC and MV sinks merge
+through the snapshot owner, reusing the read their change feed comes from.
 """
 
 from __future__ import annotations
@@ -116,112 +120,29 @@ def _content_last_wins(
 
 def run_stream_upsert(
     df: DataFrame,
-    warehouse,
-    table: str,
-    pk_cols: list[str],
+    table,
     checkpoint_path: str,
     dedup_order_col: str | None = None,
     query_name: str = "stream_upsert",
 ):
-    """Continuous upsert: every micro-batch MERGEs into the warehouse
-    snapshot via ``foreachBatch`` — the streaming twin of the H5/H6
-    upsert path, against the same manifest-committed table the batch
-    engine writes.
+    """Continuous keyed upsert, the streaming twin of the H5/H6 path:
+    each micro-batch is last-wins deduped on ``table.pk_cols`` (by
+    ``dedup_order_col`` if given, then the content tie-break) and
+    merged through ``table.merge``. ``table`` is any layout's owner:
+    ``ParquetWarehouse.table(name, pk_cols)`` rewrites the snapshot per
+    trigger (|table|, not |batch| — bound the rate with
+    maxFilesPerTrigger); ``BucketedTable`` rewrites only the buckets the
+    batch's keys touch; ``JdbcTable`` stages the batch and MERGEs
+    server-side, so the target never transits Spark.
 
-    Semantics per micro-batch: last-wins dedup on the PK within the
-    batch (ordered by ``dedup_order_col`` if given, the E1 contract),
-    then operators.merge.merge_upsert against the current snapshot and a
-    manifest-pointer commit. The checkpoint makes file delivery
-    exactly-once; the MERGE makes re-delivery idempotent anyway
-    (replaying a batch re-merges the same rows to the same result), so a
-    crash between the data commit and the checkpoint write cannot
-    duplicate rows — the safety argument the reference's per-file
-    stats-table dance approximates.
-
-    ``warehouse`` is a sinks.writer.ParquetWarehouse. Single writer per
-    table (same model as the batch engine).
-
-    Scale note: each micro-batch pays a snapshot REWRITE proportional to
-    |table|, not |batch| — the same trade the batch upsert makes, priced
-    per trigger. Right for moderate-rate upsert streams into mid-size
-    tables (bound the trigger rate with maxFilesPerTrigger / scheduled
-    AvailableNow drains); for high-rate streams into 100 TB tables the
-    upgrade path is a row-level-merge table format (Delta/Iceberg),
-    which slots in behind this same foreachBatch without changing the
-    operator's contract.
+    Exactly-once: the checkpoint gives at-least-once delivery and the
+    keyed merge is idempotent under replay of the same batch content, so
+    a crash between the data commit and the checkpoint write converges
+    to the same table state. Single writer per table.
     """
-    from nspc_etl_basic_spark.operators.merge import merge_upsert
-
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        src = _content_last_wins(batch_df, pk_cols, dedup_order_col)
-        if warehouse.exists(table):
-            merged = merge_upsert(warehouse.read(table), src, pk_cols)
-        else:
-            merged = src
-        warehouse.overwrite_snapshot(merged, table)
-
-    writer = df.writeStream.foreachBatch(_merge_batch)
-    return drain(writer, checkpoint_path, query_name)
-
-
-def run_stream_upsert_bucketed(
-    df: DataFrame,
-    table,
-    checkpoint_path: str,
-    dedup_order_col: str | None = None,
-    query_name: str = "stream_upsert_bucketed",
-):
-    """Continuous upsert into a ``sinks.bucketed_merge.BucketedTable``:
-    each micro-batch rewrites ONLY the buckets its keys touch — the
-    streaming sink shape that stays runnable when the target table is far
-    larger than any batch (the snapshot-path ``run_stream_upsert`` pays
-    |table| per trigger; this pays ~min(K, N)/N of it).
-
-    Same exactly-once argument as the other foreachBatch sinks: the
-    checkpoint is at-least-once, the content tie-break pins the winning
-    row deterministically, and the bucketed merge is idempotent under
-    replay of the same batch content."""
 
     def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
         table.merge(_content_last_wins(batch_df, table.pk_cols, dedup_order_col))
-
-    writer = df.writeStream.foreachBatch(_merge_batch)
-    return drain(writer, checkpoint_path, query_name)
-
-
-def run_stream_upsert_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    pk_cols: list[str],
-    checkpoint_path: str,
-    options: dict | None = None,
-    dialect: str = "ansi",
-    dedup_order_col: str | None = None,
-    batch_size: int = 1000,
-    query_name: str = "stream_upsert_jdbc",
-):
-    """Continuous keyed upsert into a JDBC target: every micro-batch runs
-    the staging-table + server-side MERGE path (sinks/jdbc_merge.py) via
-    ``foreachBatch`` — the streaming twin of the reference's poll-and-load
-    loop against its actual SQL Server deployment.
-
-    Exactly-once: the checkpoint gives at-least-once micro-batch
-    delivery, and the MERGE is idempotent under replay of the same batch
-    content (the content tie-break dedup pins WHICH row wins a duplicate
-    key deterministically), so crash-replays converge to the same table
-    state. Scale: per trigger, Spark moves only the batch (parallel
-    staging load); the server matches against its own indexes — the
-    target never transits Spark regardless of its size.
-    """
-    from nspc_etl_basic_spark.sinks.jdbc_merge import jdbc_upsert
-
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        src = _content_last_wins(batch_df, pk_cols, dedup_order_col)
-        jdbc_upsert(
-            batch_df.sparkSession, src, url, table, pk_cols,
-            options=options, dialect=dialect, batch_size=batch_size,
-        )
 
     writer = df.writeStream.foreachBatch(_merge_batch)
     return drain(writer, checkpoint_path, query_name)
@@ -257,7 +178,7 @@ def run_stream_upsert_cdc(
     """
     from pyspark.sql import functions as F
 
-    from nspc_etl_basic_spark.operators.merge import merge_changes, merge_upsert
+    from nspc_etl_basic_spark.operators.merge import merge_changes
 
     changes_table = f"{table}_changes"
 
@@ -274,20 +195,19 @@ def run_stream_upsert_cdc(
         # per-batch scope: a long-running stream must not accumulate
         # one cached plan per micro-batch
         with scope():
-            if warehouse.exists(table):
-                tgt = warehouse.read(table)
+            snapshot = warehouse.table(table, pk_cols)
+            tgt = snapshot.read()  # the feed and the merge share this read
+            if tgt is not None:
                 feed = merge_changes(tgt, src, pk_cols)
-                merged = merge_upsert(tgt, src, pk_cols)
             else:
                 feed = src.select(F.lit("insert").alias("op"), "*")
-                merged = src
             if not feed_done:
                 warehouse.write(
                     feed.withColumn("batch_id", F.lit(int(batch_id))),
                     changes_table,
                     mode="append",
                 )
-            warehouse.overwrite_snapshot(merged, table)
+            snapshot.merge(src)
 
     writer = df.writeStream.foreachBatch(_merge_batch)
     return drain(writer, checkpoint_path, query_name)

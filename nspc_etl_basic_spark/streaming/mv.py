@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nspc_etl_basic_spark.materialize import scope
-from nspc_etl_basic_spark.operators.merge import merge_changes, merge_upsert
+from nspc_etl_basic_spark.operators.merge import merge_changes
 from nspc_etl_basic_spark.operators.mv import incremental_refresh, summary_mv
 from nspc_etl_basic_spark.streaming.ingest import _content_last_wins, drain
 
@@ -56,13 +56,12 @@ def run_stream_mv(
     def _fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         src = _content_last_wins(batch_df, pk_cols, dedup_order_col)
         with scope():  # per-batch release of merge_changes' cache
-            if warehouse.exists(table):
-                tgt = warehouse.read(table)
+            base = warehouse.table(table, pk_cols)
+            tgt = base.read()  # the feed and the merge share this read
+            if tgt is not None:
                 feed = merge_changes(tgt, src, pk_cols)
-                merged = merge_upsert(tgt, src, pk_cols)
             else:
                 feed = src.select(F.lit("insert").alias("op"), "*")
-                merged = src
             if warehouse.exists(mv_table):
                 prev_full = warehouse.read(mv_table)
                 applied = prev_full.agg(
@@ -77,7 +76,7 @@ def run_stream_mv(
                     prev, feed, group_cols, sum_cols
                 ).withColumn("batch_id", F.lit(int(batch_id)))
                 warehouse.overwrite_snapshot(mv_new, mv_table)
-            warehouse.overwrite_snapshot(merged, table)
+            base.merge(src)
 
     writer = df.writeStream.foreachBatch(_fold_batch)
     return drain(writer, checkpoint_path, query_name)

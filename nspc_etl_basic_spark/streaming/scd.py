@@ -20,6 +20,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 
+from nspc_etl_basic_spark.operators.merge import dedup_last_wins
 from nspc_etl_basic_spark.operators.scd import scd2_apply_changes, scd2_from_feed
 from nspc_etl_basic_spark.streaming.ingest import drain
 
@@ -44,21 +45,14 @@ def run_stream_scd2(
     changes inside one micro-batch pick a partition-order-dependent
     winner — pass one whenever the source can collide.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     def _apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         src = batch_df
         if dedup_order_col is not None:
-            w = Window.partitionBy(
-                *[F.col(k) for k in key_cols], F.col(ts_col)
-            ).orderBy(F.col(dedup_order_col).desc())
-            src = (
-                src.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
+            src = dedup_last_wins(
+                src, [*key_cols, ts_col], order_col=dedup_order_col
             )
         src = src.select(*key_cols, ts_col, *attr_cols)
         if warehouse.exists(table):

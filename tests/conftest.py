@@ -70,14 +70,11 @@ SLOW_TESTS = {
     "test_stream_stream_attribution_join_matches_batch",
     "test_windowed_append_drops_late_rows_across_restart",
     "test_stream_dedup_keys_across_restart",
-    "test_stream_upsert_bucketed_exactly_once_across_restart",
     "test_sessionize_stateful_emits_closed_sessions",
     "test_sessionize_stateful_preserves_microseconds",
     "test_stream_novelty_first_seen_attribution",
     "test_stream_upsert_cdc_feed_exactly_once",
     "test_stream_dedup_exact_first_wins",
-    "test_stream_upsert_jdbc_merges_microbatches",
-    "test_stream_upsert_bucketed_touches_only_key_buckets",
     "test_stream_upsert_dedup_tiebreak_is_deterministic",
     "test_superset_guarantee_across_skewed_batches",
     "test_stream_heavy_hitters_tracks_and_reports",

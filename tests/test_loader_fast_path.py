@@ -212,3 +212,61 @@ def test_clean_upsert_job_count_pin(spark, tmp_path):
     assert (r.status, r.rows_inserted, r.rows_updated) == ("Completed", 50, 50)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= MAX_JOBS_PER_CLEAN_UPSERT, len(jobs)
+
+
+def test_error_log_has_one_row_per_invalid_row(spark, tmp_path):
+    """EtlJobError contents: one row per invalid row, its failed columns'
+    messages and the raw row as JSON (the format the error log has
+    always had), with a unique id and the load's time."""
+    seed = "id,name,amount\n1,a,1.5\n2,b,2.5\n"
+    assert _load(spark, tmp_path, "a.csv", seed).status == "Completed"
+    r = _load(spark, tmp_path, "b.csv", "id,name,amount\n2,bb,x\n3,c,3.5\nbad,d,4.5\n")
+    assert (r.status, r.rows_inserted, r.rows_updated, r.rows_failed) == (
+        "Completed", 1, 0, 2,
+    )
+    err = spark.read.parquet(str(tmp_path / "wh" / "EtlJobError")).collect()
+    assert sorted(
+        (e.JobRunID, e.TableName, e.ColumnName, e.ErrorType, e.ErrorMessage)
+        for e in err
+    ) == [
+        (r.job_run_id, "t", "column 'amount' failed cast to decimal(18,4)",
+         "CAST_VALIDATION", '{"id":"2","name":"bb","amount":"x","__seq":0}'),
+        (r.job_run_id, "t", "column 'id' failed cast to bigint",
+         "CAST_VALIDATION", '{"id":"bad","name":"d","amount":"4.5","__seq":2}'),
+    ]
+    assert len({e.ErrorID for e in err}) == 2
+    now = datetime.datetime.now()
+    assert all(abs((e.ErrorTimestamp - now).total_seconds()) < 600 for e in err)
+
+
+def test_warm_tolerant_file_with_invalid_rows_compiles_nothing(spark, tmp_path):
+    """Once a table's tolerant loads are warm, another file with invalid
+    rows finds every generated class compiled: the error log's id and
+    time are made on the driver, not by ``uuid()`` and
+    ``current_timestamp()``, whose per-query values Spark inlines into
+    generated code (one new class per file)."""
+    from nspc_etl_basic_spark.session import codegen_compiles
+
+    def bad_file(i):
+        return f"id,name,amount\n{i},n{i},x\n{i + 1},m{i},{i}.5\n"
+
+    assert _load(spark, tmp_path, "a.csv", "id,name,amount\n1,a,1.5\n").status == "Completed"
+    for i in (10, 20):
+        assert _load(spark, tmp_path, f"w{i}.csv", bad_file(i)).rows_failed == 1
+    before = codegen_compiles(spark)[0]
+    r = _load(spark, tmp_path, "c.csv", bad_file(30))
+    assert (r.status, r.rows_failed) == ("Completed", 1)
+    assert codegen_compiles(spark)[0] - before == 0
+
+
+def test_unknown_transaction_mode_fails_before_the_read(spark, tmp_path):
+    """A mode other than strict/tolerant would skip both validation
+    gates; the file fails up front instead, and nothing is written."""
+    cfg = _cfg(tmp_path)
+    cfg["loader"]["transaction_mode"] = "Strict"
+    path = tmp_path / "a.csv"
+    path.write_text("id,v\n1,x\n")
+    r = process_file(spark, str(path), cfg, move_files=False)
+    assert (r.status, r.rows_read) == ("Failed", 0)
+    assert "transaction_mode" in r.error_message and "'Strict'" in r.error_message
+    assert not ParquetWarehouse(spark, str(tmp_path / "wh")).exists("t")

@@ -413,51 +413,116 @@ def test_stream_stream_left_outer_null_extends_unmatched(spark, tmp_path):
     assert rows == [(100, 1), (100, 2), (101, None)]
 
 
-def test_stream_upsert_merges_microbatches_exactly_once(spark, tmp_path):
-    from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
+UPSERT_SCHEMA = T.StructType(
+    [
+        T.StructField("pk", T.LongType()),
+        T.StructField("val", T.StringType()),
+        T.StructField("seq", T.LongType()),
+    ]
+)
+
+
+def _stream_table(spark, tmp_path, layout):
+    """A fresh ``layout`` table keyed on ``pk`` and a reader of its rows."""
+    if layout == "snapshot":
+        from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
+
+        wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+        return wh.table("t_stream", ["pk"]), lambda: wh.read("t_stream")
+    if layout == "bucketed":
+        from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
+
+        table = BucketedTable(spark, str(tmp_path / "bt"), ["pk"], n_buckets=16)
+        return table, table.read
+    from nspc_etl_basic_spark.sinks.jdbc_merge import JdbcTable
+
+    driver = "org.apache.derby.jdbc.EmbeddedDriver"
+    url = f"jdbc:derby:{tmp_path}/sdb;create=true"
+    table = JdbcTable(spark, url, "t_sj", ["pk"], options={"driver": driver})
+    return table, lambda: (
+        spark.read.format("jdbc").option("url", url).option("dbtable", "t_sj")
+        .option("driver", driver).load()
+    )
+
+
+@pytest.mark.parametrize("layout", ["snapshot", "bucketed", "jdbc"])
+def test_stream_upsert_merges_microbatches_exactly_once(spark, tmp_path, layout):
+    """``run_stream_upsert`` into every layout's owner: a fresh table,
+    in-batch last-wins on ``seq``, a checkpointed no-op re-drain, a
+    restart that processes only the new file, and a lost checkpoint
+    whose full replay converges to the same rows (keyed merge plus the
+    content tie-break make redelivery idempotent). A bucketed merge
+    rewrites only the buckets its keys hash to."""
+    import json
+    import os
+    import shutil
+
+    from nspc_etl_basic_spark.sinks.bucketed_merge import MANIFEST
     from nspc_etl_basic_spark.streaming.ingest import (
         run_stream_upsert,
         stream_directory,
     )
 
-    schema = T.StructType(
-        [
-            T.StructField("pk", T.LongType()),
-            T.StructField("val", T.StringType()),
-            T.StructField("seq", T.LongType()),
-        ]
-    )
     src = tmp_path / "in"
     src.mkdir()
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     ckpt = str(tmp_path / "ckpt")
+    table, read = _stream_table(spark, tmp_path, layout)
+
+    def add_file(rows):
+        spark.createDataFrame(rows, UPSERT_SCHEMA).coalesce(1).write.parquet(
+            str(src), mode="append"
+        )
 
     def drain():
-        stream = stream_directory(
-            spark, str(src), schema, fmt="parquet", options={}
-        )
-        run_stream_upsert(
-            stream, wh, "t_stream", ["pk"], ckpt, dedup_order_col="seq"
-        )
+        stream = stream_directory(spark, str(src), UPSERT_SCHEMA, fmt="parquet")
+        run_stream_upsert(stream, table, ckpt, dedup_order_col="seq")
 
-    spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 2), (2, "b2", 3)], schema
-    ).coalesce(1).write.parquet(str(src), mode="append")
-    drain()
-    got = {r.pk: r.val for r in wh.read("t_stream").collect()}
-    assert got == {1: "a", 2: "b2"}  # in-batch last-wins on seq
+    def state():
+        rows = read().collect()
+        return len(rows), {r.pk: r.val for r in rows}
 
-    # second drain: one update + one insert; old file NOT reprocessed
-    spark.createDataFrame([(1, "a9", 9), (3, "c", 10)], schema).coalesce(
-        1
-    ).write.parquet(str(src), mode="append")
-    drain()
-    got = {r.pk: r.val for r in wh.read("t_stream").collect()}
-    assert got == {1: "a9", 2: "b2", 3: "c"}
+    def bucket_versions():
+        if layout != "bucketed":
+            return {}
+        with open(os.path.join(table.path, MANIFEST), encoding="utf-8") as fh:
+            return json.load(fh)["buckets"]
 
-    # re-drain with nothing new: checkpoint makes it a no-op
+    # into a fresh table
+    add_file([(i, "base", 0) for i in range(100)])
     drain()
-    assert {r.pk: r.val for r in wh.read("t_stream").collect()} == got
+    n, got = state()
+    assert n == len(got) == 100
+    v0 = set(bucket_versions().values())
+
+    # in-batch last-wins on seq; untouched keys keep their rows
+    add_file([(1, "a", 1), (2, "b", 2), (2, "b2", 3), (200, "n200", 3)])
+    drain()
+    n, got = state()
+    assert n == len(got) == 101
+    assert (got[1], got[2], got[200], got[5]) == ("a", "b2", "n200", "base")
+    if layout == "bucketed":
+        m1 = bucket_versions()
+        new_vs = set(m1.values()) - v0
+        assert len(new_vs) == 1  # one commit
+        flipped = [b for b, v in m1.items() if v in new_vs]
+        assert 1 <= len(flipped) <= 3  # only the 3 keys' buckets
+
+    # checkpointed: a re-drain with nothing new is a no-op
+    before = (n, got), bucket_versions()
+    drain()
+    assert (state(), bucket_versions()) == before
+
+    # restart with a new file: only it is processed
+    add_file([(1, "a9", 9), (3, "c", 10), (201, "n201", 10)])
+    drain()
+    n, got = state()
+    assert n == len(got) == 102
+    assert (got[1], got[2], got[3], got[201]) == ("a9", "b2", "c", "n201")
+
+    # checkpoint lost: the full replay converges to the identical state
+    shutil.rmtree(ckpt)
+    drain()
+    assert state() == (n, got)
 
 
 def test_stream_upsert_dedup_tiebreak_is_deterministic(spark, tmp_path):
@@ -497,190 +562,12 @@ def test_stream_upsert_dedup_tiebreak_is_deterministic(spark, tmp_path):
         stream = stream_directory(spark, str(src), schema, fmt="parquet")
         run_stream_upsert(
             stream,
-            wh,
-            "t",
-            ["pk"],
+            wh.table("t", ["pk"]),
             str(tmp_path / f"ckpt_{attempt}"),
             dedup_order_col="seq",
         )
         results.append({r.pk: r.val for r in wh.read("t").collect()})
     assert results[0] == results[1] == {1: "zeta"}
-
-
-def test_stream_upsert_jdbc_merges_microbatches(spark, tmp_path):
-    """Streaming keyed upsert into a JDBC target (embedded Derby): each
-    drain stages the micro-batch and MERGEs server-side; the checkpoint
-    prevents reprocessing."""
-    from nspc_etl_basic_spark.streaming.ingest import (
-        run_stream_upsert_jdbc,
-        stream_directory,
-    )
-
-    driver = "org.apache.derby.jdbc.EmbeddedDriver"
-    url = f"jdbc:derby:{tmp_path}/sdb;create=true"
-    schema = T.StructType(
-        [
-            T.StructField("pk", T.LongType()),
-            T.StructField("val", T.StringType()),
-            T.StructField("seq", T.LongType()),
-        ]
-    )
-    src = tmp_path / "in"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain():
-        stream = stream_directory(spark, str(src), schema, fmt="parquet")
-        run_stream_upsert_jdbc(
-            stream, url, "t_sj", ["pk"], ckpt,
-            options={"driver": driver}, dedup_order_col="seq",
-        )
-
-    def read_back():
-        df = (
-            spark.read.format("jdbc")
-            .option("url", url).option("dbtable", "t_sj")
-            .option("driver", driver).load()
-        )
-        return {r.pk: r.val for r in df.collect()}
-
-    spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 2), (2, "b2", 3)], schema
-    ).coalesce(1).write.parquet(str(src), mode="append")
-    drain()
-    assert read_back() == {1: "a", 2: "b2"}
-
-    spark.createDataFrame([(1, "a9", 9), (3, "c", 10)], schema).coalesce(
-        1
-    ).write.parquet(str(src), mode="append")
-    drain()
-    assert read_back() == {1: "a9", 2: "b2", 3: "c"}
-
-    # nothing new: checkpointed no-op
-    drain()
-    assert read_back() == {1: "a9", 2: "b2", 3: "c"}
-
-
-def test_stream_upsert_bucketed_touches_only_key_buckets(spark, tmp_path):
-    """Streaming upsert into a BucketedTable: micro-batches merge
-    differentially (manifest shows per-bucket flips) and the checkpoint
-    prevents reprocessing."""
-    import json
-    import os
-
-    from nspc_etl_basic_spark.sinks.bucketed_merge import MANIFEST, BucketedTable
-    from nspc_etl_basic_spark.streaming.ingest import (
-        run_stream_upsert_bucketed,
-        stream_directory,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("pk", T.LongType()),
-            T.StructField("val", T.StringType()),
-            T.StructField("seq", T.LongType()),
-        ]
-    )
-    src = tmp_path / "in"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    tbl_path = str(tmp_path / "bt")
-    table = BucketedTable(spark, tbl_path, ["pk"], n_buckets=16)
-    table.init(
-        spark.createDataFrame([(i, "base", 0) for i in range(100)], schema)
-    )
-
-    def drain():
-        stream = stream_directory(spark, str(src), schema, fmt="parquet")
-        run_stream_upsert_bucketed(stream, table, ckpt, dedup_order_col="seq")
-
-    def manifest():
-        with open(os.path.join(tbl_path, MANIFEST), encoding="utf-8") as fh:
-            return json.load(fh)
-
-    v0 = set(manifest()["buckets"].values())
-    spark.createDataFrame(
-        [(3, "u3", 1), (3, "u3b", 2), (200, "n200", 3)], schema
-    ).coalesce(1).write.parquet(str(src), mode="append")
-    drain()
-
-    m1 = manifest()
-    new_vs = set(m1["buckets"].values()) - v0
-    assert len(new_vs) == 1  # one commit
-    flipped = [b for b, v in m1["buckets"].items() if v in new_vs]
-    assert 1 <= len(flipped) <= 2  # only the 2 keys' buckets
-
-    got = {r.pk: r.val for r in table.read().collect()}
-    assert len(got) == 101
-    assert got[3] == "u3b" and got[200] == "n200" and got[5] == "base"
-
-    # checkpointed: re-drain is a no-op (no new version)
-    vs_before = set(manifest()["buckets"].values())
-    drain()
-    assert set(manifest()["buckets"].values()) == vs_before
-
-
-def test_stream_upsert_bucketed_exactly_once_across_restart(spark, tmp_path):
-    """Directory replay into a BucketedTable across a simulated restart:
-    (1) drain, (2) restart the query (fresh stream, same checkpoint)
-    with new files — only the new files process; (3) simulate a crash
-    that LOST the checkpoint — the full replay re-merges every file and
-    the table still converges to the same rows, because the content
-    tie-break + keyed merge make redelivery idempotent. Counts are
-    asserted after every phase."""
-    import shutil
-
-    from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
-    from nspc_etl_basic_spark.streaming.ingest import (
-        run_stream_upsert_bucketed,
-        stream_directory,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("pk", T.LongType()),
-            T.StructField("val", T.StringType()),
-            T.StructField("seq", T.LongType()),
-        ]
-    )
-    src = tmp_path / "in"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    table = BucketedTable(spark, str(tmp_path / "bt"), ["pk"], n_buckets=8)
-    table.init(
-        spark.createDataFrame([(i, "base", 0) for i in range(50)], schema)
-    )
-
-    def drain():
-        stream = stream_directory(spark, str(src), schema, fmt="parquet")
-        run_stream_upsert_bucketed(stream, table, ckpt, dedup_order_col="seq")
-
-    def state():
-        rows = table.read().collect()
-        return len(rows), {r.pk: r.val for r in rows}
-
-    # phase 1
-    spark.createDataFrame(
-        [(1, "u1", 1), (60, "n60", 1)], schema
-    ).coalesce(1).write.parquet(str(src), mode="append")
-    drain()
-    n, got = state()
-    assert n == 51 and got[1] == "u1" and got[60] == "n60"
-
-    # phase 2: restart with new files — only they process
-    spark.createDataFrame(
-        [(1, "u1b", 2), (61, "n61", 2)], schema
-    ).coalesce(1).write.parquet(str(src), mode="append")
-    drain()
-    n, got = state()
-    assert n == 52 and got[1] == "u1b" and got[61] == "n61"
-
-    # phase 3: checkpoint lost -> full replay; keyed merge + seq
-    # tie-break converge to the identical state, no duplicate keys
-    shutil.rmtree(ckpt)
-    drain()
-    n2, got2 = state()
-    assert (n2, got2) == (n, got)
 
 
 def test_stream_upsert_cdc_feed_exactly_once(spark, tmp_path):
