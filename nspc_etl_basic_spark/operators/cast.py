@@ -22,6 +22,8 @@ total if the caller caches).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,11 +56,22 @@ def _cast_expr(col: Column, dtype: T.DataType) -> Column:
     return F.trim(c).try_cast(dtype.simpleString())
 
 
+class CastSplit(NamedTuple):
+    """``cast_and_split``'s result."""
+
+    valid: DataFrame
+    invalid: DataFrame
+    #: ``df`` plus ``ERROR_COL``, the frame both sides filter: a caller
+    #: that needs the row and invalid counts before it writes
+    #: aggregates it once (``count(1)``, ``count_if(size(ERROR_COL) > 0)``)
+    checked: DataFrame
+
+
 def cast_and_split(
     df: DataFrame, schema: T.StructType, keep_extra_cols: bool = True
-) -> tuple[DataFrame, DataFrame]:
+) -> CastSplit:
     """Project/cast ``df`` (all-string) onto ``schema``; return
-    ``(valid, invalid)``.
+    ``(valid, invalid, checked)``.
 
     ``valid`` has exactly the schema's columns with target types and
     metadata (an inferred field's H1 ``sql_type``), plus any passthrough
@@ -117,4 +130,4 @@ def cast_and_split(
     invalid = with_err.filter(F.size(ERROR_COL) > 0).select(
         *[F.col(f.name) for f in schema.fields], *extra, F.col(ERROR_COL)
     )
-    return valid, invalid
+    return CastSplit(valid, invalid, with_err)

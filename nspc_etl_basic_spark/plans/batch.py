@@ -23,10 +23,13 @@ metadata tables, never a local checkpoint file:
   - H11: one batch summary email after the final update.
 
 At scale the driver loop is I/O-light (each iteration is one
-``process_file``: 12 Spark jobs for a clean upsert file at ``local[4]``,
-each itself distributed, see plans/pipeline.py); for many small files, the
-streaming ingest path (streaming/ingest.py, Trigger.AvailableNow) is the
-idiomatic alternative — this module is the semantic-parity batch path.
+``process_file``: 8 Spark jobs for a clean upsert file at ``local[4]``,
+each itself distributed, see plans/pipeline.py). A batch's own
+bookkeeping runs 3 more: the resume lookup's last-write-wins window (two
+adaptive stages) and the completed-file set; the batch events are
+written by pyarrow on the driver. For many small files, the streaming
+ingest path (streaming/ingest.py, Trigger.AvailableNow) is the idiomatic
+alternative — this module is the semantic-parity batch path.
 """
 
 from __future__ import annotations
@@ -82,7 +85,7 @@ class BatchJobManager:
             return str(uuid.uuid4()), False, 0, 0
 
         max_age_h = float(bcfg.get("max_resume_age_hours", 24))
-        cutoff = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None) - _dt.timedelta(hours=max_age_h)
+        cutoff = _dt.datetime.now(_dt.timezone.utc) - _dt.timedelta(hours=max_age_h)
 
         from pyspark.sql import functions as F
 
@@ -99,9 +102,10 @@ class BatchJobManager:
         # the age cut runs here, on the newest candidate (it is younger
         # than the cutoff exactly when some candidate is): as a filter,
         # the per-call cutoff was a timestamp literal inlined into the
-        # generated code, so every batch compiled the lookup anew
+        # generated code, so every batch compiled the lookup anew.
+        # ``collect`` returns local wall time; compare instants in UTC
         start = candidates[0].BatchStartTime if candidates else None
-        if start is not None and start > cutoff:
+        if start is not None and start.astimezone(_dt.timezone.utc) > cutoff:
             row = candidates[0]
             processed, failed = row.FilesProcessed or 0, row.FilesFailed or 0
             remaining = (row.TotalFiles or 0) - processed - failed
@@ -152,7 +156,7 @@ def process_directory(
     all_files = _list_files(directory)
     pending = manager.get_pending_files(all_files, batch_job_id)
     total_files = len(all_files)
-    start = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+    start = _dt.datetime.now(_dt.timezone.utc)
 
     meta.append_batch_event(
         {
@@ -206,7 +210,7 @@ def process_directory(
     total_processed = prior_processed + run_processed
     total_failed = prior_failed + run_failed
     final_status = "CompletedWithErrors" if total_failed > 0 else "Completed"
-    end = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+    end = _dt.datetime.now(_dt.timezone.utc)
 
     meta.append_batch_event(
         {

@@ -1,16 +1,19 @@
 """Per-file load pipeline (reference ``process_file``, loader.py:1386-1500).
 
 Spark lifecycle (SURVEY.md §3.1): path -> spark.read (lazy) -> inference
-aggregation job -> StructType -> cast/validate projection -> validity split
--> write job -> metadata append -> file lifecycle move. A clean upsert CSV
-into an existing table runs 12 Spark jobs at ``local[4]`` (20 before the
-insert/update split was observed on the snapshot write and the metadata
-appends became local Arrow relations): CSV header, the cached read's row
-count, the invalid count, the target's parquet footer, the snapshot write
-(adaptive query stages count as jobs) and the statistics append. Invalid
-rows add the error-log append. Driver-orchestrated; the per-file
-granularity is semantic (one file -> one table, retry/resume unit), so we
-keep the driver loop and parallelize WITHIN each file via Spark.
+aggregation job -> StructType -> cast/validate projection -> one
+validation aggregate (rows read, invalid rows) -> validity split -> write
+job -> metadata append -> file lifecycle move. A clean upsert CSV into an
+existing table runs 8 Spark jobs at ``local[4]``: the CSV header, the
+validation aggregate (three: it fills the held read's cache, then its
+adaptive shuffle and result stages) and the snapshot write (four,
+adaptive query stages counting as jobs). The target's schema comes from
+its manifest and the statistics row is written by pyarrow, so neither
+runs a job (12 before; 20 before the insert/update split was observed on
+the snapshot write). Invalid rows add one job, the collect of the error
+report. Driver-orchestrated; the per-file granularity is semantic (one
+file -> one table, retry/resume unit), so we keep the driver loop and
+parallelize WITHIN each file via Spark.
 
 Transaction semantics:
   strict   = all-or-nothing: any invalid row -> no write, file -> error/
@@ -42,7 +45,7 @@ from pyspark.sql import functions as F
 from nspc_etl_basic_spark.config import load_config
 from nspc_etl_basic_spark.materialize import hold, scope
 from nspc_etl_basic_spark.naming import generate_table_name
-from nspc_etl_basic_spark.operators.cast import cast_and_split
+from nspc_etl_basic_spark.operators.cast import ERROR_COL, cast_and_split
 
 # perfbench's layer spans wrap ``merge_counts``/``merge_upsert`` by their
 # name in this module; the merge itself runs in the table owner
@@ -204,7 +207,7 @@ def process_file(
     config = config or load_config()
     t0 = time.time()
     job_run_id = config.get("job_run_id") or str(uuid.uuid4())
-    start_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+    start_ts = _dt.datetime.now(_dt.timezone.utc)
     loader_cfg = config["loader"]
     mode = loader_cfg.get("table_mode", "drop_recreate")
     txn = loader_cfg.get("transaction_mode", "strict")
@@ -247,19 +250,10 @@ def process_file(
             )
         table = _table_owner(spark, config, warehouse, table_name, pk_cols, mode)
         with scope():
-            # cached before the first count: the file is parsed once
+            # cached: the validation aggregate fills the cache, so the
+            # file is parsed once
             df = hold(read_any(spark, file_path, with_seq=True))
-            rows_read = df.count()
-            result.rows_read = rows_read
-
-            if rows_read == 0 or not [c for c in df.columns if not c.startswith("__")]:
-                # A5: empty file — valid no-op in upsert mode (loader.py:1420-1432)
-                if mode == "upsert":
-                    result.status = "Validated" if dry_run else "Completed"
-                    if move_files:
-                        result.moved_to = _move_file(file_path, "processed")
-                    return result
-                raise ValueError(f"Empty file: {file_path}")
+            file_cols = [c for c in df.columns if not c.startswith("__")]
 
             # Schema authority (reference parity): for append/upsert into an
             # EXISTING table the target's schema governs the cast — the
@@ -271,6 +265,7 @@ def process_file(
             target_struct = (
                 table.schema() if mode in ("append", "upsert", "scd2") else None
             )
+            extra: list[str] = []
             if target_struct is not None:
                 if mode == "scd2":
                     # the stored table carries interval columns instead of the
@@ -294,27 +289,42 @@ def process_file(
                         else:
                             fields.append(f)
                     target_struct = _T.StructType(fields)
-                file_cols = [c for c in df.columns if not c.startswith("__")]
+                # a column the table lacks fails the file, after the
+                # row count: an empty file stays an upsert no-op (A5)
                 extra = [c for c in file_cols if c not in target_struct.names]
-                if extra:
-                    raise ValueError(
-                        f"columns {extra} not in existing table '{table_name}'"
-                    )
                 # missing target columns -> NULL (SQL INSERT column-list rule)
                 for c in target_struct.names:
                     if c not in file_cols:
                         df = df.withColumn(c, F.lit(None).cast("string"))
                 struct = target_struct
-                result.details["sql_types"] = {
+                sql_types = {
                     f.name: f.dataType.simpleString() for f in target_struct.fields
                 }
             else:
                 schema = infer_schema(df, table_name=table_name, config=config)
                 struct = schema.struct
-                result.details["sql_types"] = schema.sql_types
+                sql_types = schema.sql_types
 
-            valid, invalid = cast_and_split(df, struct)
-            invalid_count = invalid.count()
+            # one aggregate: rows read and invalid rows, before any write
+            valid, invalid, checked = cast_and_split(df, struct)
+            rows_read, invalid_count = checked.agg(
+                F.count(F.lit(1)), F.count_if(F.size(ERROR_COL) > 0)
+            ).first()
+            result.rows_read = rows_read
+
+            if rows_read == 0 or not file_cols:
+                # A5: empty file — valid no-op in upsert mode (loader.py:1420-1432)
+                if mode == "upsert":
+                    result.status = "Validated" if dry_run else "Completed"
+                    if move_files:
+                        result.moved_to = _move_file(file_path, "processed")
+                    return result
+                raise ValueError(f"Empty file: {file_path}")
+            if extra:
+                raise ValueError(
+                    f"columns {extra} not in existing table '{table_name}'"
+                )
+            result.details["sql_types"] = sql_types
             result.rows_failed = invalid_count
 
             if txn == "strict" and invalid_count > 0:
@@ -465,7 +475,7 @@ def process_file(
         flog.__exit__()
         result.duration_seconds = time.time() - t0
         if not dry_run and config.get("job_statistics", {}).get("enabled", True):
-            end_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+            end_ts = _dt.datetime.now(_dt.timezone.utc)
             meta.write_statistics(
                 {
                     "JobRunID": job_run_id,

@@ -8,14 +8,21 @@ Append-only Parquet tables with the reference's exact column sets:
 Batch resume needs "latest state per BatchJobID"; with an append-only
 store that is a last-write-wins read (window on EventSeq) rather than SQL
 UPDATE — the Spark-native equivalent of the reference's in-place updates.
+
+The rows are made on the driver, so an append writes them there with
+pyarrow and runs no Spark job; reads pin each table's fixed schema, so
+they plan without a parquet-footer job. Times are passed as aware UTC
+datetimes and read back (``collect``) as local wall time.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import os
 import uuid
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -116,11 +123,15 @@ class MetadataStore:
         )
 
     def _append(self, rows: list[dict], schema: T.StructType, name: str) -> None:
-        """Append driver-side rows as one Arrow batch: a local relation
-        the JVM reads directly, so the write is one task and one parquet
-        file with no Python worker. The Arrow column is UTC, so datetimes
-        are converted to UTC first, naive ones read as local wall time,
-        as ``createDataFrame`` on plain rows reads them."""
+        """Append driver-side rows as one parquet file, written by
+        pyarrow on the driver: no Spark job. The file is written under a
+        dot-prefixed name, which Spark's listing skips, then
+        ``os.replace``d to ``part-<uuid>.parquet``, so a reader sees the
+        whole file or none of it. Columns are nullable and timestamps
+        UTC-adjusted microseconds, which Spark reads as ``timestamp``
+        beside the files it wrote itself. Datetimes are converted to UTC
+        first; a naive one reads as local wall time, as
+        ``createDataFrame`` on plain rows reads it."""
         data = [
             {
                 k: v.astimezone(_dt.timezone.utc) if isinstance(v, _dt.datetime) else v
@@ -128,9 +139,23 @@ class MetadataStore:
             }
             for r in rows
         ]
-        batch = pa.Table.from_pylist(data, schema=to_arrow_schema(schema))
-        df = self.wh.spark.createDataFrame(batch, schema=schema)
-        df.write.mode("append").parquet(self.wh.table_path(name))
+        arrow_schema = pa.schema(
+            [f.with_nullable(True) for f in to_arrow_schema(schema)]
+        )
+        table = pa.Table.from_pylist(data, schema=arrow_schema)
+        path = self.wh.table_path(name)
+        os.makedirs(path, exist_ok=True)
+        part = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(path, f".{part}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, part))
+
+    def _read(self, name: str, schema: T.StructType) -> DataFrame:
+        """One metadata table, scanned with its fixed schema; empty
+        before its first append."""
+        if not self.wh.exists(name):
+            return self.wh.spark.createDataFrame([], schema=schema)
+        return self.wh.spark.read.schema(schema).parquet(self.wh.table_path(name))
 
     # ---- H8: job statistics
     def write_statistics(self, stats: dict) -> None:
@@ -138,9 +163,7 @@ class MetadataStore:
         self._append([row], JOB_STATS_SCHEMA, self.stats_table)
 
     def read_statistics(self) -> DataFrame:
-        if not self.wh.exists(self.stats_table):
-            return self.wh.spark.createDataFrame([], schema=JOB_STATS_SCHEMA)
-        return self.wh.read(self.stats_table)
+        return self._read(self.stats_table, JOB_STATS_SCHEMA)
 
     # ---- H9: error log
     def write_invalid_rows(self, report: list, job_run_id: str, table_name: str) -> None:
@@ -165,11 +188,14 @@ class MetadataStore:
         ]
         self._append(rows, ERROR_LOG_SCHEMA, self.error_table)
 
+    def read_errors(self) -> DataFrame:
+        return self._read(self.error_table, ERROR_LOG_SCHEMA)
+
     # ---- quality-check results (round-4 extension; same append-only shape)
     def write_quality_results(
         self, results: list[dict], job_run_id: str, table_name: str
     ) -> None:
-        now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+        now = _dt.datetime.now(_dt.timezone.utc)
         rows = [
             {
                 "JobRunID": job_run_id,
@@ -186,9 +212,7 @@ class MetadataStore:
         self._append(rows, QUALITY_SCHEMA, self.quality_table)
 
     def read_quality_results(self) -> DataFrame:
-        if not self.wh.exists(self.quality_table):
-            return self.wh.spark.createDataFrame([], schema=QUALITY_SCHEMA)
-        return self.wh.read(self.quality_table)
+        return self._read(self.quality_table, QUALITY_SCHEMA)
 
     # ---- H10: batch statistics (append-only, last EventSeq wins)
     def append_batch_event(self, event: dict) -> None:
@@ -198,9 +222,7 @@ class MetadataStore:
     def current_batches(self) -> DataFrame:
         """Latest event per BatchJobID (reference's UPDATE-in-place read
         model, loader.py:1601-1638, expressed as last-write-wins)."""
-        if not self.wh.exists(self.batch_table):
-            return self.wh.spark.createDataFrame([], schema=BATCH_STATS_SCHEMA)
-        df = self.wh.read(self.batch_table)
+        df = self._read(self.batch_table, BATCH_STATS_SCHEMA)
         w = Window.partitionBy("BatchJobID").orderBy(F.col("EventSeq").desc())
         return df.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
 

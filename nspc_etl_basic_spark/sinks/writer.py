@@ -24,10 +24,19 @@ snapshot tables and ``BucketedTable`` (sinks/bucketed_merge.py) — and
 differ only in the manifest's name and what it points at:
 
     wh/<table>/
-        _current            snapshot manifest: {"version": "v_...", ...}
+        _current            snapshot manifest: {"version": "v_...",
+                            "table": ..., "schema": <StructType json>,
+                            "version_id": k, "committed_at": ...}
         _current_buckets    bucketed manifest: {"buckets": {"17": "v_..."}}
         _manifest_history/  m_<id>.json, a copy of each retained commit
         v_<time_ns>_<hex8>/ immutable data dirs, one per commit
+
+A snapshot manifest's ``schema`` is the committed frame's schema with
+every field nullable, exactly what Spark infers from the files it wrote.
+``ParquetWarehouse.read`` hands it to ``spark.read.schema``, so a read
+plans without a parquet-footer job; a manifest written before the field
+existed reads through inference. An append adds files to the current
+version dir under the same manifest, so it must match that schema.
 
 A commit (1) writes the new data into a FRESH version dir — readers cannot
 see it, nothing references it yet; (2) writes the manifest to a temp file,
@@ -202,6 +211,20 @@ def _references(manifest_name: str, m: dict) -> set[str]:
     return {m.get("version")}
 
 
+def _nullable(node):
+    """A ``StructType.jsonValue()`` with every field, array element and
+    map value nullable: how Spark reads back the parquet it wrote."""
+    if isinstance(node, list):
+        return [_nullable(v) for v in node]
+    if not isinstance(node, dict):
+        return node
+    out = {k: v if k == "metadata" else _nullable(v) for k, v in node.items()}
+    for k in ("nullable", "containsNull", "valueContainsNull"):
+        if k in out:
+            out[k] = True
+    return out
+
+
 def reclaim(
     table_dir: str,
     manifest_name: str,
@@ -282,19 +305,26 @@ class ParquetWarehouse:
     # manifest resolution
     # ------------------------------------------------------------------
 
+    def _current(self, name: str) -> tuple[str, dict | None]:
+        """(directory Spark should scan, its manifest): the current
+        version for versioned tables, the table dir itself and no
+        manifest for plain (append/legacy) tables."""
+        table_dir = self.table_path(name)
+        m = read_manifest(table_dir, MANIFEST_NAME)
+        v = m.get("version") if m else None
+        if isinstance(v, str) and v.startswith(VERSION_PREFIX):
+            return os.path.join(table_dir, v), m
+        return table_dir, None
+
     def current_version(self, name: str) -> str | None:
         """Version dir name the manifest points at, or None (plain table)."""
-        m = read_manifest(self.table_path(name), MANIFEST_NAME)
-        v = m.get("version") if m else None
-        return v if isinstance(v, str) and v.startswith(VERSION_PREFIX) else None
+        _path, m = self._current(name)
+        return m["version"] if m else None
 
     def data_path(self, name: str) -> str:
         """Directory Spark should scan: the current version for versioned
         tables, the table dir itself for plain (append/legacy) tables."""
-        v = self.current_version(name)
-        if v:
-            return os.path.join(self.table_path(name), v)
-        return self.table_path(name)
+        return self._current(name)[0]
 
     @staticmethod
     def _has_data(p: str) -> bool:
@@ -312,12 +342,18 @@ class ParquetWarehouse:
     def read(self, name: str, version: int | None = None) -> DataFrame:
         """Current snapshot, or the table as of commit ``version`` —
         same scan cost either way (a historical read is just a different
-        version dir; dirs referenced by retained history survive GC)."""
+        version dir; dirs referenced by retained history survive GC).
+        A manifest's recorded schema pins the scan (module docstring)."""
         if version is None:
-            return self.spark.read.parquet(self.data_path(name))
-        table_dir = self.table_path(name)
-        m = retained_manifest(table_dir, version, self.keep_history)
-        return self.spark.read.parquet(os.path.join(table_dir, m["version"]))
+            path, m = self._current(name)
+        else:
+            table_dir = self.table_path(name)
+            m = retained_manifest(table_dir, version, self.keep_history)
+            path = os.path.join(table_dir, m["version"])
+        reader = self.spark.read
+        if m and m.get("schema"):
+            reader = reader.schema(StructType.fromJson(m["schema"]))
+        return reader.parquet(path)
 
     # ------------------------------------------------------------------
     # commits
@@ -341,7 +377,15 @@ class ParquetWarehouse:
         os.makedirs(table_dir, exist_ok=True)
         version = new_version_name()
         df.write.mode("error").parquet(os.path.join(table_dir, version))
-        commit_manifest(table_dir, MANIFEST_NAME, {"version": version, "table": name})
+        commit_manifest(
+            table_dir,
+            MANIFEST_NAME,
+            {
+                "version": version,
+                "table": name,
+                "schema": _nullable(df.schema.jsonValue()),
+            },
+        )
         reclaim(
             table_dir, MANIFEST_NAME, version, self.keep_versions, self.keep_history
         )
@@ -355,6 +399,30 @@ class ParquetWarehouse:
                     pass
         return version
 
+    def _append(self, df: DataFrame, name: str) -> None:
+        """New immutable files, no commit: append-only tables stay plain
+        flat dirs (already object-store safe); a VERSIONED table gets the
+        files in its current version dir, so ``df`` must have the
+        columns and types its manifest records — a file that differs
+        would be misread by the pinned scan (``append_evolve`` changes
+        a schema)."""
+        table_dir = self.table_path(name)
+        check_layout(table_dir, MANIFEST_NAME)
+        path, m = self._current(name)
+        recorded = m.get("schema") if m else None
+        if recorded:
+            want = StructType.fromJson(recorded)
+            got = StructType.fromJson(_nullable(df.schema.jsonValue()))
+            if {f.name: f.dataType for f in got.fields} != {
+                f.name: f.dataType for f in want.fields
+            }:
+                raise SchemaEvolutionError(
+                    f"append to '{name}' does not match its schema: table "
+                    f"{want.simpleString()}, batch {got.simpleString()} "
+                    "(append_evolve evolves a table's schema)"
+                )
+        df.write.mode("append").parquet(path)
+
     # ------------------------------------------------------------------
     # mode dispatch
     # ------------------------------------------------------------------
@@ -365,12 +433,7 @@ class ParquetWarehouse:
         if mode == "drop_recreate":
             self._commit_version(df, name)
         elif mode == "append":
-            # append-only tables stay plain flat-dir (new immutable files —
-            # already object-store safe); appending to a VERSIONED table
-            # adds files to its current version dir
-            check_layout(self.table_path(name), MANIFEST_NAME)
-            target = self.data_path(name)
-            df.write.mode("append").parquet(target)
+            self._append(df, name)
         elif mode == "fail":
             if self.exists(name):
                 raise TableExistsError(f"table '{name}' exists and table_mode is 'fail'")
@@ -415,8 +478,7 @@ class ParquetWarehouse:
         if [
             (f.name, f.dataType) for f in cur.schema.fields
         ] == [(f.name, f.dataType) for f in target.fields]:
-            check_layout(self.table_path(name), MANIFEST_NAME)
-            batch.write.mode("append").parquet(self.data_path(name))
+            self._append(batch, name)
             report["rewrite"] = False
         else:
             self._commit_version(

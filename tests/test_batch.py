@@ -6,11 +6,15 @@ from __future__ import annotations
 
 import datetime
 import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 from pyspark.sql import functions as F
 
 from nspc_etl_basic_spark import load_config
+from nspc_etl_basic_spark.plans import batch
 from nspc_etl_basic_spark.plans.batch import BatchJobManager, process_directory
 from nspc_etl_basic_spark.session import codegen_compiles
 from nspc_etl_basic_spark.sinks.email import EmailNotificationManager
@@ -123,7 +127,7 @@ def test_resume_skips_batches_past_max_age_and_compiles_once(spark, tmp_path):
     cfg = _cfg(tmp_path)
     meta = MetadataStore(ParquetWarehouse(spark, str(tmp_path / "wh")), cfg)
     mgr = BatchJobManager(meta, str(tmp_path / "in"), cfg)
-    now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    now = datetime.datetime.now(datetime.timezone.utc)
 
     def in_progress(bid, age_h, seq):
         meta.append_batch_event({
@@ -144,6 +148,112 @@ def test_resume_skips_batches_past_max_age_and_compiles_once(spark, tmp_path):
     # the lookup's plan carries no per-call literal: the second one finds
     # every class it generates already compiled
     assert codegen_compiles(spark)[0] == before
+
+
+#: Spark jobs one directory batch runs outside its ``process_file``
+#: calls, once the metadata tables exist: the resume lookup's
+#: last-write-wins window (2, adaptive) and the completed-file set (1).
+#: Both reads pin their table's schema (no parquet-footer job) and the
+#: two batch events are written by pyarrow (no job); it was 7 before.
+MAX_BOOKKEEPING_JOBS_PER_BATCH = 3
+
+
+def test_batch_bookkeeping_job_count_pin(spark, tmp_path, monkeypatch):
+    src = str(tmp_path / "in")
+    cfg = _cfg(tmp_path)
+    _mkfiles(src, {"one.csv": GOOD1})
+    assert process_directory(spark, src, cfg, move_files=False).status == "Completed"
+
+    sc = spark.sparkContext
+    outer, inner = f"bookkeeping-{os.getpid()}", f"files-{os.getpid()}"
+    load = batch.process_file
+
+    def tagged(*args, **kwargs):
+        sc.setJobGroup(inner, "process_file")
+        try:
+            return load(*args, **kwargs)
+        finally:
+            sc.setJobGroup(outer, "batch bookkeeping")
+
+    monkeypatch.setattr(batch, "process_file", tagged)
+    _mkfiles(src, {"two.csv": GOOD2})
+    sc.setJobGroup(outer, "batch bookkeeping")
+    try:
+        res = process_directory(spark, src, cfg, move_files=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (res.status, res.pending_processed) == ("Completed", 2)
+    assert sc.statusTracker().getJobIdsForGroup(inner)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(outer))
+    assert 0 < jobs <= MAX_BOOKKEEPING_JOBS_PER_BATCH, jobs
+
+
+_OFF_UTC_SCRIPT = textwrap.dedent("""
+    import datetime, os, sys, time
+    sys.path.insert(0, sys.argv[1])
+    from nspc_etl_basic_spark import get_spark, load_config
+    from nspc_etl_basic_spark.plans.batch import process_directory
+    from nspc_etl_basic_spark.sinks.metadata import MetadataStore
+    from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
+
+    work = sys.argv[2]
+    utc = datetime.timezone.utc
+    assert time.localtime().tm_gmtoff != 0, "host zone is UTC"
+    spark = get_spark(app_name="off-utc", master="local[2]", shuffle_partitions=2)
+    spark.sparkContext.setLogLevel("ERROR")
+    cfg = load_config(overrides={
+        "database": {"warehouse_path": os.path.join(work, "wh")},
+        "batch_processing": {"max_resume_age_hours": 2},
+    })
+    src = os.path.join(work, "in")
+    os.makedirs(src)
+    with open(os.path.join(src, "a.csv"), "w") as fh:
+        fh.write("id,v\\n1,x\\n")
+    t0 = datetime.datetime.now(utc)
+    assert process_directory(spark, src, cfg, move_files=False).status == "Completed"
+    t1 = datetime.datetime.now(utc)
+
+    # collect returns local wall time; as an instant it must fall
+    # inside the load
+    def inside(*times):
+        return t0 - datetime.timedelta(seconds=1) <= min(times) and max(times) <= t1
+    at = lambda ts: ts.astimezone(utc)
+    meta = MetadataStore(ParquetWarehouse(spark, os.path.join(work, "wh")), cfg)
+    (stats,) = meta.read_statistics().collect()
+    assert inside(at(stats.JobStartTime), at(stats.JobEndTime)), (stats, t0, t1)
+    (done,) = meta.current_batches().collect()
+    assert inside(at(done.BatchStartTime), at(done.BatchEndTime)), (done, t0, t1)
+
+    # a batch interrupted an hour ago is within the 2-hour resume age
+    meta.append_batch_event({
+        "BatchJobID": "interrupted", "DirectoryPath": os.path.abspath(src),
+        "TotalFiles": 2, "FilesProcessed": 1, "FilesFailed": 0,
+        "BatchStartTime": t1 - datetime.timedelta(hours=1),
+        "BatchStatus": "InProgress", "IsResumed": False,
+        "EventSeq": time.time_ns(),
+    })
+    res = process_directory(spark, src, cfg, move_files=False)
+    assert (res.is_resumed, res.batch_job_id) == (True, "interrupted"), res
+    spark.stop()
+    print("OK")
+""")
+
+
+def test_times_read_back_at_their_instant_off_utc(tmp_path):
+    """On a host whose zone is not UTC, every time the loader stores
+    (job start/end, batch start/end) reads back at its true instant, and
+    the resume age cut compares instants: a batch interrupted an hour
+    ago resumes under a 2-hour limit. A fresh interpreter and JVM, so
+    both start in the zone."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TZ": "America/New_York"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _OFF_UTC_SCRIPT, repo, str(tmp_path)],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0 and proc.stdout.strip().endswith("OK"), (
+        proc.stdout[-2000:] + proc.stderr[-4000:]
+    )
 
 
 # ---------------------------------------------------------------------------

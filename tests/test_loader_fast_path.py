@@ -1,6 +1,6 @@
 """The loader's per-file fast path: insert/update counts observed on the
-snapshot write, metadata appends through a local Arrow relation, and the
-Spark job count of one clean upsert file."""
+snapshot write, metadata appends written by pyarrow on the driver, one
+validation aggregate, and the Spark job count of one clean upsert file."""
 
 from __future__ import annotations
 
@@ -8,8 +8,10 @@ import datetime
 import os
 import time
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from nspc_etl_basic_spark import load_config
 from nspc_etl_basic_spark.operators.merge import (
@@ -19,7 +21,12 @@ from nspc_etl_basic_spark.operators.merge import (
     merge_upsert,
 )
 from nspc_etl_basic_spark.plans.pipeline import process_file
-from nspc_etl_basic_spark.sinks.metadata import MetadataStore
+from nspc_etl_basic_spark.sinks.metadata import (
+    BATCH_STATS_SCHEMA,
+    ERROR_LOG_SCHEMA,
+    JOB_STATS_SCHEMA,
+    MetadataStore,
+)
 from nspc_etl_basic_spark.sinks.writer import ParquetWarehouse
 from nspc_etl_basic_spark.sources.reader import SEQ_COL
 
@@ -181,37 +188,142 @@ def test_metadata_appends_round_trip_one_file_each(spark, tmp_path, local_tz):
         (r.JobRunID, r.TableName, r.CheckName, r.Value, r.Lo, r.Hi, r.Passed)
         for r in q
     ] == [("r1", "t", "c", 0.25, None, 1.0, True)] * 2
-    now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    # the check time is stored as its instant and read back as local
+    # wall time
+    now = datetime.datetime.now()
     assert all(abs((r.CheckTimestamp - now).total_seconds()) < 600 for r in q)
 
 
+def test_metadata_dir_of_spark_and_pyarrow_files_reads_identical_rows(
+    spark, tmp_path, local_tz
+):
+    """Metadata tables written before appends moved to pyarrow hold files
+    Spark wrote (INT96 timestamps); new rows land beside them as pyarrow
+    files. Both read back as the same rows, times at the same instant."""
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    meta = MetadataStore(wh, {})
+    utc = datetime.timezone.utc
+    ts = datetime.datetime(2026, 3, 4, 5, 6, 7, 123456, tzinfo=utc)
+    rows = {
+        meta.stats_table: (JOB_STATS_SCHEMA, {
+            "JobRunID": "r1", "JobStartTime": ts, "JobEndTime": ts,
+            "JobDurationSeconds": 0, "JobStatus": "Completed",
+            "SourceFile": "f.csv", "TargetTable": "t", "RowsRead": 3,
+            "RowsInserted": 2, "RowsUpdated": 1, "RowsFailed": 0,
+            "ErrorMessage": None, "BatchJobID": "b1",
+        }),
+        meta.error_table: (ERROR_LOG_SCHEMA, {
+            "ErrorID": "e1", "JobRunID": "r1", "TableName": "t",
+            "ColumnName": "column 'id' failed cast to bigint",
+            "ErrorType": "CAST_VALIDATION", "ErrorMessage": '{"id":"x"}',
+            "ErrorTimestamp": ts,
+        }),
+        meta.batch_table: (BATCH_STATS_SCHEMA, {
+            "BatchJobID": "b1", "DirectoryPath": "/d", "TotalFiles": 1,
+            "FilesProcessed": 1, "FilesFailed": 0, "BatchStartTime": ts,
+            "BatchEndTime": ts, "BatchStatus": "Completed", "IsResumed": False,
+            "OriginalBatchJobID": None, "EventSeq": 7,
+        }),
+    }
+    for name, (schema, row) in rows.items():
+        # the Spark write every append used to be
+        batch = pa.Table.from_pylist([row], schema=to_arrow_schema(schema))
+        spark.createDataFrame(batch, schema=schema).write.mode("append").parquet(
+            wh.table_path(name)
+        )
+        meta._append([row], schema, name)
+    reads = {
+        meta.stats_table: meta.read_statistics,
+        meta.error_table: meta.read_errors,
+        meta.batch_table: meta.current_batches,
+    }
+    local = ts.astimezone().replace(tzinfo=None)  # collect's wall time
+    for name, (_schema, row) in rows.items():
+        want = {k: local if v is ts else v for k, v in row.items()}
+        got = [r.asDict() for r in reads[name]().collect()]
+        assert got == [want] * (1 if name == meta.batch_table else 2), name
+        # and Spark's own inference over the mixed dir agrees
+        inferred = spark.read.parquet(wh.table_path(name)).collect()
+        assert [r.asDict() for r in inferred] == [want] * 2, name
+
+
+def _jobs(spark, fn):
+    """(fn's result, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"job-count-pin-{os.getpid()}-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "job count pin")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(lo, hi, tag, bad=""):
+    return "id,name,amount\n" + "".join(
+        f"{i},{tag}{i},{i}.25\n" for i in range(lo, hi)
+    ) + bad
+
+
 #: Spark jobs of one clean upsert CSV into an existing table, measured
-#: at ``local[8]``: 12 (CSV header, the cached read's row count, the
-#: invalid count's two adaptive stages, the target's parquet footer, the
-#: snapshot write with its adaptive stages, the statistics append). The
-#: loader ran 20 before the merge counts moved onto the snapshot write
-#: and the metadata appends onto a local Arrow relation.
-MAX_JOBS_PER_CLEAN_UPSERT = 12
+#: at ``local[4]``: 8. The CSV header (1); the one
+#: validation aggregate of rows read and invalid rows (3: filling the
+#: held read's cache, then the adaptive shuffle and result stages); the
+#: snapshot write with its adaptive query stages (4). The target's
+#: schema comes from its manifest and the statistics row is written by
+#: pyarrow, so neither runs a job. The loader ran 12 before (a separate
+#: row count and invalid count, the target's parquet-footer job and a
+#: Spark write per statistics row) and 20 before the merge counts moved
+#: onto the snapshot write.
+MAX_JOBS_PER_CLEAN_UPSERT = 8
 
 
 def test_clean_upsert_job_count_pin(spark, tmp_path):
-    assert _load(
-        spark, tmp_path, "a.csv",
-        "id,name,amount\n" + "".join(f"{i},n{i},{i}.5\n" for i in range(100)),
-    ).status == "Completed"
-    sc = spark.sparkContext
-    group = f"job-count-pin-{os.getpid()}"
-    sc.setJobGroup(group, "one clean upsert file")
-    try:
-        r = _load(
-            spark, tmp_path, "b.csv",
-            "id,name,amount\n" + "".join(f"{i},m{i},{i}.25\n" for i in range(50, 150)),
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _load(spark, tmp_path, "a.csv", _rows(0, 100, "n")).status == "Completed"
+    r, jobs = _jobs(spark, lambda: _load(spark, tmp_path, "b.csv", _rows(50, 150, "m")))
     assert (r.status, r.rows_inserted, r.rows_updated) == ("Completed", 50, 50)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= MAX_JOBS_PER_CLEAN_UPSERT, len(jobs)
+    assert 0 < jobs <= MAX_JOBS_PER_CLEAN_UPSERT, jobs
+
+
+def test_invalid_rows_add_only_the_report_collect(spark, tmp_path):
+    """A file with invalid rows runs exactly one job more than a clean
+    one: the collect of the error report. The invalid count comes from
+    the same validation aggregate, and the error log is written by
+    pyarrow."""
+    assert _load(spark, tmp_path, "a.csv", _rows(0, 100, "n")).status == "Completed"
+    clean, clean_jobs = _jobs(
+        spark, lambda: _load(spark, tmp_path, "b.csv", _rows(50, 150, "m"))
+    )
+    dirty, dirty_jobs = _jobs(
+        spark,
+        lambda: _load(spark, tmp_path, "c.csv", _rows(50, 150, "d", bad="x,y,1\n")),
+    )
+    assert (clean.rows_failed, dirty.rows_failed) == (0, 1)
+    assert dirty.status == "Completed"
+    assert dirty_jobs == clean_jobs + 1, (clean_jobs, dirty_jobs)
+
+
+@pytest.mark.parametrize(
+    "header", ["id,name,amount", "id,name,bonus"], ids=["same_columns", "unknown_column"]
+)
+def test_header_only_file_into_existing_table_is_a_no_op(spark, tmp_path, header):
+    """A5 comes before schema authority: an empty file into an existing
+    upsert table completes without touching it, even when its header
+    names a column the table lacks. With rows, that column still fails
+    the file."""
+    assert _load(spark, tmp_path, "a.csv", _rows(0, 10, "n")).status == "Completed"
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    version = wh.current_version("t")
+    r = _load(spark, tmp_path, "h.csv", header + "\n")
+    assert (r.status, r.rows_read, r.rows_inserted, r.rows_updated, r.rows_failed) == (
+        "Completed", 0, 0, 0, 0,
+    )
+    assert wh.current_version("t") == version
+    if "bonus" in header:
+        r = _load(spark, tmp_path, "u.csv", header + "\n1,a,2\n")
+        assert r.status == "Failed"
+        assert "['bonus'] not in existing table 't'" in r.error_message
+        assert wh.current_version("t") == version
 
 
 def test_error_log_has_one_row_per_invalid_row(spark, tmp_path):

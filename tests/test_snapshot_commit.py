@@ -10,12 +10,16 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nspc_etl_basic_spark.sinks.bucketed_merge import BucketedTable
 from nspc_etl_basic_spark.sinks.writer import (
     BUCKETED_MANIFEST,
+    HISTORY_DIR,
     MANIFEST_NAME,
     ParquetWarehouse,
+    SchemaEvolutionError,
     TableExistsError,
 )
 
@@ -163,6 +167,114 @@ def test_append_tables_stay_plain(spark, tmp_path):
     assert _read_ids(wh, "log") == [1, 2]
     direct = spark.read.parquet(wh.table_path("log"))
     assert sorted(r.id for r in direct.collect()) == [1, 2]
+
+
+def _jobs(spark, fn):
+    sc = spark.sparkContext
+    group = f"snapshot-jobs-{os.getpid()}-{id(fn)}"
+    sc.setJobGroup(group, "snapshot jobs")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_records_schema_and_read_plans_without_a_job(spark, tmp_path):
+    """The manifest records the committed schema, nullable and with its
+    field metadata, as Spark would infer it; a read (current or time
+    travel) is pinned to it and runs no parquet-footer job."""
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame([(1, "a")], "id long not null, v string").select(
+        "id", F.col("v").alias("v", metadata={"sql_type": "NVARCHAR(50)"})
+    )
+    wh.write(df, "t")
+    wh.overwrite_snapshot(df, "t")
+    with open(os.path.join(wh.table_path("t"), MANIFEST_NAME)) as fh:
+        recorded = T.StructType.fromJson(json.load(fh)["schema"])
+    inferred = spark.read.parquet(wh.data_path("t")).schema
+    assert recorded == inferred
+    assert [f.nullable for f in recorded] == [True, True]
+    assert recorded["v"].metadata == {"sql_type": "NVARCHAR(50)"}
+    for version in (None, 0):
+        read, jobs = _jobs(spark, lambda: wh.read("t", version=version).schema)
+        assert (read, jobs) == (recorded, 0)
+
+
+def _drop_recorded_schemas(table_dir):
+    """Rewrite a table's manifests as they were before the schema field."""
+    hdir = os.path.join(table_dir, HISTORY_DIR)
+    paths = [os.path.join(table_dir, MANIFEST_NAME)] + [
+        os.path.join(hdir, f) for f in os.listdir(hdir)
+    ]
+    for p in paths:
+        with open(p) as fh:
+            m = json.load(fh)
+        m.pop("schema")
+        with open(p, "w") as fh:
+            json.dump(m, fh)
+
+
+def test_manifest_without_schema_reads_merges_commits_and_time_travels(
+    spark, tmp_path
+):
+    """A table committed before manifests recorded a schema reads through
+    inference, merges, commits (the new manifest records one) and time
+    travels back to its old versions."""
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"), keep_history=3)
+    wh.write(_df(spark, [(1, "a"), (2, "b")]), "t")
+    wh.overwrite_snapshot(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), "t")
+    _drop_recorded_schemas(wh.table_path("t"))
+
+    table = wh.table("t", ["id"])
+    assert table.schema().simpleString() == "struct<id:bigint,v:string>"
+    counts = table.merge(_df(spark, [(2, "B"), (4, "d")]))
+    assert (counts.inserted, counts.updated) == (1, 1)
+    assert sorted(map(tuple, wh.read("t").collect())) == [
+        (1, "a"), (2, "B"), (3, "c"), (4, "d"),
+    ]
+    with open(os.path.join(wh.table_path("t"), MANIFEST_NAME)) as fh:
+        assert json.load(fh)["version_id"] == 2
+    assert wh.read("t").schema == spark.read.parquet(wh.data_path("t")).schema
+    assert _read_ids(wh, "t") == [1, 2, 3, 4]
+    assert sorted(r.id for r in wh.read("t", version=0).collect()) == [1, 2]
+    assert sorted(r.id for r in wh.read("t", version=1).collect()) == [1, 2, 3]
+
+
+def _file_schemas(spark, path):
+    return {
+        f: {c.name: c.dataType for c in spark.read.parquet(f).schema}
+        for f in _parquet_files(path)
+    }
+
+
+def test_append_never_contradicts_the_recorded_schema(spark, tmp_path):
+    """An append adds files to the current version under the same
+    manifest: one whose columns or types differ is refused (the pinned
+    scan would misread it), and every data file agrees with the
+    recorded schema after matching appends, plain or through
+    append_evolve."""
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    wh.write(_df(spark, [(1, "a")]), "t")
+    version = wh.current_version("t")
+    for bad in (
+        spark.createDataFrame([(2, "b")], "id int, v string"),
+        spark.createDataFrame([(2, "b", 1.0)], "id long, v string, x double"),
+        spark.createDataFrame([(2,)], "id long"),
+    ):
+        with pytest.raises(SchemaEvolutionError, match="does not match its schema"):
+            wh.write(bad, "t", mode="append")
+    # same columns and types; nullability and column order are free
+    wh.write(spark.createDataFrame([("b", 2)], "v string, id long not null"), "t",
+             mode="append")
+    assert wh.append_evolve(_df(spark, [(3, "c")]), "t")["rewrite"] is False
+    assert wh.current_version("t") == version
+    with open(os.path.join(wh.table_path("t"), MANIFEST_NAME)) as fh:
+        recorded = T.StructType.fromJson(json.load(fh)["schema"])
+    want = {c.name: c.dataType for c in recorded}
+    files = _file_schemas(spark, wh.data_path("t"))
+    assert len(files) >= 3 and all(cols == want for cols in files.values())
+    assert _read_ids(wh, "t") == [1, 2, 3]
 
 
 def test_fail_mode_respects_versioned_existence(spark, tmp_path):
