@@ -7,12 +7,13 @@ the near-duplicate detection a large-scale training-data pipeline needs.
 Design notes (100 TB stance):
   - exact dedup is a hash groupBy on the content hash (md5), NOT the full
     text — group keys stay 32 bytes, the shuffle moves hashes not bodies;
-  - MinHash is computed from character shingles: explode -> per-shingle
-    md5 -> n hash functions derived as disjoint 4-hex-char slices of the
-    md5 (one md5 per distinct shingle, not one per hash function — 8x
-    cheaper) -> min per slice = signature -> band -> bucket groupBy. Only
-    bucket collisions ever meet in a shuffle — the classic LSH contract,
-    so the pairwise stage is bounded by bucket volume, never |docs|^2;
+  - MinHash is computed from character shingles, all in-row: one linear
+    regex scan per document -> per-shingle md5 -> n hash functions
+    derived as disjoint 4-hex-char slices of the md5 (one md5 per
+    shingle, not one per hash function — 8x cheaper) -> ``array_min``
+    per slice = signature -> band -> bucket groupBy. Only bucket
+    collisions ever meet in a shuffle — the classic LSH contract, so the
+    pairwise stage is bounded by bucket volume, never |docs|^2;
   - SimHash packs a 48-bit token-hash majority vote via bit arithmetic in
     pure column expressions (one explode + one groupBy, map-side combined);
   - n-gram Jaccard runs ONLY on candidate pairs (same LSH band bucket).
@@ -55,13 +56,23 @@ def exact_dedup(
 
 def shingle_array(text, k: int = DEFAULT_SHINGLE_K):
     """Array of k-char shingles of ``text`` as a column expression — the
-    shared kernel of MinHash and Jaccard. A document shorter than ``k``
-    contributes its whole text as the single shingle (sequence is clamped
-    to start position 1). Pure JVM array algebra, no explode."""
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(text) - (k - 1), F.lit(1))),
-        lambda i: F.substring(text, i, k),
-    )
+    shared kernel of MinHash and Jaccard. Characters are code points, as
+    in Spark's ``length``/``substring``: shingle i is the k code points
+    starting at the i-th. A document shorter than ``k`` (empty included)
+    contributes its whole text as the single shingle; NULL text gives
+    ``[NULL]``.
+
+    One left-to-right regex scan: at each code point the lookahead
+    captures the next k and the trailing ``.`` steps exactly one code
+    point, so a surrogate pair is never split (a bare zero-width
+    ``(?=(.{k}))`` would restart inside one). The scan is O(L) for a
+    document of L characters. Building shingle i as ``substring(text, i,
+    k)`` over ``sequence(1, L-k+1)`` was O(L²): Spark's ``substring``
+    counts code points from the first byte on every call, and the
+    ``transform`` lambda runs interpreted, outside whole-stage codegen."""
+    return F.when(
+        F.coalesce(F.length(text), F.lit(0)) < k, F.array(text)
+    ).otherwise(F.regexp_extract_all(text, F.lit(f"(?s)(?=(.{{{k}}}))."), 1))
 
 
 def minhash_signatures(
@@ -84,10 +95,17 @@ def minhash_signatures(
       the seed argument gives n independent hash functions; multiply-
       mix of one hash would be cheaper still but long-overflow
       multiplication throws under ANSI mode). md5 is a cryptographic
-      digest and dominates the dedup pipeline's CPU at scale — see
-      SCALE.md for the measured 500 k-doc end-to-end comparison;
-      nothing downstream (banding, bucket join, Jaccard verify)
-      changes, signatures are just longs instead of hex strings.
+      digest; the 500 k-doc run in SCALE.md measured this tier 1.65x
+      faster end to end. Nothing downstream (banding, bucket join,
+      Jaccard verify) changes, signatures are just longs instead of
+      hex strings.
+
+    Both tiers hash the shingles of ``shingle_array``: one regex scan,
+    linear in the document's length, with Spark's code-point semantics.
+    The per-position ``substring`` it replaced re-counted code points
+    from the first byte for every shingle, O(L²) per document; a
+    profile of warm curation passes found half the executor samples
+    there and about 3% in md5 (SCALE.md §Dedup).
 
     The minimum over a document's shingles under ANY total order is a
     valid MinHash — lexicographic hex order (md5) and signed-long

@@ -35,6 +35,19 @@ The conf is static: it takes effect only when ``get_spark`` launches the
 JVM. A later call that finds the session running gets the size the JVM
 started with, and a caller that needs another size passes it in
 ``extra_conf`` on the first call.
+
+DataFrame debugging is off. With it on, PySpark wraps every
+``functions`` and ``Column`` call to record its Python call site: it
+looks up the active session, reads a conf over py4j, walks the Python
+stack and sets and clears the JVM origin. Off, a warm curation pass
+(perfbench corpus, seed 7, ``local[2]``) makes 3,426-3,544 py4j round
+trips instead of 7,111-7,215. What is given up is the Python
+call-site fragment (file and line of the failing ``functions`` call)
+in DataFrame error messages; the error and its SQL context are
+unchanged. PySpark reads the flag once per process, at the first
+wrapped call that finds an active session
+(``pyspark.errors.utils.is_debugging_enabled``), so it is set here in
+the builder: a later ``spark.conf.set`` comes too late.
 """
 
 from __future__ import annotations
@@ -68,6 +81,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # no call-site capture per Column call (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

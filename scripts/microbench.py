@@ -3,7 +3,8 @@ sf0.001, noop sink, best-of-N, one `materialize.scope()` per query) but
 only for the named queries — for isolating one query's steady-state cost
 while optimizing it. Each query also reports the generated classes
 Janino compiled in each timed run (`compiles`): a warm plan compiles
-none.
+none; and the hypervisor steal over its timed runs (`steal_ppm`, as in
+bench.py's record).
 
 Usage: python scripts/microbench.py query [query ...]
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_REPEATS (default 3).
@@ -19,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from bench import build_spark, warm_up  # noqa: E402
+from bench import _cpu_ticks, _ppm, build_spark, warm_up  # noqa: E402
 from nspc_etl_basic_spark.materialize import scope  # noqa: E402
 from nspc_etl_basic_spark.session import codegen_compiles  # noqa: E402
 
@@ -37,6 +38,7 @@ def main() -> None:
     for name in names:
         spark.sparkContext.setJobDescription(f"microbench:{name}")
         best, runs, compiles = float("inf"), [], []
+        t0_ticks = _cpu_ticks()
         try:
             with scope():
                 for _ in range(max(1, repeats)):
@@ -47,7 +49,11 @@ def main() -> None:
                     runs.append(round(dt, 3))
                     compiles.append(codegen_compiles(spark)[0] - c0)
                     best = min(best, dt)
-            out[name] = {"best": round(best, 3), "runs": runs, "compiles": compiles}
+            t1_ticks = _cpu_ticks()
+            out[name] = {
+                "best": round(best, 3), "runs": runs, "compiles": compiles,
+                "steal_ppm": _ppm(t1_ticks[0] - t0_ticks[0], t1_ticks[2] - t0_ticks[2]),
+            }
         except Exception as exc:  # noqa: BLE001
             out[name] = {"err": f"{type(exc).__name__}: {exc}"[:300]}
     print(json.dumps(out, indent=1))

@@ -65,6 +65,7 @@ SLOW_TESTS = {
     "test_incremental_components_matches_batch_rebuild",
     "test_incremental_components_empty_batch_and_reingest",
     "test_neardup_components_star_graph_hot_path",
+    "test_shingle_array_matches_per_position_reference_randomized",
     # structured-streaming restart/exactly-once chains (each builds
     # checkpoint dirs and replays; the core merge test stays default)
     "test_stream_stream_attribution_join_matches_batch",

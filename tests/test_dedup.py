@@ -4,12 +4,16 @@ these cover the knobs the oracle can't see)."""
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import functions as F
 
+from nspc_etl_basic_spark.operators import dedup
 from nspc_etl_basic_spark.operators.dedup import (
     exact_dedup,
     lsh_candidate_pairs,
     minhash_signatures,
+    shingle_array,
 )
 
 
@@ -325,6 +329,76 @@ def test_minhash_xxhash64_tier(spark):
 
     with _pt.raises(ValueError):
         minhash_signatures(df, hash_fn="sha1")
+
+
+def _per_position_shingles(text, k):
+    """The formulation ``shingle_array`` replaced, kept as its reference:
+    shingle i is ``substring(text, i, k)`` over ``sequence(1, L-k+1)``,
+    an O(L²) walk per document."""
+    return F.transform(
+        F.sequence(F.lit(1), F.greatest(F.length(text) - (k - 1), F.lit(1))),
+        lambda i: F.substring(text, i, k),
+    )
+
+
+SHINGLE_KS = (1, 5, 8, 12)
+# one code point each: ASCII, a Latin accent, CJK, emoji outside the BMP
+# (a surrogate pair in a Java string) and whitespace; the random texts
+# also draw the two-code-point "\r\n"
+_CODE_POINTS = [*"abcxyz ", "é", "中", "文", "😀", "🎉", "\t", "\n"]
+
+
+def _assert_shingles_match_reference(spark, monkeypatch, seed):
+    rng = random.Random(seed)
+    texts = [None, ""]
+    for k in SHINGLE_KS:
+        texts += ["".join(rng.choices(_CODE_POINTS, k=n)) for n in (k - 1, k, k + 1)]
+    texts += [
+        "".join(rng.choices(_CODE_POINTS + ["\r\n"], k=rng.randint(0, 40)))
+        for _ in range(150)
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+    def rows(frame):
+        return {r[0]: tuple(r[1:]) for r in frame.collect()}
+
+    for k in SHINGLE_KS:
+        got = rows(df.select("doc_id", shingle_array(F.col("text"), k)))
+        ref = rows(df.select("doc_id", _per_position_shingles(F.col("text"), k)))
+        assert got == ref, k
+        sigs = {
+            h: rows(minhash_signatures(df, k=k, hash_fn=h))
+            for h in ("md5", "xxhash64")
+        }
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "shingle_array", _per_position_shingles)
+            for h, got_sigs in sigs.items():
+                assert got_sigs == rows(minhash_signatures(df, k=k, hash_fn=h)), (k, h)
+
+
+def test_shingle_array_matches_per_position_reference_one_seed(spark, monkeypatch):
+    # default-tier representative of the randomized suite below
+    _assert_shingles_match_reference(spark, monkeypatch, 1515)
+
+
+def test_shingle_array_matches_per_position_reference_randomized(spark, monkeypatch):
+    for seed in (1616, 1717, 1818):
+        _assert_shingles_match_reference(spark, monkeypatch, seed)
+
+
+def test_shingle_array_builds_no_lambda(spark):
+    """The kernel stays one linear scan: a higher-order function's lambda
+    runs interpreted, and the per-position ``substring`` one re-walked
+    the document for every shingle."""
+    df = spark.createDataFrame([("abc",)], "text string")
+
+    def analyzed(col):
+        return df.select(col)._jdf.queryExecution().analyzed().toString()
+
+    ref = analyzed(_per_position_shingles(F.col("text"), 8))
+    assert "lambdafunction" in ref and "transform(" in ref
+    plan = analyzed(shingle_array(F.col("text"), 8))
+    assert "lambdafunction" not in plan and "transform(" not in plan, plan
 
 
 def test_incremental_components_matches_batch_rebuild(spark):
